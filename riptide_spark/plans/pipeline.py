@@ -9,7 +9,9 @@ per SURVEY.md §3.1:
               → bucketed-hash + salted shuffle   # north-rule partitioning
               → Arrow extraction UDF             # E1-E15 (+ escalation, PDF)
               → append output table + manifest   # cache store / S5-S6
+                (row count observed in the write)
               → per-partition metrics sidecar    # A1-A2
+                (reads back only this run's files)
 
 Plan properties worth knowing at 100 TB:
 * the anti-join projects a single string column from the output table —
@@ -168,11 +170,16 @@ def run_extraction_job(
 
     Single-pass design: the UDF output streams straight into the table
     append (no intermediate cache/checkpoint — one materialization of the
-    expensive stage). The metrics sidecar and the row count are derived by
-    *reading back* the just-written table filtered on the ``run_id``
-    lineage column — a column-pruned scan of five small columns, immune to
-    the cached-plan invalidation that a resume anti-join would otherwise
-    suffer when its source table is appended to."""
+    expensive stage). The append observes its own row count
+    (``DataFrame.observe``), which the manifest commits once and the run
+    returns. The metrics sidecar reads back only the files this run's
+    manifest lists, with the written frame's schema — a column-pruned scan
+    of five small columns that neither infers a schema nor lists the rest
+    of the table, so its cost does not grow with the table, and that is
+    immune to the cached-plan invalidation a resume anti-join would
+    otherwise suffer when its source table is appended to. A run is thus
+    two SQL executions, the table write and the sidecar write, plus the
+    done-side count when the manifest ledger is incomplete."""
     run_id = run_id or uuid.uuid4().hex[:12]
     output = TableIO(spark, config.output_path)
 
@@ -187,10 +194,11 @@ def run_extraction_job(
     # files the anti-join still honors but the ledger cannot see, so in
     # that case fall back to counting the done side instead: a url-only
     # column-pruned scan of the OUTPUT table, still never a pass over the
-    # input.
+    # input. The done side is read with a url-only schema, so no
+    # schema-inference job runs.
     skipped = 0
     if config.resume and output.exists():
-        done = output.read().select("url")
+        done = output.read(schema="url string").select("url")
         if output.ledger_complete():
             skipped = sum(m.rows for m in output.manifests() if m.committed)
         else:
@@ -198,23 +206,18 @@ def run_extraction_job(
         pages = resume_anti_join(pages, done)
 
     result = extraction_plan(pages, config).withColumn("run_id", F.lit(run_id))
+    result = result.select(*OUTPUT_COLUMNS, "run_id", "url_bucket")
 
     partition_cols = ["url_bucket"] if config.write_partitioned_by_bucket else None
-    output.append(
-        result.select(*OUTPUT_COLUMNS, "run_id", "url_bucket"),
-        run_id=run_id,
-        partition_by=partition_cols,
-    )
+    manifest = output.append(result, run_id=run_id, partition_by=partition_cols)
 
-    written = output.read().filter(F.col("run_id") == run_id)
-    rows = written.count()
-    # Record the true count in the manifest ledger — the next resumed run
-    # derives its skipped-row stat from these instead of re-counting input.
-    output.amend_manifest(run_id, rows=rows)
     if config.metrics_path:
+        written = output.read(schema=result.schema, files=manifest.files)
         metrics = partition_metrics(written, run_id)
         TableIO(spark, config.metrics_path).append(metrics, run_id=run_id)
 
     # Every surviving input row lands in the output (errors become error
-    # rows, never drops), so the manifest-derived count needs no adjustment.
-    return RunResult(run_id=run_id, rows_written=rows, rows_skipped_resume=skipped)
+    # rows, never drops), so the observed count is the rows written.
+    return RunResult(
+        run_id=run_id, rows_written=manifest.rows, rows_skipped_resume=skipped
+    )

@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .operators.partitioning import DEFAULT_BUCKETS
+
 # Arrow batch sizing for the extraction UDF: bigger batches amortize the
 # JVM↔Python transfer of the html binary column (measured: the transfer, not
 # the Python parse, dominates at small batches). 1024 rows ≈ 5-75 MB at
@@ -61,6 +63,14 @@ def build_session(
         # matching Rust String::from_utf8_lossy (pipeline.rs:332). Without
         # this Spark 4's decode() raises MALFORMED_CHARACTER_CODING.
         .config("spark.sql.legacy.codingErrorAction", "true")
+        # Spark lists more than `threshold` directories in a Spark job (32 by
+        # default), so every read of a table written in DEFAULT_BUCKETS url
+        # buckets would start a job to list them. Up to that many are
+        # listed on the driver; wider fan-outs keep parallel listing.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(DEFAULT_BUCKETS),
+        )
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -7,8 +7,12 @@ module provides the same *semantics* behind a two-line abstraction:
 * a table is a directory of parquet files plus ``_manifests/run-*.json``
   checkpoint manifests (run id, row count, files written, completion flag);
 * ``append`` = parquet append + a manifest committed **after** the data (the
-  manifest is the commit marker, like an Iceberg snapshot);
-* ``read`` = read the parquet dir;
+  manifest is the commit marker, like an Iceberg snapshot). The manifest's
+  row count is observed in the write job itself (``DataFrame.observe``), so
+  it is committed once, with the true count, and nothing re-scans the data;
+* ``read`` = read the parquet dir, optionally with a known schema (no
+  schema-inference job) and restricted to a manifest's files (a run-scoped
+  read whose cost does not grow with the table);
 * resume = anti-join against the table's committed urls (the result cache
   J1/S2 of SURVEY.md — the output table *is* the cache).
 
@@ -19,12 +23,16 @@ this interface.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -58,6 +66,7 @@ class TableIO:
         orphaned rows (they are valid extractions), otherwise the rerun
         would duplicate them. Manifests are lineage, not the liveness
         signal."""
+        self._recover_compaction()
         if not os.path.isdir(self.data_path):
             return False
         try:
@@ -104,12 +113,14 @@ class TableIO:
     def ledger_complete(self) -> bool:
         """True iff the committed manifests' file ledger EQUALS the set of
         data files on disk AND every committed manifest has a known row
-        count. Disk ⊆ ledger rules out orphan files from a crash between a
-        data write and its manifest commit; ledger ⊆ disk rules out the
-        converse hole — a recorded file vacuumed/compacted/deleted after
-        commit, which would leave ``sum(m.rows)`` over-counting the done
-        side while the fast path still trusted it. Only under set equality
-        is the ledger a faithful row accounting of the table."""
+        count (``rows < 0`` marks an unknown count in manifests written
+        before counts were observed at write time). Disk ⊆ ledger rules out
+        orphan files from a crash between a data write and its manifest
+        commit; ledger ⊆ disk rules out the converse hole — a recorded file
+        vacuumed/compacted/deleted after commit, which would leave
+        ``sum(m.rows)`` over-counting the done side while the fast path
+        still trusted it. Only under set equality is the ledger a faithful
+        row accounting of the table."""
         manifests = [m for m in self.manifests() if m.committed]
         if not manifests:
             return False
@@ -119,43 +130,49 @@ class TableIO:
         return ledger == set(self.data_files())
 
     # -- IO ---------------------------------------------------------------
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_path)
+    def read(
+        self,
+        schema: StructType | str | None = None,
+        files: list[str] | None = None,
+    ) -> DataFrame:
+        """The table as a DataFrame.
+
+        ``schema`` skips Spark's schema-inference job (one Spark job that
+        opens a file footer); partition columns it leaves out are still
+        discovered from the directory names, on the driver. ``files``
+        restricts the scan to those data files (paths relative to the data
+        dir, e.g. one manifest's ledger), keeping their Hive partition
+        columns through ``basePath``; an empty list is an empty frame of
+        ``schema``, which it then requires."""
+        self._recover_compaction()
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        if files is None:
+            return reader.parquet(self.data_path)
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        return reader.option("basePath", self.data_path).parquet(
+            *(os.path.join(self.data_path, f) for f in files)
+        )
 
     def append(
         self,
         df: DataFrame,
         run_id: str | None = None,
         partition_by: list[str] | None = None,
-        rows: int = -1,
     ) -> Manifest:
         """Write data, then commit the manifest (write-then-commit ordering:
         a crash between the two leaves an uncommitted snapshot that the next
         run's anti-join silently resolves — the urls are present, so they are
-        skipped; no duplicates, no loss). ``rows`` is lineage metadata the
-        caller passes when it already knows the count (avoid a re-scan)."""
+        skipped; no duplicates, no loss). The manifest's row count is
+        observed in the write job, so the manifest is committed exactly once
+        and never holds an unknown count."""
         run_id = run_id or uuid.uuid4().hex[:12]
         before = set(self.data_files()) if os.path.isdir(self.data_path) else set()
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.data_path)
+        rows = _write_counted(df, self.data_path, "append", partition_by)
         written = [f for f in self.data_files() if f not in before]
         manifest = Manifest(run_id=run_id, rows=rows, committed=True, files=written)
-        return self._write_manifest(manifest)
-
-    def amend_manifest(self, run_id: str, rows: int) -> Manifest:
-        """Atomically enrich a committed manifest with the true row count
-        (the count is only known after the post-write read-back; a crash
-        between commit and amendment leaves ``rows=-1``, which consumers
-        must treat as unknown, not negative). The file ledger from the
-        original commit is preserved."""
-        files = None
-        for m in self.manifests():
-            if m.run_id == run_id:
-                files = m.files
-                break
-        manifest = Manifest(run_id=run_id, rows=rows, committed=True, files=files)
         return self._write_manifest(manifest)
 
     def compact(
@@ -174,20 +191,20 @@ class TableIO:
         Ordering (every crash window degrades to the slow path, never to
         wrong data):
 
-        1. write the compacted copy to a scratch dir, count it (the exact
-           row total the superseding manifest needs);
+        1. write the compacted copy to a scratch dir, counting its rows in
+           the same write (the exact total the superseding manifest needs);
         2. swap the data dir (rename old away, rename scratch in, drop old);
         3. commit ONE superseding manifest owning every surviving file;
         4. remove the superseded run manifests.
 
-        A crash before step 2 leaves the table untouched; between 2 and 4
-        the ledger ≠ disk so ``ledger_complete()`` is False and resume
+        A crash before step 2 leaves the table untouched; a crash between
+        the two renames of step 2 is rolled back by the next ``exists()`` or
+        ``read()`` (see ``_recover_compaction``); between 2 and 4 the
+        ledger ≠ disk so ``ledger_complete()`` is False and resume
         falls back to counting the done side — exact, just slower. Only
         after step 4 does the fast path re-engage. On a real cluster this
         whole method is Iceberg's atomic ``rewrite_data_files`` +
         ``rewrite_manifests`` snapshot commit."""
-        import shutil
-
         if not self.exists():
             raise ValueError(f"nothing to compact at {self.data_path}")
         if partition_by is None:
@@ -205,15 +222,10 @@ class TableIO:
         scratch = self.data_path + f".compact-{uuid.uuid4().hex[:8]}"
         if partition_by:
             # One task per partition value → one compacted file per value.
-            writer = (
-                df.repartition(*partition_by)
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
-            )
+            df = df.repartition(*partition_by)
         else:
-            writer = df.coalesce(max(target_partitions, 1)).write.mode("overwrite")
-        writer.parquet(scratch)
-        rows = self.spark.read.parquet(scratch).count()
+            df = df.coalesce(max(target_partitions, 1))
+        rows = _write_counted(df, scratch, "overwrite", partition_by)
 
         old = self.data_path + f".pre-compact-{uuid.uuid4().hex[:8]}"
         os.rename(self.data_path, old)
@@ -238,6 +250,22 @@ class TableIO:
                 os.remove(os.path.join(self.manifest_dir, name))
         return manifest
 
+    def _recover_compaction(self) -> None:
+        """Roll back a ``compact`` that crashed between its two renames.
+        The data dir is then missing and the old copy sits under its
+        ``.pre-compact-*`` name; the manifests still describe that copy, so
+        renaming it back restores the table and its ledger exactly. The
+        compacted scratch copy is dropped."""
+        if os.path.isdir(self.data_path):
+            return
+        stem = glob.escape(self.data_path)
+        old = glob.glob(stem + ".pre-compact-*")
+        if not old:
+            return
+        os.rename(old[0], self.data_path)
+        for scratch in glob.glob(stem + ".compact-*"):
+            shutil.rmtree(scratch)
+
     def _write_manifest(self, manifest: Manifest) -> Manifest:
         os.makedirs(self.manifest_dir, exist_ok=True)
         tmp = os.path.join(self.manifest_dir, f".run-{manifest.run_id}.json.tmp")
@@ -246,3 +274,16 @@ class TableIO:
             fh.write(manifest.to_json())
         os.replace(tmp, final)  # atomic commit marker
         return manifest
+
+
+def _write_counted(
+    df: DataFrame, path: str, mode: str, partition_by: list[str] | None
+) -> int:
+    """Write ``df`` as parquet and return its row count, observed by the
+    write job itself rather than by a second scan of what it wrote."""
+    observation = Observation()
+    writer = df.observe(observation, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return observation.get["rows"]

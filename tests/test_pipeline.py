@@ -505,3 +505,139 @@ def test_compaction_crash_window_degrades_to_slow_path(spark, tmp_path):
     healed = run_extraction_job(spark, _pages_df(spark, n=50), cfg)
     assert healed.rows_skipped_resume == 50 and healed.rows_written == 0
     assert manifest.rows == 50
+
+
+def test_every_manifest_commits_once_with_its_true_row_count(spark, tmp_path, monkeypatch):
+    """Row counts are observed in the write itself, so every append commits
+    exactly one manifest, and at that commit it already holds the rows its
+    files contain: output table and metrics sidecar alike, including a
+    resumed run that writes nothing. No manifest holds the unknown -1."""
+    commits = []
+    commit = TableIO._write_manifest
+
+    def recording(self, manifest):
+        commits.append((self.path, manifest))
+        return commit(self, manifest)
+
+    monkeypatch.setattr(TableIO, "_write_manifest", recording)
+    cfg = ExtractionJobConfig(
+        output_path=str(tmp_path / "out"),
+        metrics_path=str(tmp_path / "metrics"),
+        resume=True,
+    )
+    runs = [run_extraction_job(spark, _pages_df(spark, n=n), cfg) for n in (30, 50, 50)]
+    assert [r.rows_written for r in runs] == [30, 20, 0]
+
+    for path in (cfg.output_path, cfg.metrics_path):
+        committed = [m for p, m in commits if p == path]
+        assert [m.run_id for m in committed] == [r.run_id for r in runs]
+        io = TableIO(spark, path)
+        assert io.manifests() == sorted(committed, key=lambda m: m.run_id)
+        schema = io.read().schema
+        for m in committed:
+            assert m.committed and m.rows >= 0
+            assert m.rows == io.read(schema=schema, files=m.files).count()
+    out_rows = [m.rows for p, m in commits if p == cfg.output_path]
+    assert out_rows == [r.rows_written for r in runs]
+
+
+def test_sidecar_reads_back_only_its_runs_files(spark, tmp_path, monkeypatch):
+    """The metrics sidecar scans exactly the files its run's manifest lists,
+    never the rest of the table, so its cost does not grow with the
+    number of runs before it."""
+    from urllib.parse import urlparse
+
+    from riptide_spark.plans import pipeline
+
+    read_back = []
+    metrics_of = pipeline.partition_metrics
+
+    def capture(written, run_id):
+        read_back.append(written)
+        return metrics_of(written, run_id)
+
+    monkeypatch.setattr(pipeline, "partition_metrics", capture)
+    cfg = ExtractionJobConfig(
+        output_path=str(tmp_path / "out"),
+        metrics_path=str(tmp_path / "metrics"),
+        resume=True,
+    )
+    runs = [run_extraction_job(spark, _pages_df(spark, n=n), cfg) for n in (30, 50)]
+
+    io = TableIO(spark, cfg.output_path)
+    ledger = {m.run_id: m.files for m in io.manifests()}
+    assert len(read_back) == len(runs)
+    for written, run in zip(read_back, runs):
+        files = {urlparse(u).path for u in written.inputFiles()}
+        assert files == {os.path.join(io.data_path, f) for f in ledger[run.run_id]}
+
+
+def test_table_read_starts_no_spark_job(spark, tmp_path):
+    """A read of a table written in DEFAULT_BUCKETS url buckets, with a
+    known schema, lists the bucket directories on the driver (the session
+    pins Spark's parallel-listing threshold to DEFAULT_BUCKETS) and infers
+    no schema, so it starts no Spark job: neither the whole-table read of
+    the resume anti-join nor the run-scoped read of the sidecar."""
+    import uuid
+
+    from riptide_spark.operators.partitioning import DEFAULT_BUCKETS
+
+    io = TableIO(spark, str(tmp_path / "t"))
+    frame = spark.range(10 * DEFAULT_BUCKETS).select(
+        F.col("id").cast("string").alias("url"),
+        (F.col("id") % DEFAULT_BUCKETS).cast("int").alias("url_bucket"),
+    )
+    # One file per bucket, as an extraction run writes them.
+    manifest = io.append(frame.repartition("url_bucket"), partition_by=["url_bucket"])
+    assert len({os.path.dirname(f) for f in manifest.files}) == DEFAULT_BUCKETS
+    assert len(manifest.files) == DEFAULT_BUCKETS
+
+    sc = spark.sparkContext
+    group = f"table-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "TableIO.read")
+    try:
+        whole = io.read(schema="url string")
+        scoped = io.read(schema=frame.schema, files=manifest.files)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert whole.count() == scoped.count() == 10 * DEFAULT_BUCKETS
+
+
+def test_compaction_crash_between_renames_recovers(spark, tmp_path, monkeypatch):
+    """ADVICE r5 #1: a crash after compact() renamed the data dir away but
+    before it renamed the compacted copy in leaves no data dir. The next
+    read()/exists() must roll the old copy back (its manifests still
+    describe it), so the ledger fast path holds and nothing is
+    re-extracted."""
+    import glob
+
+    from riptide_spark.sources import catalog
+
+    cfg = ExtractionJobConfig(output_path=str(tmp_path / "out"), resume=True)
+    for n in (30, 50):
+        run_extraction_job(spark, _pages_df(spark, n=n), cfg)
+    io = TableIO(spark, cfg.output_path)
+
+    renames = []
+    rename = os.rename
+
+    def crash_on_second(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("simulated crash between the renames")
+        rename(src, dst)
+
+    with monkeypatch.context() as patch:
+        patch.setattr(catalog.os, "rename", crash_on_second)
+        with pytest.raises(OSError, match="simulated crash"):
+            io.compact()
+    assert not os.path.isdir(io.data_path)
+
+    assert io.read().count() == 50
+    assert not glob.glob(glob.escape(io.data_path) + ".*")
+    assert io.exists() and io.ledger_complete()
+    rerun = run_extraction_job(spark, _pages_df(spark, n=50), cfg)
+    assert rerun.rows_skipped_resume == 50
+    assert rerun.rows_written == 0
+    assert io.read().count() == 50
