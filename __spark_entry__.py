@@ -590,13 +590,38 @@ def _index_path(kind: str, sf_dir: str) -> str:
     place instead of leaking a fresh mkdtemp copy of the embeddings table
     per call. The PID component keeps two concurrent runs (e.g. bench +
     a correctness pass on the same sf) from racing on overwrite-vs-scan
-    of a half-rewritten partition layout (ADVICE r4 #2)."""
+    of a half-rewritten partition layout (ADVICE r4 #2). Copies left by
+    processes that have exited are pruned first, so they do not pile up
+    across runs (ADVICE r5 #3)."""
     import tempfile
 
+    root = tempfile.gettempdir()
+    _prune_dead_index_dirs(root)
     tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    return os.path.join(
-        tempfile.gettempdir(), f"riptide_{kind}_index_{tag}_p{os.getpid()}", "idx"
-    )
+    return os.path.join(root, f"riptide_{kind}_index_{tag}_p{os.getpid()}", "idx")
+
+
+def _prune_dead_index_dirs(root: str) -> None:
+    """Remove the ``riptide_*_index_*_p<pid>`` directories under ``root``
+    whose process no longer exists."""
+    import glob
+    import re
+    import shutil
+
+    for path in glob.glob(os.path.join(root, "riptide_*_index_*_p*")):
+        match = re.search(r"_p(\d+)$", path)
+        if match and not _pid_alive(int(match.group(1))):
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
 
 
 def _query_vec(emb: DataFrame, query_id: int = 0):

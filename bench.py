@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Benchmark harness (driver contract: one JSON line on stdout).
 
-Measures the headline workload — the full extraction pipeline (gate routing +
-Arrow-vectorized extraction + bucketed salted write) over a deterministic
+Measures the headline workload — the full extraction pipeline (Arrow-vectorized
+routing + extraction + bucketed salted write) over a deterministic
 synthetic page corpus sized by SF — plus representative operator queries over
 the driver testdata at ``$SPARK_GRAFT_SF_DIR``.
 
@@ -16,8 +16,8 @@ Modes:
                                    # at sf0.1 (100k docs) AND sf1 (1M docs):
                                    # wall growth per query + plan gates
                                    # re-asserted at sf1 (VERDICT r2 #1).
-                                   # Results recorded in BENCH_scale_r03.json
-                                   # and attached to the default run's JSON.
+                                   # Results recorded in BENCH_scale_r04.json;
+                                   # only this mode reports them.
 
 Everything diagnostic goes to stderr; stdout carries exactly one JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
@@ -118,7 +118,7 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
     pages_path = ensure_corpus(spark, n_pages)
     pages = spark.read.parquet(pages_path)
 
-    # Headline: full extraction job (gate → route → extract → bucketed write).
+    # Headline: full extraction job (route + extract in one UDF → bucketed write).
     from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job
 
     # Warm-up: spin up Python workers + codegen once (the analog of the
@@ -162,7 +162,7 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
 
     total = round(sum(timings.values()), 3)
     spark.stop()
-    payload = {
+    return {
         "metric": "extraction+operator suite wall time",
         "value": total,
         "unit": "sec",
@@ -173,38 +173,12 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
         "extract_sec": round(extract_sec, 3),
         "docs_per_sec": round(docs_per_sec, 1),
     }
-    # Attach a COMPACT digest of the recorded sf0.1→sf1 scale-dial evidence
-    # (a separate long run, `python bench.py --scale-dial`, committed to the
-    # repo). Digest only — growth ratios + best wall seconds — NEVER the raw
-    # `runs` array: round 3 embedded the full record and blew past the
-    # driver's stdout tail window, leaving BENCH_r03.json unparseable
-    # (VERDICT r3 "What's wrong" #1). The full record stays on disk in
-    # SCALE_DIAL_RECORD for the judge.
-    record = _load_scale_dial_record()
-    if record is not None:
-        payload["scale_dial"] = {
-            k: record.get(k)
-            for k in ("metric", "value", "unit", "cpus", "growth", "best_wall_sec", "plan_gates", "docs")
-            if k in record
-        }
-    return payload
 
 
 SCALE_DIAL_RECORD = os.path.join(REPO, "BENCH_scale_r04.json")
 # Prior rounds' records seed the best-of-N per-cell minimums (same host,
 # same corpus construction) — merged only where cpus + docs match.
 SCALE_DIAL_PRIOR = (os.path.join(REPO, "BENCH_scale_r03.json"),)
-
-
-def _load_scale_dial_record() -> dict | None:
-    for path in (SCALE_DIAL_RECORD,) + SCALE_DIAL_PRIOR:
-        if os.path.exists(path):
-            try:
-                with open(path) as fh:
-                    return json.load(fh)
-            except (OSError, json.JSONDecodeError):
-                continue
-    return None
 
 
 def _assert_plan_gates(dfs) -> str:

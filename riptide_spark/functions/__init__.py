@@ -1,2 +1,2 @@
 """Pure-Python per-document functions (no Spark imports): the extraction
-core, gate oracle, chunker, language ID, and text statistics."""
+core, adaptive-routing gate, chunker, language ID, and text statistics."""

@@ -9,6 +9,13 @@ single scalar pandas UDF over Arrow batches: the per-document loop lives
 call per document — but the batch crosses the JVM↔Python boundary once per
 ``maxRecordsPerBatch`` rows instead of once per row.
 
+Routing happens in the same pass: a row whose mode is null is decoded once,
+routed by the adaptive gate (``functions/gate.py``) and extracted with the
+mode :data:`MODE_FOR_ROUTE` maps its route to; the route comes back as the
+``content_mode`` field. A non-null mode forces that mode and is reported as
+given (the pipeline forces ``'oversize'`` for blanked oversized rows; tests
+and the golden-fixture query force explicit modes).
+
 Error isolation: a bad row never kills the task (at 10^12 documents, row
 failures are certain) — failures land in the ``error`` column with null
 fields, mirroring the reference's per-URL error envelope
@@ -29,10 +36,21 @@ from pyspark.sql import functions as F
 
 from ..functions import chunking
 from ..functions.extract import ExtractionInvalid, extract_document
+from ..functions.gate import route
 from ..functions.native_extract import extract_native
+from ..functions.pdftext import parse_pdf
 from ..schema import EXTRACTED_STRUCT
 
-from ..functions.pdftext import parse_pdf
+# Gate route → extraction mode. raw → fast article path; probes_first →
+# probe-then-escalate (row-local, see _extract_text); headless → the native
+# DOM-heuristic path (the analog of extracting from a rendered DOM, with the
+# reference's quality-gated fallback ladder); pdf → pdf.
+MODE_FOR_ROUTE = {
+    "raw": "article",
+    "probes_first": "probes_first",
+    "headless": "dom",
+    "pdf": "pdf",
+}
 
 _EMPTY = {
     "title": None,
@@ -178,7 +196,15 @@ def _extract_one(html, url: str, mode: str) -> dict:
         except Exception as exc:
             return {**_EMPTY, "error": f"internal: {type(exc).__name__}: {exc}"}
         return _pdf_row(url, raw)
-    text = _decode_lossy(html)
+    return _extract_text(_decode_lossy(html), url, mode)
+
+
+def _extract_text(text: str, url: str, mode: str) -> dict:
+    """Every non-PDF mode, over the lossy-decoded page."""
+    if mode == "oversize":
+        # Blanked by the pipeline's 20 MB guard, which writes the message
+        # with the true size (common_validation.rs:81-85).
+        return {**_EMPTY, "error": "invalid-html: Content size exceeds maximum"}
     if mode == "skip":
         # P10 skip_extraction passthrough (pipeline.rs:382-404): raw page
         # text as-is, no parsing, no enrichment.
@@ -244,37 +270,41 @@ def _extract_one(html, url: str, mode: str) -> dict:
 
 @F.pandas_udf(EXTRACTED_STRUCT)
 def extract_udf(html: pd.Series, url: pd.Series, mode: pd.Series) -> pd.DataFrame:
-    """Vectorized extract(html, url, mode) over one Arrow batch.
+    """Vectorized route-and-extract over one Arrow batch.
 
-    ``mode`` is per-row: the gate's routing decision selects the extraction
-    flavor ('article' fast path, 'full' DOM-heuristic path for headless-routed
-    documents, 'metadata', 'pdf').
+    ``mode`` is per-row: null routes the row through the gate and extracts
+    with :data:`MODE_FOR_ROUTE` of its route; any other value ('article',
+    'dom', 'probes_first', 'metadata', 'full', 'pdf', 'skip', 'oversize')
+    forces that mode. ``content_mode`` is the route, or the forced mode.
     """
     rows = []
     for h, u, m in zip(html, url, mode):
+        if m is None:
+            text = _decode_lossy(h)
+            content_mode = route(text, u or "")
+            m = MODE_FOR_ROUTE[content_mode]
+        else:
+            text, content_mode = None, m
         started = time.perf_counter()
-        row = _extract_one(h, u, m)
-        # Per-document phase timing (A2 metrics; ExtractionStats analog of
-        # wit extract-with-stats).
+        if text is None or m == "pdf":
+            row = _extract_one(h, u, m)
+        else:
+            row = _extract_text(text, u, m)
+        # Per-document extraction time, routing excluded (A2 metrics;
+        # ExtractionStats analog of wit extract-with-stats).
         row["extract_ms"] = round((time.perf_counter() - started) * 1000.0, 3)
+        row["content_mode"] = content_mode
         rows.append(row)
     return pd.DataFrame(rows, columns=list(EXTRACTED_STRUCT.fieldNames()))
 
 
 def extraction_mode_for_route(content_mode: Column) -> Column:
-    """Map the gate decision to the extraction flavor.
-
-    raw → fast article path; probes_first → probe-then-escalate (handled
-    row-locally inside the UDF); headless → the native DOM-heuristic path
-    (the analog of extracting from a rendered DOM, with the reference's
-    quality-gated fallback ladder); pdf → pdf.
-    """
-    return (
-        F.when(content_mode == "pdf", F.lit("pdf"))
-        .when(content_mode == "headless", F.lit("dom"))
-        .when(content_mode == "probes_first", F.lit("probes_first"))
-        .otherwise(F.lit("article"))
-    )
+    """:data:`MODE_FOR_ROUTE` as a column expression; any other value
+    (e.g. 'oversize') maps to 'article'."""
+    mode = F.lit("article")
+    for route_name, extraction_mode in MODE_FOR_ROUTE.items():
+        mode = F.when(content_mode == route_name, F.lit(extraction_mode)).otherwise(mode)
+    return mode
 
 
 def escalation_predicate(quality: Column, words: Column) -> Column:

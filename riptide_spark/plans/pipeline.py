@@ -5,9 +5,10 @@ orchestration (``/root/reference/crates/riptide-api/src/pipeline.rs:231-606``),
 per SURVEY.md §3.1:
 
     read pages → anti-join(done urls)            # Redis result cache → J1
-              → gate feature/score/route columns # P5-P8, pure codegen
+              → 20 MB guard (blanks oversize)    # P3
               → bucketed-hash + salted shuffle   # north-rule partitioning
-              → Arrow extraction UDF             # E1-E15 (+ escalation, PDF)
+              → Arrow route + extraction UDF     # P5-P8 gate, E1-E15
+                                                 # (+ escalation, PDF)
               → append output table + manifest   # cache store / S5-S6
                 (row count observed in the write)
               → per-partition metrics sidecar    # A1-A2
@@ -16,9 +17,11 @@ per SURVEY.md §3.1:
 Plan properties worth knowing at 100 TB:
 * the anti-join projects a single string column from the output table —
   broadcast when small, AQE-planned SMJ when not; skew handled by AQE.
-* gate + routing are whole-stage-codegen expressions; the only Python is the
-  extraction UDF itself, which receives exactly (url, html, mode) after
-  column pruning.
+* the only Python is the extraction UDF, which receives exactly
+  (url, html, mode) after column pruning. It routes each page with the
+  gate (``functions/gate.py``) over the html it already decoded, so routing
+  adds no transfer and no JVM work; the stage before the shuffle is the
+  scan, the anti-join, the size guard and ``url_bucket``/``salt``.
 * probes-first escalation happens row-locally inside the UDF — no second
   shuffle (see extract_udf.py).
 * one wide shuffle total (the bucket/salt repartition before extraction);
@@ -33,8 +36,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract_udf import extract_udf, extraction_mode_for_route
-from ..operators.gate_cols import with_gate
+from ..operators.extract_udf import extract_udf
 from ..operators.metrics import partition_metrics
 from ..operators.partitioning import (
     DEFAULT_BUCKETS,
@@ -61,17 +63,20 @@ class ExtractionJobConfig:
 
 
 def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
-    """Build the (lazy) extraction DataFrame; no actions triggered."""
+    """Build the (lazy) extraction DataFrame; no actions triggered.
+
+    ``content_mode`` is ``'oversize'`` for rows over the 20 MB cap and the
+    gate's route, chosen inside the UDF, for every other row."""
     df = pages
 
     # P3 (20 MB cap): oversized rows become ERROR rows, not dropped rows —
     # a dropped row never lands in the output table, so resume would retry
     # it forever and the url would silently vanish from the corpus
     # (reference records a per-URL error envelope, pipeline.rs:525-557).
-    # Their html is blanked *before* gate/shuffle/Arrow so the 20 MB+
-    # payload never rides the wire or crosses into Python; the UDF sees
-    # mode='oversize' and emits the reference's InvalidHtml message with
-    # the original size (common_validation.rs:81-85).
+    # Their html is blanked *before* the shuffle so the 20 MB+ payload
+    # never rides the wire or crosses into Python; the UDF is forced to
+    # mode 'oversize' and the reference's InvalidHtml message is written
+    # below with the original size (common_validation.rs:81-85).
     df = df.withColumn("_oversize_bytes",
                        F.when(F.octet_length("html") > MAX_CONTENT_BYTES,
                               F.octet_length("html")))
@@ -81,28 +86,19 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
                F.lit(b"")).otherwise(F.col("html")),
     )
 
-    # Gate (pure codegen) and routing.
-    df = with_gate(df)
-    df = df.withColumn(
-        "content_mode",
-        F.when(F.col("_oversize_bytes").isNotNull(), F.lit("oversize"))
-        .otherwise(F.col("content_mode")),
-    )
-
     # Bucketed url-hash partitioning with hot-host salting; one wide shuffle.
     df = with_partitioning(df, buckets=config.buckets, salts=config.salts,
                            hot_hosts=config.hot_hosts)
     # Prune to exactly what the extraction stage needs BEFORE the shuffle:
-    # the raw `text`/`lang`/`warc_ts` columns and the ten gate feature
-    # columns would otherwise ride the wire for nothing (the text column
-    # alone duplicates the html payload).
-    df = df.select("url", "html", "content_mode", "url_bucket", "salt",
-                   "_oversize_bytes")
+    # the raw `text`/`lang`/`warc_ts` columns would otherwise ride the wire
+    # for nothing (the text column alone duplicates the html payload).
+    df = df.select("url", "html", "url_bucket", "salt", "_oversize_bytes")
     if config.target_partitions:
         df = repartition_for_extraction(df, config.target_partitions)
 
-    # The single Python hot path: Arrow-batched extraction.
-    mode = extraction_mode_for_route(F.col("content_mode"))
+    # The single Python hot path: Arrow-batched routing and extraction. A
+    # null mode lets the UDF route the row.
+    mode = F.when(F.col("_oversize_bytes").isNotNull(), F.lit("oversize"))
     df = df.withColumn("ex", extract_udf(F.col("html"), F.col("url"), mode))
 
     flat = df.select(
@@ -110,7 +106,7 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
         F.col("ex.extracted_text").alias("extracted_text"),
         F.col("ex.title").alias("title"),
         F.col("ex.spans").alias("spans"),
-        "content_mode",
+        F.col("ex.content_mode").alias("content_mode"),
         F.col("ex.byline").alias("byline"),
         F.col("ex.published_iso").alias("published_iso"),
         F.col("ex.language").alias("language"),
@@ -124,8 +120,8 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
         F.col("ex.description").alias("description"),
         F.col("ex.escalated").alias("escalated"),
         F.col("ex.extract_ms").alias("extract_ms"),
-        # Oversize rows ran the UDF on blanked html (→ generic invalid-html);
-        # restore the reference's exact message with the true size.
+        # The UDF saw only blanked html; write the reference's exact
+        # message with the true size.
         F.when(
             F.col("_oversize_bytes").isNotNull(),
             F.format_string(

@@ -35,7 +35,8 @@ SPAN_TYPE = T.StructType(
 )
 
 # Return struct of the extraction pandas UDF (the WASM `extract` contract —
-# wit/extractor.wit:18-49 — plus spans and an error column for row isolation).
+# wit/extractor.wit:18-49 — plus spans, the gate's route and an error column
+# for row isolation).
 EXTRACTED_STRUCT = T.StructType(
     [
         T.StructField("title", T.StringType(), True),
@@ -55,6 +56,7 @@ EXTRACTED_STRUCT = T.StructType(
         T.StructField("spans", T.ArrayType(SPAN_TYPE), True),
         T.StructField("escalated", T.BooleanType(), True),
         T.StructField("extract_ms", T.DoubleType(), True),
+        T.StructField("content_mode", T.StringType(), True),
         T.StructField("error", T.StringType(), True),
     ]
 )

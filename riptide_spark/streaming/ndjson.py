@@ -9,7 +9,7 @@ finishes, with heartbeat/progress events and a bounded backpressure buffer
 
 * ``readStream`` over the pages table (file source here; Kafka/Iceberg CDC
   on a cluster) with ``maxFilesPerTrigger`` as the backpressure valve;
-* the same gate + extraction plan as batch (one code path, two run modes);
+* the same route-and-extract UDF as batch (one code path, two run modes);
 * ``foreachBatch``: append the output table AND emit one NDJSON line per
   document (executor-side ``write.text`` per batch — one part-file per
   task, never a driver collect) — micro-batch latency stands in for TTFB
@@ -27,8 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract_udf import extract_udf, extraction_mode_for_route
-from ..operators.gate_cols import with_gate
+from ..operators.extract_udf import extract_udf
 from ..schema import PAGES_SCHEMA
 
 
@@ -42,18 +41,17 @@ class StreamConfig:
 
 
 def streaming_extraction_plan(pages: DataFrame) -> DataFrame:
-    """Identical logical plan to the batch path, minus the repartition
-    (micro-batches are already small; a shuffle per batch would only add
-    latency — the TTFB analog)."""
-    df = with_gate(pages)
-    df = df.select("url", "html", "content_mode")
-    mode = extraction_mode_for_route(F.col("content_mode"))
-    df = df.withColumn("ex", extract_udf(F.col("html"), F.col("url"), mode))
+    """The batch path's UDF stage, minus the repartition (micro-batches are
+    already small; a shuffle per batch would only add latency — the TTFB
+    analog). The UDF routes each page (null mode) and reports the route as
+    ``content_mode``."""
+    mode = F.lit(None).cast("string")
+    df = pages.withColumn("ex", extract_udf(F.col("html"), F.col("url"), mode))
     return df.select(
         "url",
         F.col("ex.title").alias("title"),
         F.col("ex.extracted_text").alias("extracted_text"),
-        "content_mode",
+        F.col("ex.content_mode").alias("content_mode"),
         F.col("ex.language").alias("language"),
         F.col("ex.quality_score").alias("quality_score"),
         F.col("ex.word_count").alias("word_count"),

@@ -7,6 +7,11 @@ feature-extraction checks against ``pipeline.rs:769-841`` semantics.
 
 from __future__ import annotations
 
+import unicodedata
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from riptide_spark.functions.gate import (
     GateFeatures,
     analyze_content,
@@ -17,6 +22,7 @@ from riptide_spark.functions.gate import (
     score,
     script_bytes_of,
 )
+from riptide_spark.sources.pages import synth_page
 
 
 def test_score_simple_article():
@@ -133,3 +139,37 @@ def test_visible_text_chars_excludes_control():
     f = analyze_content("ab\ncd\te", "https://example.com/")
     # \n and \t are Cc controls.
     assert f.visible_text_chars == 5
+
+
+_PIECES = st.one_of(
+    st.characters(max_codepoint=0xA0),  # ASCII, C0, DEL and C1 controls
+    st.characters(min_codepoint=0x10000),  # astral characters
+    st.characters(),
+    st.just("\r\n\r\n"),
+    # Invalid UTF-8 decodes to U+FFFD, as the extraction UDF decodes it.
+    st.binary(max_size=6).map(lambda b: b.decode("utf-8", "replace")),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(_PIECES, max_size=120).map("".join))
+def test_visible_text_chars_is_the_non_cc_count(html):
+    want = sum(1 for ch in html if unicodedata.category(ch) != "Cc")
+    assert analyze_content(html, "https://example.com/").visible_text_chars == want
+
+
+def test_route_pinned_on_invalid_utf8_and_pdf_rows():
+    # The rows of synth_page(i, 42), i < 400, whose html is invalid UTF-8.
+    pinned = {5: "raw", 23: "probes_first", 143: "probes_first", 224: "raw",
+              307: "raw", 361: "probes_first"}
+    pages = {i: synth_page(i, 42) for i in range(400)}
+    invalid = {i for i, p in pages.items() if b"\xff\xfe" in p["html"]}
+    assert invalid == set(pinned)
+    assert {i: route(pages[i]["text"], pages[i]["url"]) for i in invalid} == pinned
+
+    pdfs = [p for p in pages.values() if p["archetype"] == "pdf_doc"]
+    assert pdfs
+    for p in pdfs:
+        assert route(p["text"], p["url"]) == "pdf"
+        # Without the .pdf suffix the %PDF- content sniff alone routes it.
+        assert route(p["text"], p["url"][: -len(".pdf")]) == "pdf"

@@ -1,0 +1,81 @@
+"""The gate runs inside the extraction UDF: every row's ``content_mode`` is
+``functions.gate.route`` of its page, through the batch job and through the
+streaming plan, on a corpus that covers every archetype, the rows with
+invalid UTF-8 and one oversized row."""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import functions as F
+
+from riptide_spark.functions.gate import route
+from riptide_spark.plans.pipeline import (
+    MAX_CONTENT_BYTES,
+    ExtractionJobConfig,
+    run_extraction_job,
+)
+from riptide_spark.schema import PAGES_SCHEMA
+from riptide_spark.sources.catalog import TableIO
+from riptide_spark.sources.pages import ARCHETYPES, synth_pages
+from riptide_spark.streaming.ndjson import streaming_extraction_plan
+
+N = 160
+SEED = 42
+PAD = MAX_CONTENT_BYTES + 1
+
+
+def _invalid_utf8(page: dict) -> bool:
+    try:
+        page["html"].decode("utf-8")
+    except UnicodeDecodeError:
+        return True
+    return False
+
+
+@pytest.fixture(scope="module")
+def corpus():
+    pages = synth_pages(N, SEED)
+    assert {p["archetype"] for p in pages} == {name for name, _ in ARCHETYPES}
+    assert sum(_invalid_utf8(p) for p in pages) >= 2
+    oversize = dict(pages[0], url=pages[0]["url"] + "-oversize",
+                    html=pages[0]["html"] + b" " * PAD)
+    return pages, oversize
+
+
+def _frame(spark, pages, oversize):
+    df = spark.createDataFrame(
+        [(p["url"], p["warc_ts"], p["html"], p["text"], p["lang"]) for p in pages],
+        PAGES_SCHEMA,
+    )
+    big = df.filter(F.col("url") == pages[0]["url"]).select(
+        F.lit(oversize["url"]).alias("url"),
+        "warc_ts",
+        F.concat("html", F.lit(b" " * PAD)).alias("html"),
+        "text",
+        "lang",
+    )
+    return df.union(big)
+
+
+def _routes(pages) -> dict[str, str]:
+    return {p["url"]: route(p["html"].decode("utf-8", "replace"), p["url"]) for p in pages}
+
+
+def test_batch_job_content_mode_is_the_gate_route(spark, corpus, tmp_path):
+    pages, oversize = corpus
+    cfg = ExtractionJobConfig(output_path=str(tmp_path / "out"), resume=False,
+                              target_partitions=4)
+    run_extraction_job(spark, _frame(spark, pages, oversize), cfg)
+    got = dict(TableIO(spark, cfg.output_path).read().select("url", "content_mode").collect())
+    assert got.pop(oversize["url"]) == "oversize"
+    assert got == _routes(pages)
+
+
+def test_streaming_plan_content_mode_is_the_gate_route(spark, corpus):
+    # The streaming plan has no size guard: the oversized row is routed
+    # like any other (and becomes an invalid-html error row).
+    pages, oversize = corpus
+    out = streaming_extraction_plan(_frame(spark, pages, oversize))
+    got = {r["url"]: r for r in out.select("url", "content_mode", "error").collect()}
+    assert {u: r["content_mode"] for u, r in got.items()} == _routes(pages + [oversize])
+    assert "exceeds maximum" in got[oversize["url"]]["error"]

@@ -2,7 +2,7 @@
 
 Each test pins a plan property rather than a timing: filters reach the
 parquet scan (PushedFilters), projections prune the scan (ReadSchema),
-small dims broadcast, the gate stays inside whole-stage codegen, and the
+small dims broadcast, the gate runs inside the one Python stage, and the
 extraction stage reads only the columns it needs."""
 
 from __future__ import annotations
@@ -93,13 +93,18 @@ def test_oversized_rows_become_error_rows(spark, pages_path):
     assert str(MAX_CONTENT_BYTES) in errs[0]["error"]
 
 
-def test_gate_is_pure_codegen(spark, pages_path):
-    from riptide_spark.operators.gate_cols import with_gate
-
-    plan = _plan(with_gate(spark.read.parquet(pages_path)))
-    assert "EvalPython" not in plan
-    # "*(n)" marks operators fused into a WholeStageCodegen stage.
-    assert "*(" in plan
+def test_no_gate_expressions_before_the_shuffle(spark, pages_path):
+    # Routing runs inside the extraction UDF, so the stage feeding the
+    # shuffle is the scan, the size guard and url_bucket/salt: no regexp
+    # count, no aggregate lambda, no lower().
+    pages = spark.read.parquet(pages_path)
+    config = ExtractionJobConfig(output_path="", resume=False, target_partitions=4)
+    plan = _plan(extraction_plan(pages, config))
+    assert plan.count("ArrowEvalPython") == 1
+    pre_shuffle = plan[plan.index("Exchange"):].split("\n", 1)[1]
+    assert "Scan" in pre_shuffle
+    for expr in ("regexp", "aggregate(", "lower("):
+        assert expr not in pre_shuffle, expr
 
 
 def test_single_python_stage_in_extraction_plan(spark, pages_path):
