@@ -192,9 +192,6 @@ def extract_topic_keywords(text: str, top_k: int = 5) -> list[str]:
 # reference mixes byte/char indexing — no goldens pin chunker offsets).
 # ---------------------------------------------------------------------------
 
-_SENTENCE_END = (".", "!", "?")
-
-
 def fixed_chunks(
     text: str,
     size: int,

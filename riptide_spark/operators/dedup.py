@@ -594,7 +594,7 @@ def embedding_near_duplicates(
     shape). Near-identical vectors agree on every hyperplane sign, so LSH
     recall on true near-duplicates is ~1 by construction.
     """
-    from .similarity import cosine, lsh_signature
+    from .similarity import exact_cosine, lsh_signature
 
     vec = F.col(vec_col).cast("array<double>")
     if use_lsh:
@@ -611,7 +611,7 @@ def embedding_near_duplicates(
     scored = pairs.select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
-        F.round(cosine(F.col("a.v"), F.col("b.v")), 6).cast("double").alias("cosine_sim"),
+        exact_cosine(F.col("a.v"), F.col("b.v")).alias("cosine_sim"),
     )
     return scored.filter(F.col("cosine_sim") >= threshold)
 

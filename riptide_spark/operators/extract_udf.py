@@ -305,11 +305,3 @@ def extraction_mode_for_route(content_mode: Column) -> Column:
     for route_name, extraction_mode in MODE_FOR_ROUTE.items():
         mode = F.when(content_mode == route_name, F.lit(extraction_mode)).otherwise(mode)
     return mode
-
-
-def escalation_predicate(quality: Column, words: Column) -> Column:
-    """Probe-first escalation rule (engine_selection.rs:450-469):
-    quality < 30 ∨ words < 50 ∨ (quality < 50 ∧ words < 100)."""
-    quality = F.coalesce(quality, F.lit(0))
-    words = F.coalesce(words, F.lit(0))
-    return (quality < 30) | (words < 50) | ((quality < 50) & (words < 100))

@@ -1,28 +1,38 @@
 """Similarity search over embedding columns (array<float>).
 
-Three paths:
+Each search method has one implementation: a batch operator over a query
+TABLE, returning ``(query_id, id, cosine_sim, rank)``. A single query
+(``cosine_topk``, ``ann_topk_lsh``, ``ann_topk_ivf``) is that operator on
+the one-row query frame of ``query_id``, projected to ``(id, cosine_sim)``
+in rank order. Every score is :func:`exact_cosine` and every rank comes
+from :func:`_topk_per_query`, a ``row_number() <= k`` window that Spark
+plans as a partial ``WindowGroupLimit`` before the shuffle and a final
+one after it, so each partition ships at most k rows per query.
 
-* **brute-force cosine top-k** — ``zip_with`` dot product + ``aggregate``
-  norm, one pass over the table, no shuffle except the final top-k. The
-  correctness baseline; also the right plan when the query set is small
-  (broadcast the queries and let every partition score its rows locally).
+* **brute-force cosine** — ``zip_with`` dot product + ``aggregate`` norm
+  over every (row, query) pair, the query set broadcast. The correctness
+  baseline the ANN methods are measured against.
 * **LSH-bucketed ANN** — random-hyperplane signatures (deterministic planes
   derived from md5 of the dimension index, so every engine reproduces them),
-  candidates = rows sharing a signature bucket, exact re-rank inside the
-  bucket. Pure built-in expressions; scales as O(rows/buckets) per query.
-* **IVF-Flat ANN** — coarse k-means quantizer trained driver-side on a
-  bounded deterministic sample, inverted-list assignment via one
-  Arrow-batched matrix multiply, probe-list pruning + exact re-rank. The
-  FAISS IVF layout expressed as Spark partitioning: write the table
-  partitioned by ``ivf_list`` and each query reads n_probe/n_centroids of
-  the data via partition pruning.
+  candidates = rows sharing a probe bucket with the query in any of
+  ``tables`` plane families, exact re-rank. Pure built-in expressions.
+* **IVF-Flat ANN** — coarse k-means quantizer trained on a bounded
+  deterministic sample, inverted-list assignment via one Arrow-batched
+  matrix multiply, probe-list equi-join + exact re-rank.
+
+``write_lsh_index`` / ``write_ivf_index`` materialize the two ANN layouts
+as Spark partitioning, and ``ann_topk_lsh_index`` / ``ann_topk_ivf_index``
+answer a query vector by reading only its probe partitions.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import or_
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -42,6 +52,81 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def exact_cosine(vec: Column, query_vec: Column) -> Column:
+    """The score every operator reports: cosine in double precision,
+    rounded to 6 decimals — the policy the DuckDB oracles reproduce."""
+    return F.round(
+        cosine(vec.cast("array<double>"), query_vec.cast("array<double>")), 6
+    ).cast("double")
+
+
+def _topk_per_query(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Rank candidates per query (one shuffle on query_id), deterministic
+    id tie-break."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc(id_col)
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", id_col, "cosine_sim", "rank")
+    )
+
+
+def _in_rank_order(ranked: DataFrame, id_col: str) -> DataFrame:
+    """One query's ranked rows as ``(id, cosine_sim)``, best first."""
+    return ranked.orderBy("rank").select(id_col, "cosine_sim")
+
+
+def _one_query(batch, embeddings, query_id, id_col, vec_col, **params) -> DataFrame:
+    """Run the batch operator ``batch`` on the one-row query frame of
+    ``query_id`` (empty when the id is absent)."""
+    queries = embeddings.filter(F.col(id_col) == query_id)
+    return _in_rank_order(
+        batch(embeddings, queries, id_col=id_col, vec_col=vec_col, **params), id_col
+    )
+
+
+def _vector_topk(
+    pruned: DataFrame, query_vec, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Top-k of an index scan against one literal query vector, ranked
+    exactly like the batch operators."""
+    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    scored = pruned.select(
+        F.lit(0).alias("query_id"),
+        id_col,
+        exact_cosine(F.col(vec_col), qlit).alias("cosine_sim"),
+    )
+    return _in_rank_order(_topk_per_query(scored, k, id_col), id_col)
+
+
+def cosine_topk_batch(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Brute-force per-query top-k for a query TABLE (no per-query driver
+    round-trips): broadcast the query set, score every (row, query) pair in
+    one pass, rank per query with a window. The exact baseline the batch
+    ANN variants are measured against."""
+    qs = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    )
+    scored = (
+        embeddings.crossJoin(F.broadcast(qs))
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            id_col,
+            exact_cosine(F.col(vec_col), F.col("query_vec")).alias("cosine_sim"),
+        )
+    )
+    return _topk_per_query(scored, k, id_col)
+
+
 def cosine_topk(
     embeddings: DataFrame,
     query_id: int,
@@ -49,29 +134,9 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Brute-force cosine top-k against the row with ``query_id``.
-
-    The single query vector is cross-broadcast (1 row) — no shuffle of the
-    big side; ordering ties broken by id for determinism.
-    """
-    query = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec")
-    )
-    scored = (
-        embeddings.crossJoin(F.broadcast(query))
-        .filter(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.round(
-                cosine(
-                    F.col(vec_col).cast("array<double>"),
-                    F.col("query_vec").cast("array<double>"),
-                ),
-                6,
-            ).cast("double").alias("cosine_sim"),
-        )
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
+    """Brute-force cosine top-k against the row with ``query_id``:
+    :func:`cosine_topk_batch` on a one-row query frame."""
+    return _one_query(cosine_topk_batch, embeddings, query_id, id_col, vec_col, k=k)
 
 
 def _table_salt(table: int) -> str:
@@ -85,20 +150,8 @@ def _table_salt(table: int) -> str:
 def _plane_component(dim_index: Column, plane: int, table: int = 0) -> Column:
     """Deterministic pseudo-random hyperplane component in [-0.5, 0.5):
     md5-derived, reproducible in any engine."""
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(f"{_table_salt(table)}plane{plane}:"),
-                    dim_index.cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("double")
+    key = F.concat(F.lit(f"{_table_salt(table)}plane{plane}:"), dim_index.cast("string"))
+    h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("double")
     return h / F.lit(4294967296.0) - 0.5
 
 
@@ -120,6 +173,193 @@ def lsh_signature(vec: Column, planes: int = 8, table: int = 0) -> Column:
     return sig
 
 
+def lsh_signature_py(vec, planes: int = 8, table: int = 0) -> int:
+    """Driver-side twin of :func:`lsh_signature` — bit-identical: the same
+    md5-derived plane components and the same left-fold summation order as
+    Spark's ``aggregate`` (element order, scalar adds), so the float
+    rounding (and thus every sign) matches exactly."""
+    import hashlib
+
+    salt = _table_salt(table)
+    sig = 0
+    for p in range(planes):
+        proj = 0.0
+        for i, v in enumerate(vec):
+            h = int(hashlib.md5(f"{salt}plane{p}:{i}".encode()).hexdigest()[:8], 16)
+            proj += float(v) * (h / 4294967296.0 - 0.5)
+        if proj > 0:
+            sig += 1 << p
+    return sig
+
+
+def _lsh_signatures(vec: Column, planes: int, tables: int) -> Column:
+    """One signature per plane family, as an array indexed by table."""
+    vec_d = vec.cast("array<double>")
+    return F.array(*[lsh_signature(vec_d, planes, table=t) for t in range(tables)])
+
+
+def _probe_masks(planes: int, hamming: int) -> list[int]:
+    """All XOR masks within the given Hamming radius of a signature: the
+    multi-probe sequence (Lv et al., multi-probe LSH) enumerated exactly."""
+    from itertools import combinations
+
+    return [
+        sum(1 << b for b in bits)
+        for h in range(hamming + 1)
+        for bits in combinations(range(planes), h)
+    ]
+
+
+def ann_topk_lsh_batch(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    planes: int = 8,
+    hamming: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    tables: int = 1,
+) -> DataFrame:
+    """Batch multi-probe LSH ANN: score only the rows that share a probe
+    bucket with the query — every bucket within ``hamming`` sign-flips of
+    the query signature (``hamming=0`` is single-bucket probing).
+    Output: (query_id, id, cosine_sim, rank) per query.
+
+    Both sides posexplode one signature per plane family and meet on the
+    (table, bucket) equi-join key; the query side also explodes its
+    XOR-mask probe list (Σ C(planes,i), i≤hamming rows per table — 22 of
+    64 buckets at 6 planes / hamming 2), broadcast against the corpus. No
+    driver loop, and at scale each table's rows are a partition stripe of
+    ``write_lsh_index``.
+
+    ``tables > 1`` is the OR-construction (Indyk-Motwani: a point is a
+    candidate if ANY of L independent plane families co-buckets it with
+    the query). Per-table collision probability p gives a miss rate of
+    (1-p)^L, which rescues recall in the near-orthogonal regime where one
+    sign-LSH table's p per true neighbour decays toward the random
+    baseline (each hyperplane agrees with probability 1-θ/π → 0.5 as
+    θ→π/2; the single-table driver row pins 0.3-0.6 recall). A candidate
+    found by several tables is deduped per (query, id) before the exact
+    cosine, so the re-rank cost is |union|, not Σ per-table."""
+    sigs = _lsh_signatures(F.col(vec_col), planes, tables)
+    corpus = embeddings.select(
+        id_col, vec_col, F.posexplode(sigs).alias("lsh_table", "lsh_bucket")
+    )
+    masks = _probe_masks(planes, hamming)
+    probes = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("query_vec"),
+        F.posexplode(sigs).alias("query_table", "query_bucket"),
+    ).select(
+        "query_id",
+        "query_vec",
+        "query_table",
+        F.explode(
+            F.array(*[F.col("query_bucket").bitwiseXOR(F.lit(m)) for m in masks])
+        ).alias("probe_bucket"),
+    )
+    candidates = corpus.join(
+        F.broadcast(probes),
+        (F.col("lsh_table") == F.col("query_table"))
+        & (F.col("lsh_bucket") == F.col("probe_bucket")),
+    ).filter(F.col(id_col) != F.col("query_id"))
+    if tables > 1:
+        # The kept duplicate is arbitrary, but (vec, query_vec) are
+        # functionally dependent on the ids, so every duplicate carries
+        # identical vectors.
+        candidates = candidates.dropDuplicates(["query_id", id_col])
+    scored = candidates.select(
+        "query_id",
+        id_col,
+        exact_cosine(F.col(vec_col), F.col("query_vec")).alias("cosine_sim"),
+    )
+    return _topk_per_query(scored, k, id_col)
+
+
+def ann_topk_lsh(
+    embeddings: DataFrame,
+    query_id: int,
+    k: int = 10,
+    planes: int = 8,
+    hamming: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Approximate top-k over the query's multi-probe LSH bucket set:
+    single-table :func:`ann_topk_lsh_batch` on a one-row query frame.
+
+    Recall caveat (measured, see ``similarity_ann_lsh_recall``): sign-LSH
+    recall tracks the neighbours' cosine — strong when true neighbours are
+    close in angle, weak when the corpus is near-orthogonal noise. The
+    driver corpus is the hostile regime, which is exactly why the recall is
+    pinned by an oracle rather than assumed.
+    """
+    return _one_query(
+        ann_topk_lsh_batch, embeddings, query_id, id_col, vec_col,
+        k=k, planes=planes, hamming=hamming,
+    )
+
+
+def write_lsh_index(
+    embeddings: DataFrame,
+    path: str,
+    planes: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    tables: int = 1,
+) -> None:
+    """Materialize the LSH layout: each row is written once per plane
+    family, ``partitionBy(lsh_table, lsh_bucket)``. A query then reads
+    only its multi-probe bucket stripes (Σ C(planes,i), i ≤ hamming
+    partitions of 2^planes per table) through partition pruning — the LSH
+    twin of ``write_ivf_index``. ``tables`` families cost L× storage (the
+    classic L-table LSH trade). No routing table needed: the planes are
+    md5-derived from the dimension index, so the query signature is
+    recomputable anywhere."""
+    embeddings.select(
+        "*",
+        F.posexplode(_lsh_signatures(F.col(vec_col), planes, tables)).alias(
+            "lsh_table", "lsh_bucket"
+        ),
+    ).write.mode("overwrite").partitionBy("lsh_table", "lsh_bucket").parquet(path)
+
+
+def ann_topk_lsh_index(
+    spark,
+    path: str,
+    query_vec,
+    k: int = 10,
+    planes: int = 8,
+    hamming: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    tables: int = 1,
+) -> DataFrame:
+    """Query a written LSH index: compute the query signature of each plane
+    family driver-side (tiny, no Spark job), expand the Hamming-radius
+    probe set, and scan ONLY those stripes before the exact cosine
+    re-rank. The probe predicate is an OR of per-table (lsh_table = t AND
+    lsh_bucket IN probes_t) conjunctions — a pure partition-column
+    predicate, so the scan prunes to the probe stripes of each table. A
+    point retrieved by several tables is deduped on id."""
+    q = [float(x) for x in query_vec]
+    masks = _probe_masks(planes, hamming)
+    pred = reduce(
+        or_,
+        [
+            (F.col("lsh_table") == t)
+            & F.col("lsh_bucket").isin(
+                [lsh_signature_py(q, planes, table=t) ^ m for m in masks]
+            )
+            for t in range(tables)
+        ],
+    )
+    pruned = spark.read.parquet(path).filter(pred)
+    if tables > 1:
+        pruned = pruned.dropDuplicates([id_col])
+    return _vector_topk(pruned, q, k, id_col, vec_col)
+
+
 def ivf_n_centroids(total_rows: int, lo: int = 8, hi: int = 65536) -> int:
     """The FAISS sizing rule for IVF list count: n_centroids ≈ √N, rounded
     to a power of two (stable partition counts across small corpus drift),
@@ -131,6 +371,13 @@ def ivf_n_centroids(total_rows: int, lo: int = 8, hi: int = 65536) -> int:
         return lo
     target = max(lo, min(hi, int(round(math.sqrt(total_rows)))))
     return max(lo, min(hi, 1 << int(round(math.log2(target)))))
+
+
+def _unit_rows(x: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; all-zero rows stay zero."""
+    norms = np.linalg.norm(x, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return x / norms
 
 
 def train_ivf_centroids(
@@ -164,13 +411,15 @@ def train_ivf_centroids(
       the driver. This is what √N centroids at corpus scale requires:
       n_centroids = 65536 wants a ~16M-row training set, far beyond any
       sane ``collect()``. Centroid coordinates are rounded to 9 decimals
-      each round to absorb float merge-order noise, so results are stable
-      across shuffle schedules.
+      each round to absorb float merge-order noise; that makes results
+      stable across shuffle schedules on a best-effort basis (a sum whose
+      noise straddles a rounding boundary can still differ).
 
     ``n_centroids="auto"`` applies the √N rule (``ivf_n_centroids``).
 
-    Returns a ``numpy.ndarray`` of shape (n_centroids, dim), L2-normalized
-    (cosine IVF assigns by max dot product with normalized centroids).
+    Returns a ``numpy.ndarray`` of shape (min(n_centroids, sample rows),
+    dim), L2-normalized (cosine IVF assigns by max dot product with
+    normalized centroids).
     """
 
     total = embeddings.count()
@@ -193,9 +442,7 @@ def train_ivf_centroids(
     if len(x) == 0:
         raise ValueError("no vectors to train IVF centroids on")
     n_centroids = min(n_centroids, len(x))
-    norms = np.linalg.norm(x, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    xn = x / norms
+    xn = _unit_rows(x)
 
     centroids = xn[:n_centroids].copy()
     for _ in range(iters):
@@ -205,9 +452,7 @@ def train_ivf_centroids(
             members = xn[assign == c]
             if len(members):
                 centroids[c] = members.mean(axis=0)
-        cn = np.linalg.norm(centroids, axis=1, keepdims=True)
-        cn[cn == 0] = 1.0
-        centroids = centroids / cn
+        centroids = _unit_rows(centroids)
     return centroids
 
 
@@ -232,11 +477,12 @@ def _train_ivf_distributed(
 
     Init: one deterministic vector per hash bucket
     (``min_by(vec, id) GROUP BY xxhash64(id) % n_centroids``) — spreads
-    seeds across the sample without a global sort. Lists that go empty
-    during an iteration keep their previous centroid (standard Lloyd
-    degeneracy handling, same as the driver path)."""
-    from pyspark.sql import types as T
-
+    seeds across the sample without a global sort. Hash buckets the
+    sample leaves empty are topped up with the smallest sample ids not
+    already seeding a list, so exactly min(n_centroids, sample rows)
+    centroids come back. Lists that go empty during an iteration keep
+    their previous centroid (standard Lloyd degeneracy handling, same as
+    the driver path)."""
     sample = (
         embeddings.select(
             F.col(id_col).alias("_id"),
@@ -255,23 +501,19 @@ def _train_ivf_distributed(
 
     init_rows = (
         sample.groupBy(F.pmod(F.xxhash64("_id"), F.lit(n_centroids)).alias("b"))
-        .agg(F.min_by("_v", "_id").alias("v"))
+        .agg(F.min("_id").alias("id"), F.min_by("_v", "_id").alias("v"))
         .orderBy("b")
         .collect()
     )
-    x0 = np.asarray([r["v"] for r in init_rows], dtype=np.float64)
-    norms = np.linalg.norm(x0, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    centroids = np.round(x0 / norms, 9)
-    dim = centroids.shape[1]
-
-    partial_schema = T.StructType(
-        [
-            T.StructField("list", T.IntegerType()),
-            T.StructField("cnt", T.LongType()),
-            T.StructField("vsum", T.ArrayType(T.DoubleType())),
+    seeds = [r["v"] for r in init_rows]
+    if len(seeds) < n_centroids:
+        chosen = {r["id"] for r in init_rows}
+        smallest = sample.orderBy("_id").limit(n_centroids).collect()
+        seeds += [r["_v"] for r in smallest if r["_id"] not in chosen][
+            : n_centroids - len(seeds)
         ]
-    )
+    centroids = np.round(_unit_rows(np.asarray(seeds, dtype=np.float64)), 9)
+    dim = centroids.shape[1]
 
     for _ in range(iters):
         cmat = centroids  # closure-broadcast: tiny vs the sample
@@ -282,10 +524,7 @@ def _train_ivf_distributed(
                 ok = vs.map(lambda v: v is not None and len(v) == _dim)
                 if not ok.any():
                     continue
-                x = np.asarray(list(vs[ok]), dtype=np.float64)
-                nr = np.linalg.norm(x, axis=1, keepdims=True)
-                nr[nr == 0] = 1.0
-                xn = x / nr
+                xn = _unit_rows(np.asarray(list(vs[ok]), dtype=np.float64))
                 assign = np.argmax(xn @ _c.T, axis=1)
                 lists = np.unique(assign)
                 yield pd.DataFrame(
@@ -296,7 +535,9 @@ def _train_ivf_distributed(
                     }
                 )
 
-        partials = sample.mapInPandas(part_sums, schema=partial_schema)
+        partials = sample.mapInPandas(
+            part_sums, schema="list int, cnt bigint, vsum array<double>"
+        )
         stats = (
             partials.select(
                 "list", "cnt", F.posexplode("vsum").alias("pos", "val")
@@ -317,9 +558,7 @@ def _train_ivf_distributed(
                 counts[r["list"]] = r["n"]
         nonempty = counts > 0
         centroids[nonempty] = sums[nonempty] / counts[nonempty, None]
-        cn = np.linalg.norm(centroids, axis=1, keepdims=True)
-        cn[cn == 0] = 1.0
-        centroids = np.round(centroids / cn, 9)
+        centroids = np.round(_unit_rows(centroids), 9)
     return centroids
 
 
@@ -336,13 +575,10 @@ def with_ivf_list(
     the vectorized path, since an argmin over C centroids is not expressible
     as a fixed-size built-in expression without C-fold plan blowup.
     """
-    from pyspark.sql import types as T
-
     cmat = np.asarray(centroids, dtype=np.float64)
-
     dim = cmat.shape[1]
 
-    @F.pandas_udf(T.IntegerType())
+    @F.pandas_udf("int")
     def nearest_centroid(vecs: pd.Series) -> pd.Series:
         # Row isolation: a null or wrong-dimension embedding must not turn
         # the batch into an object array and kill the whole task — such
@@ -351,12 +587,73 @@ def with_ivf_list(
         out = np.full(len(vecs), -1, dtype="int32")
         if ok.any():
             x = np.asarray(list(vecs[ok]), dtype=np.float64)
-            norms = np.linalg.norm(x, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            out[ok.to_numpy()] = np.argmax((x / norms) @ cmat.T, axis=1).astype("int32")
+            out[ok.to_numpy()] = np.argmax(_unit_rows(x) @ cmat.T, axis=1).astype("int32")
         return pd.Series(out)
 
-    return df.withColumn(out_col, nearest_centroid(F.col(vec_col)))
+    # Never null (bad rows get -1); saying so lets Catalyst drop the
+    # isnotnull(ivf_list) filter it infers for a join or probe filter on
+    # the list, which it would otherwise evaluate with a second UDF pass.
+    return df.withColumn(
+        out_col, F.coalesce(nearest_centroid(F.col(vec_col)), F.lit(-1))
+    )
+
+
+def _nearest_lists(cmat: np.ndarray, vec, n_probe: int) -> list[int]:
+    """The ``n_probe`` inverted lists whose centroids are nearest (max
+    cosine) to ``vec``, nearest first."""
+    q = np.asarray(vec, dtype=np.float64)
+    qn = q / (np.linalg.norm(q) or 1.0)
+    return [int(i) for i in np.argsort(-(cmat @ qn))[:n_probe]]
+
+
+def ann_topk_ivf_batch(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    n_centroids: int | str = 16,
+    n_probe: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    centroids=None,
+) -> DataFrame:
+    """Batch IVF ANN: assign every query to its ``n_probe`` nearest
+    centroids with one Arrow-batched pass (no per-query driver
+    round-trip), explode the probe lists, equi-join against the
+    list-assigned corpus, exact re-rank per query. The quantizer is
+    trained here unless ``centroids`` passes a trained one (e.g. from
+    ``write_ivf_index`` or the executor-side trainer)."""
+    if centroids is None:
+        centroids = train_ivf_centroids(
+            embeddings, n_centroids, id_col=id_col, vec_col=vec_col
+        )
+    cmat = np.asarray(centroids, dtype=np.float64)
+    listed = with_ivf_list(embeddings, cmat, vec_col=vec_col)
+    dim = cmat.shape[1]
+
+    @F.pandas_udf("array<int>")
+    def probe_lists(vecs: pd.Series) -> pd.Series:
+        return pd.Series(
+            [
+                [] if v is None or len(v) != dim else _nearest_lists(cmat, v, n_probe)
+                for v in vecs
+            ]
+        )
+
+    probes = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("query_vec"),
+        F.explode(probe_lists(F.col(vec_col))).alias("ivf_list"),
+    )
+    scored = (
+        listed.join(F.broadcast(probes), "ivf_list")
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            id_col,
+            exact_cosine(F.col(vec_col), F.col("query_vec")).alias("cosine_sim"),
+        )
+    )
+    return _topk_per_query(scored, k, id_col)
 
 
 def ann_topk_ivf(
@@ -369,50 +666,13 @@ def ann_topk_ivf(
     vec_col: str = "embedding",
     centroids=None,
 ) -> DataFrame:
-    """IVF ANN: score only rows whose inverted list is among the query's
-    ``n_probe`` nearest centroids, exact cosine re-rank inside.
-
-    At scale: train once, write the table partitioned/bucketed by
-    ``ivf_list``; each query touches n_probe/n_centroids of the data via
-    partition pruning. This is the classic IVF-Flat layout (FAISS) expressed
-    as Spark partitioning. Pass ``centroids`` to reuse a pre-trained
-    quantizer (e.g. from the executor-side trainer) instead of retraining.
-    """
-
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            embeddings, n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    listed = with_ivf_list(embeddings, centroids, vec_col=vec_col)
-
-    qrow = embeddings.filter(F.col(id_col) == query_id).select(vec_col).collect()
-    if not qrow:
-        return listed.select(
-            F.col(id_col), F.lit(0.0).alias("cosine_sim")
-        ).limit(0)
-    q = np.asarray(qrow[0][0], dtype=np.float64)
-    qn = q / (np.linalg.norm(q) or 1.0)
-    probes = [int(i) for i in np.argsort(-(centroids @ qn))[: n_probe]]
-
-    query = embeddings.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec")
+    """IVF ANN for the row with ``query_id``: :func:`ann_topk_ivf_batch` on
+    a one-row query frame. Pass ``centroids`` to reuse a pre-trained
+    quantizer instead of retraining."""
+    return _one_query(
+        ann_topk_ivf_batch, embeddings, query_id, id_col, vec_col,
+        k=k, n_centroids=n_centroids, n_probe=n_probe, centroids=centroids,
     )
-    candidates = (
-        listed.filter(F.col("ivf_list").isin(probes))
-        .crossJoin(F.broadcast(query))
-        .filter(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.round(
-                cosine(
-                    F.col(vec_col).cast("array<double>"),
-                    F.col("query_vec").cast("array<double>"),
-                ),
-                6,
-            ).cast("double").alias("cosine_sim"),
-        )
-    )
-    return candidates.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
 
 
 def write_ivf_index(
@@ -453,426 +713,7 @@ def ann_topk_ivf_index(
     centroids driver-side (tiny matrix), then scan ONLY those list
     partitions (partition pruning on the ivf_list filter) and re-rank with
     exact cosine."""
-    cmat = np.asarray(centroids, dtype=np.float64)
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qn = q / (np.linalg.norm(q) or 1.0)
-    probes = [int(i) for i in np.argsort(-(cmat @ qn))[:n_probe]]
-
-    listed = spark.read.parquet(path)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    return (
-        listed.filter(F.col("ivf_list").isin(probes))
-        .select(
-            id_col,
-            F.round(
-                cosine(F.col(vec_col).cast("array<double>"), qlit), 6
-            ).cast("double").alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _probe_masks(planes: int, hamming: int) -> list[int]:
-    """All XOR masks within the given Hamming radius of a signature: the
-    multi-probe sequence (Lv et al., multi-probe LSH) enumerated exactly."""
-    from itertools import combinations
-
-    masks = [0]
-    for h in range(1, hamming + 1):
-        for bits in combinations(range(planes), h):
-            m = 0
-            for b in bits:
-                m |= 1 << b
-            masks.append(m)
-    return masks
-
-
-def ann_topk_lsh(
-    embeddings: DataFrame,
-    query_id: int,
-    k: int = 10,
-    planes: int = 8,
-    hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: score only rows in the query's multi-probe LSH
-    bucket set — every bucket within ``hamming`` sign-flips of the query
-    signature (``hamming=0`` recovers single-bucket probing).
-
-    Probing stays an EQUI-join: the query side explodes its XOR-mask probe
-    list into (probe_bucket) rows (Σ C(planes,i), i≤hamming — e.g. 22 of
-    64 buckets at 6 planes / hamming 2), broadcast against the corpus. At
-    scale: write the table bucketed by ``lsh_bucket`` once and each query
-    reads only its probe buckets via partition pruning.
-
-    Recall caveat (measured, see ``similarity_ann_lsh_recall``): sign-LSH
-    recall tracks the neighbours' cosine — strong when true neighbours are
-    close in angle, weak when the corpus is near-orthogonal noise (each
-    hyperplane agrees with probability 1-θ/π → ~0.5 as θ→π/2). The driver
-    corpus is the hostile regime, which is exactly why the recall is
-    pinned by an oracle rather than assumed.
-    """
-    with_sig = embeddings.withColumn(
-        "lsh_bucket", lsh_signature(F.col(vec_col).cast("array<double>"), planes)
-    )
-    query = with_sig.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec"), F.col("lsh_bucket").alias("query_bucket")
-    )
-    masks = _probe_masks(planes, hamming)
-    probes = query.select(
-        "query_vec",
-        F.explode(
-            F.array(*[F.col("query_bucket").bitwiseXOR(F.lit(m)) for m in masks])
-        ).alias("probe_bucket"),
-    )
-    candidates = (
-        with_sig.join(F.broadcast(probes), F.col("lsh_bucket") == F.col("probe_bucket"))
-        .filter(F.col(id_col) != query_id)
-        .select(
-            id_col,
-            F.round(
-                cosine(
-                    F.col(vec_col).cast("array<double>"),
-                    F.col("query_vec").cast("array<double>"),
-                ),
-                6,
-            ).cast("double").alias("cosine_sim"),
-        )
-    )
-    return candidates.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
-
-
-def write_lsh_index(
-    embeddings: DataFrame,
-    path: str,
-    planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 1,
-) -> None:
-    """Materialize the LSH layout: write the table PARTITIONED BY the
-    hyperplane signature bucket. Each query then reads only its multi-probe
-    bucket set (Σ C(planes,i), i ≤ hamming partitions of 2^planes) through
-    partition pruning — the LSH twin of ``write_ivf_index``. No routing
-    table needed: the planes are md5-derived from the dimension index, so
-    the query signature is recomputable anywhere.
-
-    ``tables > 1`` materializes the OR-construction: each row is written
-    once per plane family under ``partitionBy(lsh_table, lsh_bucket)`` —
-    L× storage (the classic L-table LSH trade), but a query still scans
-    only its probe stripes of each table."""
-    vec_d = F.col(vec_col).cast("array<double>")
-    if tables == 1:
-        with_sig = embeddings.withColumn("lsh_bucket", lsh_signature(vec_d, planes))
-        with_sig.write.mode("overwrite").partitionBy("lsh_bucket").parquet(path)
-        return
-    exploded = embeddings.select(
-        "*",
-        F.posexplode(
-            F.array(*[lsh_signature(vec_d, planes, table=t) for t in range(tables)])
-        ).alias("lsh_table", "lsh_bucket"),
-    )
-    exploded.write.mode("overwrite").partitionBy("lsh_table", "lsh_bucket").parquet(
-        path
-    )
-
-
-def lsh_signature_py(vec, planes: int = 8, table: int = 0) -> int:
-    """Driver-side twin of :func:`lsh_signature` — bit-identical: the same
-    md5-derived plane components and the same left-fold summation order as
-    Spark's ``aggregate`` (element order, scalar adds), so the float
-    rounding (and thus every sign) matches exactly."""
-    import hashlib
-
-    salt = _table_salt(table)
-    sig = 0
-    for p in range(planes):
-        proj = 0.0
-        for i, v in enumerate(vec):
-            h = int(hashlib.md5(f"{salt}plane{p}:{i}".encode()).hexdigest()[:8], 16)
-            proj += float(v) * (h / 4294967296.0 - 0.5)
-        if proj > 0:
-            sig += 1 << p
-    return sig
-
-
-def ann_topk_lsh_index(
-    spark,
-    path: str,
-    query_vec,
-    k: int = 10,
-    planes: int = 8,
-    hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 1,
-) -> DataFrame:
-    """Query a written LSH index: compute the query signature driver-side
-    (tiny), expand the Hamming-radius probe set, and scan ONLY those
-    bucket partitions (partition pruning on the lsh_bucket IN filter)
-    before the exact cosine re-rank.
-
-    ``tables > 1`` queries an OR-construction index (written with
-    ``write_lsh_index(tables=L)``): the probe predicate is an OR of
-    per-table (lsh_table = t AND lsh_bucket IN probes_t) conjunctions —
-    still a pure partition-column predicate, so the scan prunes to the
-    probe stripes of each table — and a point retrieved by several tables
-    is deduped on id before the exact re-rank."""
     q = [float(x) for x in query_vec]
-    listed = spark.read.parquet(path)
-    qlit = F.array(*[F.lit(x) for x in q])
-    masks = _probe_masks(planes, hamming)
-    if tables == 1:
-        sig = lsh_signature_py(q, planes)
-        pruned = listed.filter(F.col("lsh_bucket").isin([sig ^ m for m in masks]))
-    else:
-        pred = None
-        for t in range(tables):
-            sig = lsh_signature_py(q, planes, table=t)
-            term = (F.col("lsh_table") == t) & F.col("lsh_bucket").isin(
-                [sig ^ m for m in masks]
-            )
-            pred = term if pred is None else (pred | term)
-        pruned = listed.filter(pred).dropDuplicates([id_col])
-    return (
-        pruned.select(
-            id_col,
-            F.round(
-                cosine(F.col(vec_col).cast("array<double>"), qlit), 6
-            ).cast("double").alias("cosine_sim"),
-        )
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def _topk_per_query(scored: DataFrame, k: int, id_col: str) -> DataFrame:
-    """Rank candidates per query (one shuffle on query_id), deterministic
-    id tie-break — the batch analog of TakeOrdered."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc(id_col)
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "cosine_sim", "rank")
-    )
-
-
-def cosine_topk_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force per-query top-k for a query TABLE (no per-query driver
-    round-trips): broadcast the query set, score every (row, query) pair in
-    one pass, rank per query with a window. The exact baseline the batch
-    ANN variants are measured against."""
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("query_vec"),
-    )
-    scored = (
-        embeddings.crossJoin(F.broadcast(qs))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                cosine(F.col(vec_col).cast("array<double>"), F.col("query_vec")), 6
-            ).cast("double").alias("cosine_sim"),
-        )
-    )
-    return _topk_per_query(scored, k, id_col)
-
-
-def ann_topk_lsh_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    planes: int = 8,
-    hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    tables: int = 1,
-) -> DataFrame:
-    """Batch multi-probe LSH ANN: one equi-join routes every query to its
-    probe buckets — |queries|·Σ C(planes,i) broadcast probe rows, no
-    driver loop. Output: (query_id, id, cosine_sim, rank) per query.
-
-    ``tables > 1`` is the OR-construction (Indyk-Motwani: L independent
-    hash tables, a point is a candidate if ANY table co-buckets it with
-    the query): per-table collision probability p means the multi-table
-    miss rate is (1-p)^L, which is what rescues recall in the
-    near-orthogonal regime where a single sign-LSH table's p per true
-    neighbour decays toward the random baseline (the honestly-pinned
-    0.3-0.6 recall of the single-table driver row). Join key becomes
-    (table, bucket) — still an equi-join with broadcast probes — and a
-    candidate found by several tables is deduped per (query, id) BEFORE
-    the exact cosine so the re-rank cost is |union|, not Σ per-table."""
-    if tables > 1:
-        return _ann_topk_lsh_batch_tables(
-            embeddings, queries, k, planes, hamming, tables, id_col, vec_col
-        )
-    with_sig = embeddings.withColumn(
-        "lsh_bucket", lsh_signature(F.col(vec_col).cast("array<double>"), planes)
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("query_vec"),
-        lsh_signature(F.col(vec_col).cast("array<double>"), planes).alias(
-            "query_bucket"
-        ),
-    )
-    masks = _probe_masks(planes, hamming)
-    probes = qs.select(
-        "query_id",
-        "query_vec",
-        F.explode(
-            F.array(*[F.col("query_bucket").bitwiseXOR(F.lit(m)) for m in masks])
-        ).alias("probe_bucket"),
-    )
-    scored = (
-        with_sig.join(F.broadcast(probes), F.col("lsh_bucket") == F.col("probe_bucket"))
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                cosine(F.col(vec_col).cast("array<double>"), F.col("query_vec")), 6
-            ).cast("double").alias("cosine_sim"),
-        )
-    )
-    return _topk_per_query(scored, k, id_col)
-
-
-def _ann_topk_lsh_batch_tables(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    planes: int,
-    hamming: int,
-    tables: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """OR-construction body of :func:`ann_topk_lsh_batch` (tables > 1).
-
-    Both sides explode to one row per hash table — exactly the classic
-    L-table LSH layout expressed relationally — and meet on the composite
-    (table, bucket) equi-join key. At scale each table's rows are just a
-    partition stripe of a table written ``partitionBy(lsh_table,
-    lsh_bucket)``; nothing here is driver-bound."""
-    vec_d = F.col(vec_col).cast("array<double>")
-    sigs = F.array(*[lsh_signature(vec_d, planes, table=t) for t in range(tables)])
-    corpus = embeddings.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.posexplode(sigs).alias("lsh_table", "lsh_bucket"),
-    )
-    masks = _probe_masks(planes, hamming)
-    probes = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            vec_d.alias("query_vec"),
-            F.posexplode(
-                F.array(
-                    *[lsh_signature(vec_d, planes, table=t) for t in range(tables)]
-                )
-            ).alias("lsh_table", "query_bucket"),
-        )
-        .select(
-            "query_id",
-            "query_vec",
-            "lsh_table",
-            F.explode(
-                F.array(
-                    *[F.col("query_bucket").bitwiseXOR(F.lit(m)) for m in masks]
-                )
-            ).alias("probe_bucket"),
-        )
-    )
-    candidates = (
-        corpus.join(
-            F.broadcast(probes),
-            (corpus["lsh_table"] == probes["lsh_table"])
-            & (F.col("lsh_bucket") == F.col("probe_bucket")),
-        )
-        .filter(F.col(id_col) != F.col("query_id"))
-        # A point two tables both retrieve must be scored once, not twice:
-        # dedupe on the (query, id) pair before the exact cosine. The kept
-        # row is arbitrary but (vec, query_vec) are functionally dependent
-        # on the ids, so every duplicate carries identical vectors.
-        .dropDuplicates(["query_id", id_col])
-    )
-    scored = candidates.select(
-        "query_id",
-        id_col,
-        F.round(
-            cosine(F.col(vec_col).cast("array<double>"), F.col("query_vec")), 6
-        ).cast("double").alias("cosine_sim"),
-    )
-    return _topk_per_query(scored, k, id_col)
-
-
-def ann_topk_ivf_batch(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int | str = 16,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
-) -> DataFrame:
-    """Batch IVF ANN: assign every query to its ``n_probe`` nearest
-    centroids with one Arrow-batched matrix multiply (no per-query driver
-    round-trip), explode the probe lists, equi-join against the
-    list-assigned corpus, exact re-rank per query. Pass ``centroids`` to
-    reuse a trained quantizer (e.g. from ``write_ivf_index``)."""
-    from pyspark.sql import types as T
-
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            embeddings, n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    cmat = np.asarray(centroids, dtype=np.float64)
-    listed = with_ivf_list(embeddings, cmat, vec_col=vec_col)
-    dim = cmat.shape[1]
-    probe_n = min(n_probe, cmat.shape[0])
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe_lists(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None or len(v) != dim:
-                out.append([])
-                continue
-            q = np.asarray(v, dtype=np.float64)
-            qn = q / (np.linalg.norm(q) or 1.0)
-            out.append([int(i) for i in np.argsort(-(cmat @ qn))[:probe_n]])
-        return pd.Series(out)
-
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("query_vec"),
-        F.explode(probe_lists(F.col(vec_col))).alias("ivf_list"),
-    )
-    scored = (
-        listed.join(F.broadcast(probes), "ivf_list")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                cosine(F.col(vec_col).cast("array<double>"), F.col("query_vec")), 6
-            ).cast("double").alias("cosine_sim"),
-        )
-    )
-    return _topk_per_query(scored, k, id_col)
+    probes = _nearest_lists(np.asarray(centroids, dtype=np.float64), q, n_probe)
+    pruned = spark.read.parquet(path).filter(F.col("ivf_list").isin(probes))
+    return _vector_topk(pruned, q, k, id_col, vec_col)

@@ -59,7 +59,6 @@ class ExtractionJobConfig:
     hot_hosts: list[str] = field(default_factory=list)
     target_partitions: int | None = None
     resume: bool = True
-    write_partitioned_by_bucket: bool = True
 
 
 def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
@@ -204,8 +203,7 @@ def run_extraction_job(
     result = extraction_plan(pages, config).withColumn("run_id", F.lit(run_id))
     result = result.select(*OUTPUT_COLUMNS, "run_id", "url_bucket")
 
-    partition_cols = ["url_bucket"] if config.write_partitioned_by_bucket else None
-    manifest = output.append(result, run_id=run_id, partition_by=partition_cols)
+    manifest = output.append(result, run_id=run_id, partition_by=["url_bucket"])
 
     if config.metrics_path:
         written = output.read(schema=result.schema, files=manifest.files)

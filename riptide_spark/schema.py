@@ -84,21 +84,3 @@ OUTPUT_COLUMNS = [
     "extract_ms",
     "error",
 ]
-
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("docs_total", T.LongType(), False),
-        T.StructField("docs_ok", T.LongType(), False),
-        T.StructField("docs_failed", T.LongType(), False),
-        T.StructField("decision_raw", T.LongType(), False),
-        T.StructField("decision_probes_first", T.LongType(), False),
-        T.StructField("decision_headless", T.LongType(), False),
-        T.StructField("decision_pdf", T.LongType(), False),
-        T.StructField("escalated", T.LongType(), False),
-        T.StructField("avg_quality", T.DoubleType(), True),
-        T.StructField("avg_extract_ms", T.DoubleType(), True),
-        T.StructField("total_words", T.LongType(), False),
-    ]
-)

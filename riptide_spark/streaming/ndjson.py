@@ -20,7 +20,6 @@ finishes, with heartbeat/progress events and a bounded backpressure buffer
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -57,16 +56,6 @@ def streaming_extraction_plan(pages: DataFrame) -> DataFrame:
         F.col("ex.word_count").alias("word_count"),
         F.col("ex.error").alias("error"),
     )
-
-
-def ndjson_lines(rows) -> str:
-    """Serialize result rows as NDJSON (one compact JSON object per line,
-    mirroring NdjsonCodec: ndjson.rs:127-186)."""
-    out = []
-    for row in rows:
-        payload = row.asDict(recursive=True)
-        out.append(json.dumps(payload, ensure_ascii=False, separators=(",", ":")))
-    return "\n".join(out) + ("\n" if out else "")
 
 
 def start_stream(spark: SparkSession, config: StreamConfig):

@@ -180,6 +180,27 @@ def test_ivf_centroids_deterministic(spark, embeddings):
     assert len(a1) == embeddings.count()
 
 
+def test_ivf_distributed_training_returns_every_requested_centroid(spark, embeddings):
+    """Hash-bucket seeding leaves some of the n_centroids buckets empty on
+    a small sample (100 ids into 64 buckets fill 51); the executor-side
+    trainer must top the seeds up, deterministically, so the quantizer
+    has exactly min(n_centroids, sample rows) lists, all unit-norm and
+    distinct."""
+    import numpy as np
+
+    from riptide_spark.operators.similarity import train_ivf_centroids
+
+    small = embeddings.filter(F.col("vec_id") < 100)
+    n_rows = small.count()
+    # needed = 64 × 256 > max_sample 256 → distributed path.
+    c1 = train_ivf_centroids(small, n_centroids=64, max_sample=256)
+    c2 = train_ivf_centroids(small, n_centroids=64, max_sample=256)
+    assert c1.shape == (min(64, n_rows), 64)
+    assert np.allclose(np.linalg.norm(c1, axis=1), 1.0, atol=1e-6)
+    assert len({tuple(row) for row in c1}) == c1.shape[0]
+    assert np.array_equal(c1, c2)
+
+
 def test_ivf_n_centroids_sqrt_rule():
     """√N sizing, power-of-two rounded, clamped: the sf0.01 table (600
     vecs) gets 32 lists; a 10^11-doc corpus saturates the 65536 cap."""
@@ -209,7 +230,7 @@ def test_ivf_distributed_training_path(spark, embeddings):
     # needed = 64 × 256 = 16384 > max_sample 4096 → distributed path.
     c1 = train_ivf_centroids(embeddings, n_centroids=64, max_sample=4096)
     c2 = train_ivf_centroids(embeddings, n_centroids=64, max_sample=4096)
-    assert c1.shape[0] <= 64 and c1.shape[1] == 64
+    assert c1.shape == (64, 64)
     assert np.allclose(np.linalg.norm(c1, axis=1), 1.0, atol=1e-6)
     assert np.array_equal(c1, c2)
     n_lists = c1.shape[0]
@@ -667,13 +688,10 @@ def test_or_construction_lsh_improves_equal_budget_recall(spark):
     embeddings (the driver-gate corpus the docstring constants describe):
     everything is deterministic, and the sf0.001 micro-corpus's 5-query
     constant happens to land 0.58 vs 0.60 — too few brute pairs for the
-    (1-p)^L asymptotics to show. Also pins table-0 salt compatibility:
-    tables=1 through the OR path must equal the legacy single-table
-    operator exactly."""
+    (1-p)^L asymptotics to show."""
     from pyspark.sql import functions as F
 
     from riptide_spark.operators.similarity import (
-        _ann_topk_lsh_batch_tables,
         ann_topk_lsh_batch,
         cosine_topk_batch,
     )
@@ -699,23 +717,6 @@ def test_or_construction_lsh_improves_equal_budget_recall(spark):
         ).collect()
     )
     assert multi > single, (multi, single)
-
-    # tables=1 via the OR-construction body == the legacy operator: the
-    # table-0 plane family is the unsalted original, so the candidate set
-    # (and thus the ranked top-k) must be identical.
-    legacy = sorted(
-        tuple(r)
-        for r in ann_topk_lsh_batch(
-            emb, queries, k=k, planes=6, hamming=2
-        ).collect()
-    )
-    via_tables = sorted(
-        tuple(r)
-        for r in _ann_topk_lsh_batch_tables(
-            emb, queries, k, 6, 2, 1, "vec_id", "embedding"
-        ).collect()
-    )
-    assert legacy == via_tables
 
 
 def test_multiprobe_lsh_hamming_zero_is_single_bucket(spark):
@@ -829,7 +830,7 @@ def test_multi_table_lsh_index_prunes_per_table_stripes(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from riptide_spark.operators.similarity import (
-        _ann_topk_lsh_batch_tables,
+        ann_topk_lsh_batch,
         ann_topk_lsh_index,
         write_lsh_index,
     )
@@ -862,16 +863,16 @@ def test_multi_table_lsh_index_prunes_per_table_stripes(spark, tmp_path):
     ][:k]
     mem = [
         (r["vec_id"], r["cosine_sim"])
-        for r in _ann_topk_lsh_batch_tables(
+        for r in ann_topk_lsh_batch(
             emb,
             emb.filter(F.col("vec_id") == 0),
-            k + 1,
-            planes,
-            hamming,
-            tables,
-            "vec_id",
-            "embedding",
-        ).collect()
+            k=k + 1,
+            planes=planes,
+            hamming=hamming,
+            tables=tables,
+        )
+        .orderBy("rank")
+        .collect()
         if r["vec_id"] != 0
     ][:k]
     assert got == mem

@@ -280,6 +280,41 @@ def test_batch_ann_plans_stay_equi_join(spark):
         assert "BroadcastNestedLoopJoin" not in plan, plan[:500]
 
 
+def test_single_query_topk_is_a_partial_window_group_limit(spark):
+    """A single query runs the batch operator on a one-row query frame, so
+    for k under ``spark.sql.optimizer.windowGroupLimitThreshold`` its
+    top-k is the ``row_number() <= k`` window that Spark splits into a
+    Partial WindowGroupLimit right below the shuffle and a Final one above
+    it — each partition ships at most k rows, as TakeOrdered would."""
+    import numpy as np
+
+    from riptide_spark.operators.similarity import (
+        ann_topk_ivf,
+        ann_topk_lsh,
+        cosine_topk,
+    )
+
+    emb = spark.range(64).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") + i).cast("float") for i in range(8)]).alias(
+            "embedding"
+        ),
+    )
+    k = 10
+    assert k < int(spark.conf.get("spark.sql.optimizer.windowGroupLimitThreshold"))
+    for df in (
+        cosine_topk(emb, query_id=0, k=k),
+        ann_topk_lsh(emb, query_id=0, k=k, planes=6, hamming=2),
+        ann_topk_ivf(emb, query_id=0, k=k, n_probe=2, centroids=np.eye(4, 8)),
+    ):
+        lines = _plan(df).splitlines()
+        shuffles = [i for i, line in enumerate(lines) if "Exchange hashpartitioning" in line]
+        assert shuffles, "\n".join(lines)
+        below = lines[shuffles[0] + 1]
+        assert "WindowGroupLimit" in below and "Partial" in below, "\n".join(lines)
+        assert not any("TakeOrdered" in line for line in lines)
+
+
 def test_warc_day_layout_prunes_partitions(spark, tmp_path_factory):
     """The north rule's days(warc_ts) crawl layout: pages written via
     write_pages_by_day land in hive-style warc_day directories, and a
