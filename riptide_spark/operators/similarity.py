@@ -74,8 +74,10 @@ def _topk_per_query(scored: DataFrame, k: int, id_col: str) -> DataFrame:
 
 
 def _in_rank_order(ranked: DataFrame, id_col: str) -> DataFrame:
-    """One query's ranked rows as ``(id, cosine_sim)``, best first."""
-    return ranked.orderBy("rank").select(id_col, "cosine_sim")
+    """One query's ranked rows as ``(id, cosine_sim)``, best first. At
+    most k rows, so they are sorted in one partition rather than by a
+    range shuffle."""
+    return ranked.coalesce(1).sortWithinPartitions("rank").select(id_col, "cosine_sim")
 
 
 def _one_query(batch, embeddings, query_id, id_col, vec_col, **params) -> DataFrame:

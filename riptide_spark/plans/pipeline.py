@@ -10,7 +10,8 @@ per SURVEY.md §3.1:
               → Arrow route + extraction UDF     # P5-P8 gate, E1-E15
                                                  # (+ escalation, PDF)
               → append output table + manifest   # cache store / S5-S6
-                (row count observed in the write)
+                (rows presented and written, both
+                 observed in the write)
               → per-partition metrics sidecar    # A1-A2
                 (reads back only this run's files)
 
@@ -33,7 +34,7 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract_udf import extract_udf
@@ -165,53 +166,45 @@ def run_extraction_job(
 
     Single-pass design: the UDF output streams straight into the table
     append (no intermediate cache/checkpoint — one materialization of the
-    expensive stage). The append observes its own row count
-    (``DataFrame.observe``), which the manifest commits once and the run
-    returns. The metrics sidecar reads back only the files this run's
-    manifest lists, with the written frame's schema — a column-pruned scan
-    of five small columns that neither infers a schema nor lists the rest
-    of the table, so its cost does not grow with the table, and that is
-    immune to the cached-plan invalidation a resume anti-join would
-    otherwise suffer when its source table is appended to. A run is thus
-    two SQL executions, the table write and the sidecar write, plus the
-    done-side count when the manifest ledger is incomplete."""
+    expensive stage). Every run is two SQL executions, the table write and
+    the sidecar write. The write observes (``DataFrame.observe``) both the
+    rows presented before the resume anti-join and the rows it writes; the
+    manifest commits the written count once. Every surviving input row
+    lands in the output (errors become error rows, never drops), so
+    ``rows_skipped_resume`` = presented − written is exactly what the
+    anti-join dropped, whatever the table's history (orphan files,
+    vacuumed files, compaction crash windows), and 0 on a first run or
+    with ``resume=False``. (Like any accumulator in a shuffle-map stage,
+    the presented count would re-count a map stage that Spark retries.)
+
+    The metrics sidecar reads back only the files this run's manifest
+    lists, with the written frame's schema — a column-pruned scan of five
+    small columns that neither infers a schema nor lists the rest of the
+    table, so its cost does not grow with the table, and that is immune to
+    the cached-plan invalidation a resume anti-join would otherwise suffer
+    when its source table is appended to."""
     run_id = run_id or uuid.uuid4().hex[:12]
     output = TableIO(spark, config.output_path)
 
-    # Resume bookkeeping is FREE on the normal path: rows_skipped_resume
-    # comes from the manifest ledger (sum of committed run row counts), not
-    # a pre-count of the input — at 100 TB an extra full input pass for a
-    # log stat is real money. Exact under the resume contract (every done
-    # url re-appears in the input, which anti-join resume presumes). The
-    # fast path requires ``ledger_complete()``: every data file on disk
-    # accounted for by a committed manifest with a known row count — a
-    # crash between a data write and its manifest commit leaves ORPHAN
-    # files the anti-join still honors but the ledger cannot see, so in
-    # that case fall back to counting the done side instead: a url-only
-    # column-pruned scan of the OUTPUT table, still never a pass over the
-    # input. The done side is read with a url-only schema, so no
-    # schema-inference job runs.
-    skipped = 0
+    presented = Observation()
+    pages = pages.observe(presented, F.count(F.lit(1)).alias("rows"))
     if config.resume and output.exists():
+        # A url-only schema: reading the done side starts no
+        # schema-inference job.
         done = output.read(schema="url string").select("url")
-        if output.ledger_complete():
-            skipped = sum(m.rows for m in output.manifests() if m.committed)
-        else:
-            skipped = done.count()
         pages = resume_anti_join(pages, done)
 
     result = extraction_plan(pages, config).withColumn("run_id", F.lit(run_id))
     result = result.select(*OUTPUT_COLUMNS, "run_id", "url_bucket")
 
     manifest = output.append(result, run_id=run_id, partition_by=["url_bucket"])
+    skipped = presented.get["rows"] - manifest.rows
 
     if config.metrics_path:
         written = output.read(schema=result.schema, files=manifest.files)
         metrics = partition_metrics(written, run_id)
         TableIO(spark, config.metrics_path).append(metrics, run_id=run_id)
 
-    # Every surviving input row lands in the output (errors become error
-    # rows, never drops), so the observed count is the rows written.
     return RunResult(
         run_id=run_id, rows_written=manifest.rows, rows_skipped_resume=skipped
     )

@@ -231,10 +231,11 @@ def test_resume_anti_join_big_done_side_not_broadcast(spark, pages_path, tmp_pat
 
 
 def test_resume_skip_stat_needs_no_input_scan(spark, pages_path, tmp_path, monkeypatch):
-    """rows_skipped_resume must come from the manifest ledger, not a full
-    input count — one extra pass over 100 TB for a log stat is real money.
-    Gate: no DataFrame.count() at all during a resumed run (the written
-    rows are observed in the write itself), and the stat is still exact."""
+    """rows_skipped_resume must be observed in the write (rows presented
+    minus rows written), not counted by a pass over the input or the
+    output table — one extra pass over 100 TB for a log stat is real
+    money. Gate: no DataFrame.count() at all during a resumed run, and the
+    stat is still exact."""
     cfg = ExtractionJobConfig(output_path=str(tmp_path / "out_noscan"), resume=True)
     pages = spark.read.parquet(pages_path).limit(40)
     first = run_extraction_job(spark, pages, cfg)
@@ -280,18 +281,24 @@ def test_batch_ann_plans_stay_equi_join(spark):
         assert "BroadcastNestedLoopJoin" not in plan, plan[:500]
 
 
-def test_single_query_topk_is_a_partial_window_group_limit(spark):
+def test_single_query_topk_is_a_partial_window_group_limit(spark, tmp_path):
     """A single query runs the batch operator on a one-row query frame, so
     for k under ``spark.sql.optimizer.windowGroupLimitThreshold`` its
     top-k is the ``row_number() <= k`` window that Spark splits into a
     Partial WindowGroupLimit right below the shuffle and a Final one above
-    it — each partition ships at most k rows, as TakeOrdered would."""
+    it — each partition ships at most k rows, as TakeOrdered would. The
+    ≤ k ranked rows are then put in rank order without a second (range)
+    shuffle; the index queries, ranked by the same code, neither."""
     import numpy as np
 
     from riptide_spark.operators.similarity import (
         ann_topk_ivf,
+        ann_topk_ivf_index,
         ann_topk_lsh,
+        ann_topk_lsh_index,
         cosine_topk,
+        write_ivf_index,
+        write_lsh_index,
     )
 
     emb = spark.range(64).select(
@@ -313,6 +320,16 @@ def test_single_query_topk_is_a_partial_window_group_limit(spark):
         below = lines[shuffles[0] + 1]
         assert "WindowGroupLimit" in below and "Partial" in below, "\n".join(lines)
         assert not any("TakeOrdered" in line for line in lines)
+        assert not any("rangepartitioning" in line for line in lines), "\n".join(lines)
+
+    query = [float(np.sin(i)) for i in range(8)]
+    write_lsh_index(emb, str(tmp_path / "lsh"), planes=6, tables=2)
+    centroids = write_ivf_index(emb, str(tmp_path / "ivf"), n_centroids=4)
+    for df in (
+        ann_topk_lsh_index(spark, str(tmp_path / "lsh"), query, k=k, planes=6, tables=2),
+        ann_topk_ivf_index(spark, str(tmp_path / "ivf"), centroids, query, k=k),
+    ):
+        assert "rangepartitioning" not in _plan(df), _plan(df)
 
 
 def test_warc_day_layout_prunes_partitions(spark, tmp_path_factory):
