@@ -945,9 +945,11 @@ def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over MinHash-LSH candidate pairs via the
-    label-propagation DataFrame loop (the scale path, O(diameter) rounds)
-    — checked against the oracle's recursive-CTE transitive closure.
+    """Connected components over MinHash-LSH candidate pairs — checked
+    against the oracle's recursive-CTE transitive closure. At oracle scale
+    the candidate graph is below ``driver_edge_threshold``, so this runs the
+    driver union-find; above it the distributed path is min-label
+    propagation with pointer jumping, O(log diameter) rounds.
     ``materialize=True`` checkpoints the band buckets so the MinHash
     cascade is computed once, not once per self-join side."""
     _ensure_lossy_decode(spark)

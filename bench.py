@@ -8,16 +8,13 @@ the driver testdata at ``$SPARK_GRAFT_SF_DIR``.
 
 Modes:
     python bench.py                # one run on local[$SPARK_GRAFT_CPUS]
-    python bench.py --scaling      # same job at local[8] and local[32] →
-                                   # throughput at both + scaling efficiency
-                                   # (the sandbox protocol for the N vs 4N
-                                   # executor rule, BASELINE.md)
+    python bench.py --scaling      # same job at local[1] and local[4], each
+                                   # pinned to cores 0..N-1 → throughput at
+                                   # both + scaling efficiency
     python bench.py --scale-dial   # the dedup/curation cascade + extraction
                                    # at sf0.1 (100k docs) AND sf1 (1M docs):
                                    # wall growth per query + plan gates
                                    # re-asserted at sf1 (VERDICT r2 #1).
-                                   # Results recorded in BENCH_scale_r04.json;
-                                   # only this mode reports them.
 
 Everything diagnostic goes to stderr; stdout carries exactly one JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
@@ -32,14 +29,13 @@ import subprocess
 import sys
 import tempfile
 import time
-import uuid
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SEED = 42
 # sf0.1 → 100k pages (~4-9 KB each): big enough that per-task work dominates
-# fixed job overhead at local[32], so the two-parallelism scaling measurement
+# fixed job overhead, so the two-parallelism scaling measurement
 # reflects the workload, not JVM constants.
 PAGES_PER_SF = 1_000_000
 
@@ -173,12 +169,6 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
         "extract_sec": round(extract_sec, 3),
         "docs_per_sec": round(docs_per_sec, 1),
     }
-
-
-SCALE_DIAL_RECORD = os.path.join(REPO, "BENCH_scale_r04.json")
-# Prior rounds' records seed the best-of-N per-cell minimums (same host,
-# same corpus construction) — merged only where cpus + docs match.
-SCALE_DIAL_PRIOR = (os.path.join(REPO, "BENCH_scale_r03.json"),)
 
 
 def _assert_plan_gates(dfs) -> str:
@@ -407,152 +397,9 @@ def run_scale_dial(cpus: int, sfs=(0.1, 1.0)) -> dict:
         "value": round(max(growth.values()), 3),
         "unit": "ratio",
         "cpus": cpus,
-        "run_id": uuid.uuid4().hex,  # dedup identity in merge_scale_dial_record
         "per_sf": per_sf,
         "growth": growth,
     }
-
-
-def _comparable(prior: dict, latest: dict) -> bool:
-    """Only merge wall times measured under identical conditions: same
-    cpus and same per-sf doc counts — a later --cpus invocation must not
-    silently blend into the best-of-N ratios (ADVICE r3 bench.py:199)."""
-    if prior.get("cpus") != latest.get("cpus"):
-        return False
-    for sf, cell in latest["per_sf"].items():
-        p = prior.get("per_sf", {}).get(sf)
-        if p is not None and p.get("docs") != cell.get("docs"):
-            return False
-    return True
-
-
-def merge_scale_dial_record(run: dict) -> dict:
-    """Accumulate scale-dial runs in the record file and derive growth from
-    per-cell MINIMUMS across runs — this host's throughput drifts up to
-    ~1.7× within one boot (BENCH.md), so a single run's growth ratio can
-    be dominated by noise on either leg; the min per (sf, query) cell is
-    the standard noise-suppressed estimator. Prior-round record files seed
-    the pool; runs with a different cpus count or corpus size are dropped,
-    and queries absent from older runs (the dial grows per round) min over
-    the runs that have them."""
-    pool: list[dict] = []
-    for path in (SCALE_DIAL_RECORD,) + SCALE_DIAL_PRIOR:
-        if os.path.exists(path):
-            try:
-                with open(path) as fh:
-                    prior = json.load(fh)
-                pool.extend(prior.get("runs", [prior]))
-            except (OSError, json.JSONDecodeError):
-                continue
-    # Dedup (r04's record embeds r03's runs after the first merge). Runs
-    # carry a unique run_id stamp; dedup on that so two genuinely distinct
-    # runs whose rounded timings tie are both counted (ADVICE r4 #3).
-    # Legacy runs from prior-round record files lack the stamp and fall
-    # back to payload identity (their timings ARE their identity there).
-    def _key(r: dict) -> str:
-        return r.get("run_id") or json.dumps(r.get("per_sf", {}), sort_keys=True)
-
-    seen: set[str] = {_key(run)}  # incoming run supersedes any pooled copy
-    uniq = []
-    for r in pool:
-        if _key(r) not in seen:
-            seen.add(_key(r))
-            uniq.append(r)
-    runs = [r for r in uniq if _comparable(r, run)] + [run]
-    sfs = list(runs[-1]["per_sf"])
-    lo, hi = sfs[0], sfs[-1]
-    mins = {
-        sf: {
-            q: min(
-                r["per_sf"][sf]["queries"][q]
-                for r in runs
-                if sf in r.get("per_sf", {}) and q in r["per_sf"][sf]["queries"]
-            )
-            for q in runs[-1]["per_sf"][sf]["queries"]
-        }
-        for sf in sfs
-    }
-    growth = {q: round(mins[hi][q] / max(mins[lo][q], 1e-9), 2) for q in mins[lo]}
-    return {
-        "metric": runs[-1]["metric"] + f" (best-of-{len(runs)} per cell)",
-        "value": round(max(growth.values()), 3),
-        "unit": "ratio",
-        "cpus": runs[-1]["cpus"],
-        "growth": growth,
-        "best_wall_sec": mins,
-        "plan_gates": {
-            sf: runs[-1]["per_sf"][sf]["plan_gates"] for sf in sfs
-        },
-        "docs": {sf: runs[-1]["per_sf"][sf]["docs"] for sf in sfs},
-        "dedup_corpus_rows": {
-            sf: runs[-1]["per_sf"][sf]["dedup_corpus_rows"] for sf in sfs
-        },
-        "runs": runs,
-    }
-
-
-def _probe_core_rates(secs: float = 2.0) -> dict[int, float]:
-    """Single-thread compute rate per vCPU (pure Python, no Spark), probed
-    sequentially so cores never contend with each other. The sandbox hosts
-    are sometimes *heterogeneous* — per-core rates spanning 1.3-1.7× on
-    two of five boots — which makes a naive ``taskset -c 0..N-1`` scaling
-    pair measure the hardware spread, not the software: if the low level
-    lands on a fast core and the high level includes slow ones, efficiency
-    is mechanically depressed (and vice versa over-credited)."""
-    probe = (
-        "import time,hashlib\n"
-        f"t0=time.perf_counter();n=0\n"
-        f"while time.perf_counter()-t0<{secs}:\n"
-        "    hashlib.md5((str(n)*50).encode()).hexdigest();n+=1\n"
-        "print(n/(time.perf_counter()-t0))\n"
-    )
-    rates = {}
-    for core in range(os.cpu_count() or 1):
-        out = subprocess.run(
-            ["taskset", "-c", str(core), sys.executable, "-c", probe],
-            capture_output=True,
-            text=True,
-            timeout=60,
-        )
-        try:
-            rates[core] = float(out.stdout.strip())
-        except ValueError:
-            pass
-    return rates
-
-
-def _matched_core_sets(low: int, high: int) -> tuple[str, str, dict]:
-    """Pick rate-matched pinning sets for the two scaling levels.
-
-    The high level gets the ``high`` fastest cores (tightest spread at the
-    top of the distribution); the low level gets the ``low`` cores of that
-    SAME set whose mean rate is closest to the set's mean — so the
-    hardware throughput ratio between the levels is ~1 by construction and
-    the measured ratio is the software's. Falls back to 0..N-1 if probing
-    fails (no taskset)."""
-    try:
-        rates = _probe_core_rates()
-    except (OSError, subprocess.SubprocessError):
-        rates = {}
-    if len(rates) < high:
-        return f"0-{low - 1}", f"0-{high - 1}", {}
-    chosen = sorted(rates, key=rates.get, reverse=True)[:high]
-    mean = sum(rates[c] for c in chosen) / high
-    low_set = sorted(chosen, key=lambda c: abs(rates[c] - mean))[:low]
-    probe_info = {
-        "core_rates": {str(c): round(rates[c]) for c in sorted(rates)},
-        "high_cores": sorted(chosen),
-        "low_cores": sorted(low_set),
-        "spread_all": round(max(rates.values()) / min(rates.values()), 3),
-        "hw_ratio_low_over_high": round(
-            (sum(rates[c] for c in low_set) / low) / mean, 3
-        ),
-    }
-    return (
-        ",".join(str(c) for c in sorted(low_set)),
-        ",".join(str(c) for c in sorted(chosen)),
-        probe_info,
-    )
 
 
 def run_scaling(sf_dir: str, low: int = 1, high: int = 4, reps: int = 2) -> dict:
@@ -560,29 +407,16 @@ def run_scaling(sf_dir: str, low: int = 1, high: int = 4, reps: int = 2) -> dict
 
     Each level runs under ``taskset`` so JVM + Python workers share
     exactly N cores — a faithful emulation of an N-core cluster on one
-    box. Without pinning, a "local[2]" JVM spills its scan/shuffle/write
-    threads onto the other 30 cores and over-measures small-N throughput,
-    understating scaling. Best-of-``reps`` per level suppresses the
-    sandbox host's 5-15% CPU-steal noise. Default pair 1→4 keeps both
-    levels inside the region where this box's per-core throughput is flat.
-
-    Cores are NOT fixed at 0..N-1: the host's vCPUs are sometimes
-    heterogeneous (1.3-1.7× per-core spread measured on two boots; on the
-    round-5 boot core 0 probed the *fastest* while cores 2-3 ran at ~0.8×,
-    capping a naive 1→4 pair at ~0.88 from hardware alone). Both levels
-    are pinned to rate-matched cores from a fresh probe
-    (``_matched_core_sets``) so the measured ratio isolates the software;
-    the probe data rides along in the payload for audit.
-    """
-    low_pin, high_pin, probe_info = (
-        _matched_core_sets(low, high)
-        if os.path.exists("/usr/bin/taskset")
-        else (None, None, {})
-    )
+    box: level N is pinned to cores ``0-{N-1}`` when ``taskset`` exists.
+    Without pinning, a "local[1]" JVM spills its scan/shuffle/write
+    threads onto the host's other cores and over-measures small-N
+    throughput, understating scaling. Best-of-``reps`` per level
+    suppresses CPU-steal noise."""
+    pinned = os.path.exists("/usr/bin/taskset")
     results = {}
-    for cpus, pin_spec in ((low, low_pin), (high, high_pin)):
+    for cpus in (low, high):
         best = None
-        pin = ["taskset", "-c", pin_spec] if pin_spec else []
+        pin = ["taskset", "-c", f"0-{cpus - 1}"] if pinned else []
         for _ in range(reps):
             proc = subprocess.run(
                 pin
@@ -610,13 +444,14 @@ def run_scaling(sf_dir: str, low: int = 1, high: int = 4, reps: int = 2) -> dict
             f"extract_local{low}": results[low]["queries"]["extract_pipeline"],
             f"extract_local{high}": results[high]["queries"]["extract_pipeline"],
         },
-        "core_matching": probe_info,
     }
 
 
 def main() -> None:
     parser = argparse.ArgumentParser()
-    parser.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    parser.add_argument(
+        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    )
     parser.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     )
@@ -628,10 +463,6 @@ def main() -> None:
 
     if args.scale_dial:
         payload = run_scale_dial(args.cpus)
-        payload = merge_scale_dial_record(payload)
-        with open(SCALE_DIAL_RECORD, "w") as fh:
-            json.dump(payload, fh, indent=1)
-        log(f"[bench] scale-dial recorded to {SCALE_DIAL_RECORD}")
     elif args.scaling:
         payload = run_scaling(args.sf_dir, args.scale_low, args.scale_high)
     else:

@@ -29,13 +29,12 @@ DEFAULT_MINHASHES = 8
 DEFAULT_SIMHASH_BITS = 16
 # Boilerplate-flood guard, ON by default: an LSH bucket holding k docs
 # contributes k(k-1)/2 candidate pairs, and real web corpora put millions of
-# byte-identical boilerplate pages into ONE bucket. Buckets above the cap are
-# excluded from the pair join — their members are near-identical en masse and
-# are exact-dup territory, handled linearly by ``exact_duplicate_groups``
-# (one groupBy) instead of a quadratic pair expansion. 1000 caps any single
-# bucket at ≤499.5k pairs (bounded task memory) while being far above any
-# honest near-dup cluster size; pass ``bucket_size_cap=None`` to recover the
-# exhaustive semantics.
+# byte-identical boilerplate pages into ONE bucket. Buckets above the cap skip
+# the pair self-join and contribute hub–spoke pairs instead (min-id member to
+# each other member: k−1 rows, connectivity kept; see ``_pairs_from_buckets``).
+# 1000 caps any single bucket's self-join at ≤499.5k pairs (bounded task
+# memory) while being far above any honest near-dup cluster size; pass
+# ``bucket_size_cap=None`` to disable the cap.
 DEFAULT_BUCKET_CAP = 1000
 
 # MinHash affine-rehash family: one md5-derived base hash per shingle, then
@@ -99,16 +98,6 @@ def shingles_from_words(words: Column, k: int = DEFAULT_SHINGLE) -> Column:
     ).otherwise(F.array(F.array_join(words, " ")))
 
 
-def shingles(text: Column, k: int = DEFAULT_SHINGLE) -> Column:
-    """k-word shingles of the lowercased text (distinct not applied).
-
-    Single-expression form for composability with the SQL-template
-    oracles; the operator hot paths use :func:`shingles_from_words` over a
-    pre-projected words column instead (see its docstring for the
-    per-element re-evaluation hazard)."""
-    return shingles_from_words(_words(F.lower(text)), k)
-
-
 def _hash60(col: Column) -> Column:
     """First 15 hex chars of md5 as a bigint (portable across engines)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
@@ -152,78 +141,54 @@ def minhash_array(hs: Column, num_hashes: int = DEFAULT_MINHASHES) -> Column:
     return F.transform(mins, lambda v: F.nullif(v, F.lit(MERSENNE31).cast("bigint")))
 
 
-def minhash_from_hashes(hs: Column, num_hashes: int = DEFAULT_MINHASHES) -> list[Column]:
-    """k min-hashes from a base-hash array: min over (a_i·h + b_i) mod p.
+def minhash_signature(text: Column, num_hashes: int = DEFAULT_MINHASHES, k: int = DEFAULT_SHINGLE) -> list[Column]:
+    """Per-slot reference form of :func:`minhash_signatures`: one
+    ``array_min`` traversal per slot, as the SQL oracles render it, over
+    an inline words split. Slow (the split is re-evaluated per shingle,
+    see :func:`shingles_from_words`); tests pin the one-pass operator
+    path to it."""
+    hs = base_shingle_hashes(shingles_from_words(_words(F.lower(text)), k))
 
-    Single-expression form for composability (each column re-derives its
-    own ``array_min`` traversal); the operator hot paths stage
-    :func:`minhash_array` in its own projection instead."""
-
-    def _rehasher(i: int):
+    def _slot(i: int) -> Column:
         a, b = rehash_params(i)
-        return lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31
+        return F.array_min(F.transform(hs, lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE31))
 
-    return [
-        F.array_min(F.transform(hs, _rehasher(i))).alias(f"minhash_{i}")
-        for i in range(num_hashes)
-    ]
+    return [_slot(i).alias(f"minhash_{i}") for i in range(num_hashes)]
 
 
-def minhash_from_shingles(sh: Column, num_hashes: int = DEFAULT_MINHASHES) -> list[Column]:
-    return minhash_from_hashes(base_shingle_hashes(sh), num_hashes)
+def _features(df: DataFrame, text_col: str, id_col: str, k: int, num_hashes: int) -> DataFrame:
+    """(id, sh, mh): the k-word shingles and their one-pass MinHash array,
+    the one featurization of the MinHash family. Staged projections so the
+    words split is a bound column when the shingle lambda iterates over it
+    (see :func:`shingles_from_words`) and ``mh`` is one expression that
+    later slices reference, not re-derive. ``mh`` runs over the raw
+    shingles: a min over a multiset equals the min over its set."""
+    worded = df.select(F.col(id_col), _words(F.lower(F.col(text_col))).alias("w"))
+    shingled = worded.select(id_col, shingles_from_words(F.col("w"), k).alias("sh"))
+    return shingled.select(
+        id_col, "sh", minhash_array(base_shingle_hashes(F.col("sh")), num_hashes).alias("mh")
+    )
 
 
 def minhash_signatures(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                        num_hashes: int = DEFAULT_MINHASHES) -> DataFrame:
-    """Per-doc MinHash signature. Staged projections so (a) the words
-    split is a bound column when the shingle lambda iterates over it (see
-    :func:`shingles_from_words`) and (b) the md5 base-hash array is one
-    expression referenced num_hashes times — Catalyst's CollapseProject
-    keeps non-cheap multiply-referenced expressions un-inlined, so the
-    split and the md5 scan each run once."""
-    worded = df.select(F.col(id_col), _words(F.lower(F.col(text_col))).alias("w"))
-    hashed = worded.select(
-        F.col(id_col),
-        base_shingle_hashes(shingles_from_words(F.col("w"))).alias("hs"),
-    )
-    staged = hashed.select(id_col, minhash_array(F.col("hs"), num_hashes).alias("mh"))
-    return staged.select(
+    """Per-doc MinHash signature, one ``minhash_{i}`` column per slot."""
+    feat = _features(df, text_col, id_col, DEFAULT_SHINGLE, num_hashes)
+    return feat.select(
         id_col, *[F.col("mh")[i].alias(f"minhash_{i}") for i in range(num_hashes)]
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = DEFAULT_MINHASHES, k: int = DEFAULT_SHINGLE) -> list[Column]:
-    """k min-hashes of the text's k-word shingles (single-expression form;
-    prefer :func:`minhash_signatures` which shares the base-hash array)."""
-    return minhash_from_shingles(shingles(text, k), num_hashes)
-
-
-def _band_bucket_structs(num_hashes: int, band_size: int) -> list[Column]:
+def _explode_bands(feat: DataFrame, id_col: str, num_hashes: int, band_size: int) -> DataFrame:
+    """(id, band, bucket): each band of ``mh`` hashed to a bucket id."""
     bands = []
     for b in range(num_hashes // band_size):
-        cols = [F.col(f"minhash_{b * band_size + j}") for j in range(band_size)]
+        cols = [F.col("mh")[b * band_size + j] for j in range(band_size)]
         bucket = F.md5(F.concat_ws(",", *[c.cast("string") for c in cols]))
         bands.append(F.struct(F.lit(b).alias("band"), bucket.alias("bucket")))
-    return bands
-
-
-def _explode_bands(sig: DataFrame, id_col: str, num_hashes: int, band_size: int) -> DataFrame:
-    bands = _band_bucket_structs(num_hashes, band_size)
-    return sig.select(
+    return feat.select(
         F.col(id_col), F.explode(F.array(*bands)).alias("bb")
     ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-
-def _distinct_shingle_frame(
-    df: DataFrame, text_col: str, id_col: str, k: int
-) -> DataFrame:
-    """(id, dsh) with the words split bound in its own projection — see
-    :func:`shingles_from_words` for why the split must not be inlined."""
-    worded = df.select(F.col(id_col), _words(F.lower(F.col(text_col))).alias("w"))
-    return worded.select(
-        F.col(id_col),
-        F.array_distinct(shingles_from_words(F.col("w"), k)).alias("dsh"),
-    )
 
 
 def minhash_band_buckets(
@@ -235,42 +200,28 @@ def minhash_band_buckets(
 ) -> DataFrame:
     """LSH banding: hash each band of the signature to a bucket id; documents
     sharing any (band, bucket) are near-dup candidates."""
-    sig = minhash_signatures(df, text_col, id_col, num_hashes)
-    return _explode_bands(sig, id_col, num_hashes, band_size)
+    feat = _features(df, text_col, id_col, DEFAULT_SHINGLE, num_hashes)
+    return _explode_bands(feat, id_col, num_hashes, band_size)
 
 
 def _pairs_from_buckets(
-    buckets: DataFrame,
-    id_col: str,
-    bucket_size_cap: int | None = None,
-    overflow: str = "star",
+    buckets: DataFrame, id_col: str, bucket_size_cap: int | None = None
 ) -> DataFrame:
-    """Self-join each (band, bucket) group into candidate pairs.
+    """Self-join each (band, bucket) group into candidate pairs (a < b).
 
     ``bucket_size_cap`` guards the 100 TB pathology: a bucket holding k
     documents contributes k² join rows, and boilerplate floods (millions
     of byte-identical pages) put millions of docs in ONE bucket. Buckets
-    above the cap skip the quadratic self-join; what happens to them is
-    ``overflow``:
-
-    * ``"star"`` (default) — emit hub–spoke pairs only: the bucket's
-      min-id member paired with each other member, k−1 rows instead of
-      k²/2. Every star pair genuinely shares a bucket (a strict subset
-      of the uncapped pair set — never a false candidate the uncapped
-      oracle lacks), and within-bucket connectivity is preserved
-      EXACTLY, so connected-components / curation clusters match the
-      uncapped semantics whenever downstream verification accepts the
-      hub–spoke edges (always, for byte-identical floods; for distinct
-      near-dup floods the hub is a verified witness for each spoke).
-    * ``"drop"`` — previous behaviour: over-cap buckets contribute no
-      pairs; their members are byte-near-identical en masse and belong
-      to the linear exact-dup pass (``exact_duplicate_groups``). Loses
-      connectivity for over-cap buckets of DISTINCT near-dup texts
-      (ADVICE r3).
-
-    ``None`` disables the guard entirely (exhaustive semantics)."""
-    if overflow not in ("star", "drop"):
-        raise ValueError(f"overflow must be 'star' or 'drop', got {overflow!r}")
+    above the cap skip the quadratic self-join and emit hub–spoke pairs
+    only: the bucket's min-id member paired with each other member, k−1
+    rows instead of k²/2. Every star pair genuinely shares a bucket (a
+    strict subset of the uncapped pair set — never a false candidate the
+    uncapped oracle lacks), and within-bucket connectivity is preserved
+    EXACTLY, so connected-components / curation clusters match the
+    uncapped semantics whenever downstream verification accepts the
+    hub–spoke edges (always, for byte-identical floods; for distinct
+    near-dup floods the hub is a verified witness for each spoke).
+    ``None`` disables the cap."""
     star = None
     if bucket_size_cap is not None:
         sizes = buckets.groupBy("band", "bucket").agg(
@@ -278,15 +229,12 @@ def _pairs_from_buckets(
             F.min(id_col).alias("_hub"),
         )
         tagged = buckets.join(sizes, ["band", "bucket"])
-        if overflow == "star":
-            # Hub = min id ⇒ hub < spoke, matching the (a < b) convention.
-            star = (
-                tagged.filter(F.col("_bucket_n") > bucket_size_cap)
-                .filter(F.col(id_col) != F.col("_hub"))
-                .select(
-                    F.col("_hub").alias("id_a"), F.col(id_col).alias("id_b")
-                )
-            )
+        # Hub = min id ⇒ hub < spoke, matching the (a < b) convention.
+        star = (
+            tagged.filter(F.col("_bucket_n") > bucket_size_cap)
+            .filter(F.col(id_col) != F.col("_hub"))
+            .select(F.col("_hub").alias("id_a"), F.col(id_col).alias("id_b"))
+        )
         buckets = tagged.filter(F.col("_bucket_n") <= bucket_size_cap).drop(
             "_bucket_n", "_hub"
         )
@@ -311,7 +259,6 @@ def minhash_candidate_pairs(
     band_size: int = 2,
     materialize: bool = False,
     bucket_size_cap: int | None = DEFAULT_BUCKET_CAP,
-    overflow: str = "star",
 ) -> DataFrame:
     """Distinct candidate pairs (a < b) sharing at least one LSH bucket.
 
@@ -320,14 +267,13 @@ def minhash_candidate_pairs(
     self-join, so the expensive shingle+MinHash scan runs ONCE instead of
     once per join side. Lazy by default for composability.
     ``bucket_size_cap`` (default ``DEFAULT_BUCKET_CAP``) bounds the
-    per-bucket pair blow-up at corpus scale; over-cap buckets degrade to
-    linear hub–spoke pairs by default (``overflow="star"``) instead of
-    losing all pairs (see ``_pairs_from_buckets``); ``None`` disables
-    the guard."""
+    per-bucket pair blow-up at corpus scale: over-cap buckets degrade to
+    linear hub–spoke pairs (see ``_pairs_from_buckets``); ``None``
+    disables the cap."""
     buckets = minhash_band_buckets(df, text_col, id_col, num_hashes, band_size)
     if materialize:
         buckets = buckets.localCheckpoint()
-    return _pairs_from_buckets(buckets, id_col, bucket_size_cap, overflow)
+    return _pairs_from_buckets(buckets, id_col, bucket_size_cap)
 
 
 def ngram_jaccard_pairs(
@@ -336,91 +282,45 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     k: int = DEFAULT_SHINGLE,
     threshold: float = 0.8,
-    candidates: DataFrame | None = None,
     num_hashes: int = DEFAULT_MINHASHES,
     band_size: int = 2,
     bucket_size_cap: int | None = DEFAULT_BUCKET_CAP,
-    exhaustive: bool = False,
-    overflow: str = "star",
 ) -> DataFrame:
-    """Exact n-gram Jaccard verification over LSH candidate pairs.
+    """Exact n-gram Jaccard verification over MinHash-LSH candidate pairs.
 
-    The classic two-stage cascade: MinHash-LSH banding generates candidate
-    pairs (``candidates`` defaults to :func:`minhash_candidate_pairs` on
-    the same corpus), then each candidate's exact Jaccard is computed by
-    joining the two documents' distinct-shingle arrays and intersecting
-    them JVM-side (``array_intersect``) — no shingle self-join.
+    The classic two-stage cascade: the candidates are exactly
+    :func:`minhash_candidate_pairs` on the same corpus (same banding, same
+    ``bucket_size_cap`` hub–spoke rule), then each candidate's exact
+    Jaccard is computed by joining the two documents' distinct-shingle
+    arrays and intersecting them JVM-side (``array_intersect``) — no
+    shingle self-join. One feature frame (distinct shingles next to the
+    MinHash array) is ``localCheckpoint``-ed, so its four uses (two
+    bucket-join sides, two verify-join sides) read materialized
+    partitions instead of re-running the shingle scan.
 
     Scale shape: the candidate set is tiny relative to the corpus (only
     near-duplicates collide in a band bucket), so the verification cost is
-    two |pairs|⋈|docs| equi-joins on the id key — linear in corpus size.
-    The previous shingle-equi-join formulation was quadratic in the
-    document frequency of the hottest shingle (a boilerplate shingle shared
-    by 10^6 docs contributes 10^12 join rows); the cascade removes that
-    blow-up entirely.
+    two |pairs|⋈|docs| equi-joins on the id key — linear in corpus size,
+    where a shingle equi-join is quadratic in the document frequency of
+    the hottest shingle (a boilerplate shingle shared by 10^6 docs
+    contributes 10^12 join rows).
 
     Recall: a pair at Jaccard J survives banding with probability
     1-(1-J^band_size)^(num_hashes/band_size); at the default (4 bands × 2
     hashes) and threshold 0.8 that is ≥ 0.983, and exact duplicates (J=1)
     are always candidates. Pairs the LSH misses are not verified — the
     accepted trade of the LSH-verify literature (Leskovec et al., MMDS
-    ch.3). ``exhaustive=True`` recovers the complete semantics (candidates
-    = every pair sharing at least one shingle, found by a shingle
-    equi-join) — correct but quadratic in the document frequency of the
-    hottest shingle, so reserve it for bounded corpora.
-
-    .. note:: Since round 2 this function verifies LSH candidates only by
-       default (previously it was the exhaustive shingle join); internal
-       candidate generation applies ``bucket_size_cap`` (default
-       ``DEFAULT_BUCKET_CAP``, ``None`` disables) — the boilerplate-flood
-       guard, see ``_pairs_from_buckets``.
+    ch.3).
     """
-    exhaustive_sh: DataFrame | None = None
-    if exhaustive and candidates is None:
-        # Materialize the shingle frame once: it feeds both sides of the
-        # candidate self-join AND both verify join sides below — without
-        # the checkpoint the O(docs × shingles) scan would run four times.
-        exhaustive_sh = _distinct_shingle_frame(df, text_col, id_col, k).localCheckpoint()
-        ex = exhaustive_sh.select(F.col(id_col), F.explode("dsh").alias("s"))
-        candidates = (
-            ex.alias("l")
-            .join(
-                ex.alias("r"),
-                (F.col("l.s") == F.col("r.s"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-            )
-            .select(
-                F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-            )
-            .distinct()
-        )
-    if candidates is None:
-        # One scan computes distinct shingles AND the MinHash signature
-        # (min over distinct shingles == min over all shingles), then the
-        # feature frame is localCheckpoint-ed so the four downstream uses
-        # (two bucket-join sides, two shingle-join sides) read the
-        # materialized partitions instead of recomputing the shingle scan.
-        feat = _distinct_shingle_frame(df, text_col, id_col, k)
-        feat = feat.select(
-            id_col, "dsh", base_shingle_hashes(F.col("dsh")).alias("hs")
-        )
-        feat = feat.select(
-            id_col, "dsh", minhash_array(F.col("hs"), num_hashes).alias("mh")
-        )
-        feat = feat.select(
-            id_col,
-            "dsh",
-            *[F.col("mh")[i].alias(f"minhash_{i}") for i in range(num_hashes)],
-        ).localCheckpoint()
-        buckets = _explode_bands(feat, id_col, num_hashes, band_size)
-        candidates = _pairs_from_buckets(buckets, id_col, bucket_size_cap, overflow)
-        sh = feat.select(id_col, "dsh")
-    elif exhaustive_sh is not None:
-        sh = exhaustive_sh
-    else:
-        sh = _distinct_shingle_frame(df, text_col, id_col, k)
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("dsh").alias("dsh_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("dsh").alias("dsh_b"))
+    feat = (
+        _features(df, text_col, id_col, k, num_hashes)
+        .select(id_col, F.array_distinct("sh").alias("dsh"), "mh")
+        .localCheckpoint()
+    )
+    buckets = _explode_bands(feat, id_col, num_hashes, band_size)
+    candidates = _pairs_from_buckets(buckets, id_col, bucket_size_cap)
+    sa = feat.select(F.col(id_col).alias("id_a"), F.col("dsh").alias("dsh_a"))
+    sb = feat.select(F.col(id_col).alias("id_b"), F.col("dsh").alias("dsh_b"))
     scored = (
         candidates.join(sa, "id_a")
         .join(sb, "id_b")
@@ -503,6 +403,25 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
+def _simhash_buckets(fp: DataFrame, id_col: str, bits: int, bands: int) -> DataFrame:
+    """(id, band, bucket): the ``bits``-bit fingerprint split into ``bands``
+    equal bit-slices, one row per slice."""
+    if bits % bands:
+        raise ValueError(f"bits={bits} must divide evenly into bands={bands}")
+    width = bits // bands
+    mask = (1 << width) - 1
+    band_structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.shiftright(F.col("simhash"), b * width).bitwiseAND(F.lit(mask)).alias("bucket"),
+        )
+        for b in range(bands)
+    ]
+    return fp.select(
+        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
+    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
+
+
 def simhash_near_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -512,7 +431,6 @@ def simhash_near_pairs(
     bands: int = 4,
     bucket_size_cap: int | None = DEFAULT_BUCKET_CAP,
     materialize: bool = False,
-    overflow: str = "star",
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -541,26 +459,11 @@ def simhash_near_pairs(
             f"max_hamming={max_hamming} needs bands > max_hamming (got {bands}): "
             "pigeonhole blocking only guarantees recall up to bands-1 bit flips"
         )
-    if bits % bands:
-        raise ValueError(f"bits={bits} must divide evenly into bands={bands}")
-    width = bits // bands
-    mask = (1 << width) - 1
     fp = simhash_fingerprints(df, text_col, id_col, bits)
     if materialize:
         fp = fp.localCheckpoint()
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftright(F.col("simhash"), b * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    buckets = fp.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    cand = _pairs_from_buckets(buckets, id_col, bucket_size_cap, overflow)
+    buckets = _simhash_buckets(fp, id_col, bits, bands)
+    cand = _pairs_from_buckets(buckets, id_col, bucket_size_cap)
     fa = fp.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
     fb = fp.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
     return (

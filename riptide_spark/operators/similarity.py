@@ -149,6 +149,12 @@ def _table_salt(table: int) -> str:
     return "" if table == 0 else f"t{table}:"
 
 
+# Plane components are precomputed for dims below this and read from a
+# literal array inside the projection lambda; wider vectors fall back to
+# the md5 expression for the dims past it.
+_LITERAL_DIMS = 256
+
+
 def _plane_component(dim_index: Column, plane: int, table: int = 0) -> Column:
     """Deterministic pseudo-random hyperplane component in [-0.5, 0.5):
     md5-derived, reproducible in any engine."""
@@ -157,16 +163,39 @@ def _plane_component(dim_index: Column, plane: int, table: int = 0) -> Column:
     return h / F.lit(4294967296.0) - 0.5
 
 
+def _plane_components(plane: int, table: int, dims: int) -> tuple[float, ...]:
+    """The first ``dims`` components of one plane, as :func:`_plane_component`
+    computes them. ``h / 2^32 - 0.5`` is exact in double, so the literal
+    and the expression agree bit for bit."""
+    import hashlib
+
+    salt = _table_salt(table)
+    return tuple(
+        int(hashlib.md5(f"{salt}plane{plane}:{i}".encode()).hexdigest()[:8], 16)
+        / 4294967296.0
+        - 0.5
+        for i in range(dims)
+    )
+
+
 def lsh_signature(vec: Column, planes: int = 8, table: int = 0) -> Column:
     """Random-hyperplane sign signature packed into an int. ``table``
     selects an independent plane family (OR-construction); table 0 is the
-    original family."""
+    original family. Components come from a literal per-plane array (one
+    multiply-add per dim), the md5 expression only past ``_LITERAL_DIMS``."""
     dims = F.transform(vec, lambda x, i: F.struct(x.alias("v"), i.alias("i")))
 
     def _projector(plane: int):
+        # One string literal cast to array<double> (folded to a constant by
+        # the optimizer), not 256 literal nodes: those cost ~1 s of py4j
+        # calls and analysis per signature. ``repr`` round-trips a double.
+        comps = ",".join(repr(c) for c in _plane_components(plane, table, _LITERAL_DIMS))
+        lits = F.split(F.lit(comps), ",").cast("array<double>")
         # NB: a plain `lambda acc, d, p=p:` would read as a 3-arg lambda to
         # PySpark's arity inspection; close over the plane index instead.
-        return lambda acc, d: acc + d["v"] * _plane_component(d["i"], plane, table)
+        return lambda acc, d: acc + d["v"] * F.coalesce(
+            F.get(lits, d["i"]), _plane_component(d["i"], plane, table)
+        )
 
     sig = F.lit(0)
     for p in range(planes):
@@ -180,15 +209,12 @@ def lsh_signature_py(vec, planes: int = 8, table: int = 0) -> int:
     md5-derived plane components and the same left-fold summation order as
     Spark's ``aggregate`` (element order, scalar adds), so the float
     rounding (and thus every sign) matches exactly."""
-    import hashlib
-
-    salt = _table_salt(table)
     sig = 0
     for p in range(planes):
+        comps = _plane_components(p, table, len(vec))
         proj = 0.0
-        for i, v in enumerate(vec):
-            h = int(hashlib.md5(f"{salt}plane{p}:{i}".encode()).hexdigest()[:8], 16)
-            proj += float(v) * (h / 4294967296.0 - 0.5)
+        for v, c in zip(vec, comps):
+            proj += float(v) * c
         if proj > 0:
             sig += 1 << p
     return sig

@@ -58,29 +58,11 @@ def test_minhash_buckets_stay_under_cap(spark, sf_dir):
 
 @pytest.mark.parametrize("sf_dir", SF_DIRS)
 def test_simhash_slices_stay_under_cap(spark, sf_dir):
-    # Mirror simhash_near_pairs' banding (32 bits / 4 slices of 8).
-    from riptide_spark.operators.dedup import simhash_fingerprints
+    # simhash_near_pairs' own banding at its defaults (32 bits / 4 slices).
+    from riptide_spark.operators.dedup import _simhash_buckets, simhash_fingerprints
 
     corpus = _dup_corpus(spark, sf_dir)
-    fp = simhash_fingerprints(corpus, bits=32)
-    width, bands = 8, 4
-    mask = (1 << width) - 1
-    slices = fp.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("simhash"), b * width)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
+    slices = _simhash_buckets(simhash_fingerprints(corpus, bits=32), "doc_id", 32, 4)
     biggest = _max_bucket(slices)
     assert biggest < DEFAULT_BUCKET_CAP, (
         f"{sf_dir}: largest SimHash slice group {biggest} ≥ cap "

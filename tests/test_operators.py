@@ -104,6 +104,35 @@ def test_minhash_lsh_recall_on_duplicates(spark, docs):
         assert (i, i + 100000) in candidates
 
 
+@pytest.mark.parametrize("cap", ["default", 10, 2])
+def test_ngram_candidates_are_minhash_candidates(spark, docs, cap):
+    """ngram_jaccard_pairs has one candidate path, minhash_candidate_pairs':
+    at threshold 0 every candidate verifies, so the two pair sets are
+    equal — with the default cap, and with caps that push buckets onto
+    the hub–spoke rule."""
+    from riptide_spark.operators.dedup import (
+        DEFAULT_BUCKET_CAP,
+        minhash_candidate_pairs,
+        ngram_jaccard_pairs,
+    )
+
+    cap = DEFAULT_BUCKET_CAP if cap == "default" else cap
+    corpus = docs.select("doc_id", "text").unionAll(
+        docs.filter(F.col("doc_id") % 20 == 0).select(
+            (F.col("doc_id") + 100000).alias("doc_id"), "text"
+        )
+    )
+    ngram = {
+        (r["id_a"], r["id_b"])
+        for r in ngram_jaccard_pairs(corpus, threshold=0.0, bucket_size_cap=cap).collect()
+    }
+    minhash = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_candidate_pairs(corpus, bucket_size_cap=cap).collect()
+    }
+    assert ngram and ngram == minhash
+
+
 def test_cosine_topk_operator_matches_sql(spark, embeddings):
     from riptide_spark.operators.similarity import cosine_topk
 
@@ -458,31 +487,23 @@ def test_minhash_bucket_size_cap_drops_flood_buckets(spark):
     uncapped = minhash_candidate_pairs(corpus, bucket_size_cap=None).collect()
     assert sum(1 for r in uncapped if r["id_a"] < 100) == 30 * 29 // 2
 
-    capped = {(r["id_a"], r["id_b"])
-              for r in minhash_candidate_pairs(
-                  corpus, bucket_size_cap=10, overflow="drop").collect()}
-    # overflow="drop": flood buckets (30 > cap) contribute no pairs; the
-    # small pair survives.
-    assert capped == {(100, 101)}
-
-    # overflow="star" (the default): the flood degrades to linear
-    # hub–spoke pairs — 29 edges from hub 0 instead of 435 — keeping the
-    # flood connected while staying O(k).
+    # Over the cap the flood degrades to linear hub–spoke pairs — 29
+    # edges from hub 0 instead of 435 — keeping the flood connected while
+    # staying O(k); the small pair survives.
     star = {(r["id_a"], r["id_b"])
             for r in minhash_candidate_pairs(corpus, bucket_size_cap=10).collect()}
     assert star == {(100, 101)} | {(0, i) for i in range(1, 30)}
     # Every star pair is a genuine candidate (subset of the uncapped set).
     assert star <= {(r["id_a"], r["id_b"]) for r in uncapped}
 
-    # The cap threads through ngram_jaccard_pairs' INTERNAL candidate
-    # generation too (round-2 'What's wrong #1').
+    # The cap threads through ngram_jaccard_pairs' internal candidate
+    # generation too: the byte-identical spokes verify at J = 1.
     verified = {(r["id_a"], r["id_b"])
-                for r in ngram_jaccard_pairs(
-                    corpus, bucket_size_cap=10, overflow="drop").collect()}
-    assert verified == {(100, 101)}
+                for r in ngram_jaccard_pairs(corpus, bucket_size_cap=10).collect()}
+    assert verified == {(100, 101)} | {(0, i) for i in range(1, 30)}
 
-    # ... and the excluded flood is fully handled by the linear exact-dup
-    # pass: one fingerprint group containing all 30 members.
+    # ... and the linear exact-dup pass sees the flood as one fingerprint
+    # group containing all 30 members.
     groups = exact_duplicate_groups(corpus).collect()
     flood_groups = [g for g in groups if g["keep_id"] == 0]
     assert len(flood_groups) == 1 and flood_groups[0]["n_docs"] == 30
@@ -596,18 +617,32 @@ def test_star_overflow_keeps_distinct_flood_connected(spark):
     assert len(sh_comps) == 1
 
 
-def test_ngram_jaccard_exhaustive_escape_hatch(spark):
-    """exhaustive=True recovers complete pair coverage: a pair the LSH
-    banding can miss (moderate Jaccard) is still verified."""
-    from riptide_spark.operators.dedup import ngram_jaccard_pairs
+@pytest.mark.skipif(
+    not os.path.isdir("/root/testdata/sf0.01"), reason="sf0.01 testdata not present"
+)
+def test_lsh_signature_matches_driver_twin_every_table(spark):
+    """The Spark signature reads plane components from literal arrays below
+    256 dims and from the md5 expression past them; both must stay
+    bit-identical to lsh_signature_py for every plane family."""
+    from riptide_spark.operators.similarity import lsh_signature, lsh_signature_py
 
-    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    b = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
-    corpus = spark.createDataFrame([(1, a), (2, b)], "doc_id long, text string")
-    rows = ngram_jaccard_pairs(corpus, threshold=0.5, exhaustive=True).collect()
-    assert [(r["id_a"], r["id_b"]) for r in rows] == [(1, 2)]
-    # 8 shared 3-shingles of 8 (a) and 12 (b): J = 8/12.
-    assert abs(rows[0]["jaccard"] - round(8 / 12, 6)) < 1e-9
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    wide = spark.createDataFrame(
+        [(-1, [((i * 37) % 101 - 50) / 50.0 for i in range(300)])],
+        "vec_id long, embedding array<double>",
+    )
+    rows = emb.select("vec_id", "embedding").unionByName(wide).select(
+        "vec_id",
+        "embedding",
+        *[
+            lsh_signature(F.col("embedding").cast("array<double>"), 8, table=t).alias(f"s{t}")
+            for t in range(3)
+        ],
+    ).collect()
+    assert len(rows) > 100 and any(len(r["embedding"]) == 300 for r in rows)
+    for r in rows:
+        for t in range(3):
+            assert lsh_signature_py(r["embedding"], 8, table=t) == r[f"s{t}"], (r["vec_id"], t)
 
 
 def test_ivf_index_partition_pruning(spark, tmp_path):
