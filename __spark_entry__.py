@@ -199,40 +199,44 @@ def _q_events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return windowed_event_counts(spark.table("events"))
 
 
-def _q_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunker spans over documents.text (non-SQL op)."""
+def _chunk_stats(
+    spark: SparkSession, sf_dir: str, chunker: Callable, column: str
+) -> DataFrame:
+    """Per-doc ``(n_chunks, total_tokens, last_end_pos)`` of ``chunker``
+    applied to each value of ``documents.<column>``: the one pandas UDF the
+    chunker queries share."""
     _ensure_lossy_decode(spark)
-    from pyspark.sql import types as T
-
-    from riptide_spark.functions.chunking import sliding_window_chunks
-
     _register_views(spark, sf_dir)
 
-    schema = T.StructType(
-        [
-            T.StructField("n_chunks", T.IntegerType()),
-            T.StructField("total_tokens", T.LongType()),
-            T.StructField("last_end_pos", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def chunk_stats(text: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf("n_chunks int, total_tokens long, last_end_pos long")
+    def chunk_stats(values: pd.Series) -> pd.DataFrame:
         rows = []
-        for value in text:
-            chunks = sliding_window_chunks(value or "", window_size=60, overlap=12)
+        for value in values:
+            chunks = chunker(value)
             rows.append(
-                {
-                    "n_chunks": len(chunks),
-                    "total_tokens": sum(c.token_count for c in chunks),
-                    "last_end_pos": chunks[-1].end_pos if chunks else 0,
-                }
+                (
+                    len(chunks),
+                    sum(c.token_count for c in chunks),
+                    chunks[-1].end_pos if chunks else 0,
+                )
             )
         return pd.DataFrame(rows, columns=["n_chunks", "total_tokens", "last_end_pos"])
 
     docs = spark.table("documents")
-    return docs.select("doc_id", chunk_stats(F.col("text")).alias("c")).select(
+    return docs.select("doc_id", chunk_stats(F.col(column)).alias("c")).select(
         "doc_id", "c.n_chunks", "c.total_tokens", "c.last_end_pos"
+    )
+
+
+def _q_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding-window chunker spans over documents.text (non-SQL op)."""
+    from riptide_spark.functions.chunking import sliding_window_chunks
+
+    return _chunk_stats(
+        spark,
+        sf_dir,
+        lambda text: sliding_window_chunks(text or "", window_size=60, overlap=12),
+        "text",
     )
 
 
@@ -242,38 +246,13 @@ def _q_fixed_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding chunker, the cursor walk is scalar string arithmetic, so the
     DuckDB oracle replays it exactly with a recursive CTE
     (``udf_oracle_fixed_chunk_spans``)."""
-    _ensure_lossy_decode(spark)
-    from pyspark.sql import types as T
-
     from riptide_spark.functions.chunking import fixed_chunks
 
-    _register_views(spark, sf_dir)
-
-    schema = T.StructType(
-        [
-            T.StructField("n_chunks", T.IntegerType()),
-            T.StructField("total_tokens", T.LongType()),
-            T.StructField("last_end_pos", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def chunk_stats(text: pd.Series) -> pd.DataFrame:
-        rows = []
-        for value in text:
-            chunks = fixed_chunks(value or "", size=60, by_tokens=True)
-            rows.append(
-                {
-                    "n_chunks": len(chunks),
-                    "total_tokens": sum(c.token_count for c in chunks),
-                    "last_end_pos": chunks[-1].end_pos if chunks else 0,
-                }
-            )
-        return pd.DataFrame(rows, columns=["n_chunks", "total_tokens", "last_end_pos"])
-
-    docs = spark.table("documents")
-    return docs.select("doc_id", chunk_stats(F.col("text")).alias("c")).select(
-        "doc_id", "c.n_chunks", "c.total_tokens", "c.last_end_pos"
+    return _chunk_stats(
+        spark,
+        sf_dir,
+        lambda text: fixed_chunks(text or "", size=60, by_tokens=True),
+        "text",
     )
 
 
@@ -285,43 +264,18 @@ def _q_topic_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (raw corpus text is topic-uniform and degenerates to one chunk). The
     8 input classes are enumerable, which is what lets
     ``udf_oracle_topic_chunk_spans`` pin the expected outputs."""
-    _ensure_lossy_decode(spark)
-    from pyspark.sql import types as T
-
     from riptide_spark.functions.topic_chunking import (
         topic_chunks,
         topic_fixture_text,
     )
 
-    _register_views(spark, sf_dir)
-
-    schema = T.StructType(
-        [
-            T.StructField("n_chunks", T.IntegerType()),
-            T.StructField("total_tokens", T.LongType()),
-            T.StructField("last_end_pos", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def topic_stats(doc_id: pd.Series) -> pd.DataFrame:
-        rows = []
-        for i in doc_id:
-            chunks = topic_chunks(
-                topic_fixture_text(int(i)), window_size=2, smoothing_passes=2
-            )
-            rows.append(
-                {
-                    "n_chunks": len(chunks),
-                    "total_tokens": sum(c.token_count for c in chunks),
-                    "last_end_pos": chunks[-1].end_pos if chunks else 0,
-                }
-            )
-        return pd.DataFrame(rows, columns=["n_chunks", "total_tokens", "last_end_pos"])
-
-    docs = spark.table("documents")
-    return docs.select("doc_id", topic_stats(F.col("doc_id")).alias("c")).select(
-        "doc_id", "c.n_chunks", "c.total_tokens", "c.last_end_pos"
+    return _chunk_stats(
+        spark,
+        sf_dir,
+        lambda doc_id: topic_chunks(
+            topic_fixture_text(int(doc_id)), window_size=2, smoothing_passes=2
+        ),
+        "doc_id",
     )
 
 

@@ -84,9 +84,10 @@ def repartition_for_extraction(
     df: DataFrame, target_partitions: int, url_col: str = "url"
 ) -> DataFrame:
     """Shuffle-key = (url_bucket, salt). For url-keyed work the url hash is
-    already uniform across hosts; the salt column matters for host-keyed
-    stages (see :func:`repartition_by_host`) and rides along here so the
-    written layout carries it. Requires with_partitioning first."""
+    already uniform across hosts; the salt only matters for host-keyed
+    stages (see :func:`repartition_by_host`) and is dropped before the
+    write, whose layout is ``url_bucket`` alone. Requires
+    with_partitioning first."""
     return df.repartition(target_partitions, F.col("url_bucket"), F.col("salt"))
 
 

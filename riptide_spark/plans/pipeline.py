@@ -154,6 +154,7 @@ class RunResult:
     run_id: str
     rows_written: int
     rows_skipped_resume: int
+    files: list[str]  # the data files this run wrote (its manifest's ledger)
 
 
 def run_extraction_job(
@@ -206,5 +207,8 @@ def run_extraction_job(
         TableIO(spark, config.metrics_path).append(metrics, run_id=run_id)
 
     return RunResult(
-        run_id=run_id, rows_written=manifest.rows, rows_skipped_resume=skipped
+        run_id=run_id,
+        rows_written=manifest.rows,
+        rows_skipped_resume=skipped,
+        files=manifest.files,
     )

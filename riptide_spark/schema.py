@@ -84,3 +84,11 @@ OUTPUT_COLUMNS = [
     "extract_ms",
     "error",
 ]
+
+# The output table's written row; its Hive partition column ``url_bucket``
+# is discovered from the directory names on read.
+OUTPUT_SCHEMA = T.StructType(
+    [PAGES_SCHEMA["url"]]
+    + [EXTRACTED_STRUCT[c] for c in OUTPUT_COLUMNS[1:]]
+    + [T.StructField("run_id", T.StringType(), False)]
+)

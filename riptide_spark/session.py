@@ -19,7 +19,7 @@ from .operators.partitioning import DEFAULT_BUCKETS
 
 # Arrow batch sizing for the extraction UDF: bigger batches amortize the
 # JVM↔Python transfer of the html binary column (measured: the transfer, not
-# the Python parse, dominates at small batches). 1024 rows ≈ 5-75 MB at
+# the Python parse, dominates at small batches). 512 rows ≈ 2.5-40 MB at
 # typical crawl page sizes. The record cap alone is NOT a memory bound —
 # documents run up to the 20 MB P3 cap, so 512 near-cap rows would be a
 # ~10 GB batch; the BYTE cap below is what actually bounds executor + Python
@@ -27,12 +27,11 @@ from .operators.partitioning import DEFAULT_BUCKETS
 # most one row, so worst case is bound + 20 MB (verified
 # on 4.1.2 for the scalar-pandas-UDF input path by
 # tests/test_pipeline.py::test_near_cap_documents_cross_arrow_in_bounded_batches).
-# Tune via SPARK_GRAFT_ARROW_BATCH / SPARK_GRAFT_ARROW_BATCH_BYTES on
-# memory-tight executors.
-ARROW_MAX_RECORDS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH", "512"))
-ARROW_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_ARROW_BATCH_BYTES", str(64 * 1024 * 1024))
-)
+# Override on memory-tight executors with Spark's own
+# spark.sql.execution.arrow.* confs: ``extra_conf`` here, ``--conf`` for
+# jobs/extract_job.py (which does not use this factory).
+ARROW_MAX_RECORDS = 512
+ARROW_MAX_BYTES = 64 * 1024 * 1024
 
 
 def build_session(

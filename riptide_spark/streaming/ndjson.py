@@ -9,11 +9,18 @@ finishes, with heartbeat/progress events and a bounded backpressure buffer
 
 * ``readStream`` over the pages table (file source here; Kafka/Iceberg CDC
   on a cluster) with ``maxFilesPerTrigger`` as the backpressure valve;
-* the same route-and-extract UDF as batch (one code path, two run modes);
-* ``foreachBatch``: append the output table AND emit one NDJSON line per
-  document (executor-side ``write.text`` per batch — one part-file per
-  task, never a driver collect) — micro-batch latency stands in for TTFB
-  (``ndjson_stream_tests.rs:331``);
+* ``foreachBatch`` runs the batch job (:func:`run_extraction_job`) on each
+  micro-batch: the same plan, 20 MB guard, columns, ``url_bucket`` layout,
+  manifest commit and resume anti-join. A micro-batch that Spark replays
+  after a crash between the sink and the checkpoint commit finds its urls
+  in the table and writes 0 rows;
+* the NDJSON feed is one line per row this micro-batch wrote, read back
+  from the files its manifest lists (executor-side ``write.text`` — one
+  part-file per task, never a driver collect). A batch that writes no rows
+  writes no feed directory, so a replay never overwrites the first
+  attempt's lines (a crash between the table write and the feed write
+  loses that batch's lines, never its rows); micro-batch latency stands
+  in for TTFB (``ndjson_stream_tests.rs:331``);
 * progress/heartbeat = the query's ``lastProgress`` (rows/sec, batch id),
   surfaced by :func:`progress_event`.
 """
@@ -26,36 +33,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract_udf import extract_udf
-from ..schema import PAGES_SCHEMA
+from ..plans.pipeline import ExtractionJobConfig, run_extraction_job
+from ..schema import OUTPUT_SCHEMA, PAGES_SCHEMA
+from ..sources.catalog import TableIO
 
 
 @dataclass
 class StreamConfig:
     input_path: str            # directory of parquet page files
-    output_path: str           # extraction output table (parquet append)
-    ndjson_path: str | None    # one .ndjson file per micro-batch (or None)
-    checkpoint_path: str       # streaming checkpoint (exactly-once resume)
+    output_path: str           # extraction output table (TableIO append)
+    ndjson_path: str | None    # one .ndjson dir per micro-batch (or None)
+    checkpoint_path: str       # streaming checkpoint (which files are done)
     max_files_per_trigger: int = 4  # backpressure: bounded intake per batch
-
-
-def streaming_extraction_plan(pages: DataFrame) -> DataFrame:
-    """The batch path's UDF stage, minus the repartition (micro-batches are
-    already small; a shuffle per batch would only add latency — the TTFB
-    analog). The UDF routes each page (null mode) and reports the route as
-    ``content_mode``."""
-    mode = F.lit(None).cast("string")
-    df = pages.withColumn("ex", extract_udf(F.col("html"), F.col("url"), mode))
-    return df.select(
-        "url",
-        F.col("ex.title").alias("title"),
-        F.col("ex.extracted_text").alias("extracted_text"),
-        F.col("ex.content_mode").alias("content_mode"),
-        F.col("ex.language").alias("language"),
-        F.col("ex.quality_score").alias("quality_score"),
-        F.col("ex.word_count").alias("word_count"),
-        F.col("ex.error").alias("error"),
-    )
 
 
 def start_stream(spark: SparkSession, config: StreamConfig):
@@ -65,39 +54,31 @@ def start_stream(spark: SparkSession, config: StreamConfig):
         .option("maxFilesPerTrigger", str(config.max_files_per_trigger))
         .parquet(config.input_path)
     )
-    result = streaming_extraction_plan(pages)
-
-    os.makedirs(config.output_path, exist_ok=True)
-    if config.ndjson_path:
-        os.makedirs(config.ndjson_path, exist_ok=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Append the durable table first, then emit the NDJSON feed —
-        # the feed is a delivery channel, the table is the record.
-        batch_df.persist()
-        try:
-            batch_df.write.mode("append").parquet(os.path.join(config.output_path, "data"))
-            if config.ndjson_path:
-                # Executor-side emit: each task serializes and writes its own
-                # partition (one NDJSON part-file per task under the batch
-                # directory). No driver collect — a large micro-batch can't
-                # bottleneck or OOM the driver. ignoreNullFields=false keeps
-                # null fields present, matching NdjsonCodec's serde output.
-                (
-                    batch_df.select(
-                        F.to_json(
-                            F.struct(*batch_df.columns),
-                            {"ignoreNullFields": "false"},
-                        ).alias("value")
-                    )
-                    .write.mode("overwrite")
-                    .text(os.path.join(config.ndjson_path, f"batch-{batch_id:08d}"))
+        # The table is the record, the feed a delivery channel: append the
+        # table first, then emit only what this run wrote.
+        result = run_extraction_job(
+            spark, batch_df, ExtractionJobConfig(output_path=config.output_path)
+        )
+        if config.ndjson_path and result.rows_written:
+            feed = TableIO(spark, config.output_path).read(
+                schema=OUTPUT_SCHEMA, files=result.files
+            )
+            # ignoreNullFields=false keeps null fields present, matching
+            # NdjsonCodec's serde output.
+            (
+                feed.select(
+                    F.to_json(
+                        F.struct(*feed.columns), {"ignoreNullFields": "false"}
+                    ).alias("value")
                 )
-        finally:
-            batch_df.unpersist()
+                .write.mode("overwrite")
+                .text(os.path.join(config.ndjson_path, f"batch-{batch_id:08d}"))
+            )
 
     return (
-        result.writeStream.foreachBatch(sink)
+        pages.writeStream.foreachBatch(sink)
         .option("checkpointLocation", config.checkpoint_path)
         .trigger(availableNow=True)
         .start()

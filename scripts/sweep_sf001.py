@@ -1,7 +1,9 @@
 """Local replica of the driver's CORRECTNESS gate: run every queries()
 entry AND its oracle SQL at sf0.01, compare row count + column set +
 sorted value hash exactly like tests/test_oracle_parity.py does at
-sf0.001. Prints one line per query and a final tally."""
+sf0.001. Prints one line per query and a final tally. The session is
+``build_session``'s default: ``SPARK_GRAFT_CPUS=N`` runs it on ``local[N]``
+with N shuffle partitions."""
 
 from __future__ import annotations
 
@@ -25,7 +27,7 @@ def main() -> None:
 
     from riptide_spark.session import build_session
 
-    spark = build_session("sweep-sf001", master="local[32]", shuffle_partitions=32)
+    spark = build_session("sweep-sf001")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for path in glob.glob(os.path.join(SF_DIR, "*.parquet")):

@@ -7,11 +7,16 @@ feature-extraction checks against ``pipeline.rs:769-841`` semantics.
 
 from __future__ import annotations
 
+import os
 import unicodedata
+from collections import Counter
 
+import duckdb
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from riptide_spark import oracle_queries as OQ
 from riptide_spark.functions.gate import (
     GateFeatures,
     analyze_content,
@@ -23,6 +28,8 @@ from riptide_spark.functions.gate import (
     script_bytes_of,
 )
 from riptide_spark.sources.pages import synth_page
+
+from .test_oracle_parity import SF_DIR
 
 
 def test_score_simple_article():
@@ -173,3 +180,31 @@ def test_route_pinned_on_invalid_utf8_and_pdf_rows():
         assert route(p["text"], p["url"]) == "pdf"
         # Without the .pdf suffix the %PDF- content sniff alone routes it.
         assert route(p["text"], p["url"][: -len(".pdf")]) == "pdf"
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_DIR), reason="driver testdata not present")
+def test_sql_gate_is_the_production_gate():
+    """The driver's ``gate_features`` / ``gate_route_counts`` SQL (the DuckDB
+    rendering; ``test_oracle_parity`` ties the Spark one to it) computes,
+    per synthesized page, the features and routes of ``functions/gate.py``."""
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'")
+    pages = con.sql(OQ.pages_cte(OQ.DUCK) + " SELECT doc_id, url, html FROM pages").fetchall()
+    sql = con.sql(OQ.q_gate_features(OQ.DUCK))
+    sql_features = {row[0]: row[1:] for row in sql.fetchall()}
+    assert sql.columns[1:] == [
+        "html_len", "visible_chars", "p_count", "article_count", "h1h2_count",
+        "script_bytes", "has_og", "has_jsonld", "spa_markers", "domain_prior",
+    ]
+    assert len(pages) == len(sql_features) > 0
+    for doc_id, url, html in pages:
+        f = analyze_content(html, url)
+        assert sql_features[doc_id] == (
+            f.html_bytes, f.visible_text_chars, f.p_count, f.article_count,
+            f.h1h2_count, f.script_bytes, int(f.has_og),
+            int(f.has_jsonld_article), f.spa_markers, f.domain_prior,
+        ), doc_id
+
+    routes = Counter(route(html, url) for _, url, html in pages)
+    assert len(routes) >= 2
+    assert dict(con.sql(OQ.q_route_counts(OQ.DUCK)).fetchall()) == routes

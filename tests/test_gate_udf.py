@@ -1,7 +1,8 @@
 """The gate runs inside the extraction UDF: every row's ``content_mode`` is
 ``functions.gate.route`` of its page, through the batch job and through the
-streaming plan, on a corpus that covers every archetype, the rows with
-invalid UTF-8 and one oversized row."""
+stream (which runs the batch job on each micro-batch), on a corpus that
+covers every archetype, the rows with invalid UTF-8 and one oversized row,
+which both paths turn into the same ``oversize`` error row."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ from riptide_spark.plans.pipeline import (
 from riptide_spark.schema import PAGES_SCHEMA
 from riptide_spark.sources.catalog import TableIO
 from riptide_spark.sources.pages import ARCHETYPES, synth_pages
-from riptide_spark.streaming.ndjson import streaming_extraction_plan
+from riptide_spark.streaming.ndjson import StreamConfig, start_stream
 
 N = 160
 SEED = 42
@@ -71,11 +72,24 @@ def test_batch_job_content_mode_is_the_gate_route(spark, corpus, tmp_path):
     assert got == _routes(pages)
 
 
-def test_streaming_plan_content_mode_is_the_gate_route(spark, corpus):
-    # The streaming plan has no size guard: the oversized row is routed
-    # like any other (and becomes an invalid-html error row).
+def test_streaming_plan_content_mode_is_the_gate_route(spark, corpus, tmp_path):
     pages, oversize = corpus
-    out = streaming_extraction_plan(_frame(spark, pages, oversize))
-    got = {r["url"]: r for r in out.select("url", "content_mode", "error").collect()}
-    assert {u: r["content_mode"] for u, r in got.items()} == _routes(pages + [oversize])
-    assert "exceeds maximum" in got[oversize["url"]]["error"]
+    _frame(spark, pages, oversize).write.parquet(str(tmp_path / "pages"))
+    config = StreamConfig(
+        input_path=str(tmp_path / "pages"),
+        output_path=str(tmp_path / "out"),
+        ndjson_path=None,
+        checkpoint_path=str(tmp_path / "ckpt"),
+    )
+    query = start_stream(spark, config)
+    query.awaitTermination(timeout=300)
+    assert not query.isActive
+    rows = TableIO(spark, config.output_path).read().select("url", "content_mode", "error")
+    got = {r["url"]: r for r in rows.collect()}
+    big = got.pop(oversize["url"])
+    assert big["content_mode"] == "oversize"
+    assert big["error"] == (
+        f"invalid-html: Content size {len(oversize['html'])} "
+        f"exceeds maximum {MAX_CONTENT_BYTES}"
+    )
+    assert {u: r["content_mode"] for u, r in got.items()} == _routes(pages)

@@ -8,19 +8,62 @@ import os
 
 import pytest
 
-from riptide_spark.schema import PAGES_SCHEMA
+from riptide_spark.schema import OUTPUT_SCHEMA, PAGES_SCHEMA
+from riptide_spark.sources.catalog import TableIO
 from riptide_spark.sources.pages import synth_page
 from riptide_spark.streaming.ndjson import StreamConfig, progress_event, start_stream
 
 N = 40
 
 
-def _write_pages(spark, path: str, lo: int, hi: int) -> None:
-    rows = [synth_page(i, seed=5) for i in range(lo, hi)]
-    spark.createDataFrame(
+def _page_frame(spark, lo: int, hi: int, seed: int):
+    rows = [synth_page(i, seed=seed) for i in range(lo, hi)]
+    return spark.createDataFrame(
         [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows],
         PAGES_SCHEMA,
-    ).coalesce(2).write.mode("append").parquet(path)
+    )
+
+
+def _write_pages(spark, path: str, lo: int, hi: int) -> None:
+    _page_frame(spark, lo, hi, seed=5).coalesce(2).write.mode("append").parquet(path)
+
+
+def _config(base, max_files_per_trigger: int) -> StreamConfig:
+    return StreamConfig(
+        input_path=str(base / "pages"),
+        output_path=str(base / "out"),
+        ndjson_path=str(base / "feed"),
+        checkpoint_path=str(base / "ckpt"),
+        max_files_per_trigger=max_files_per_trigger,
+    )
+
+
+def _run(spark, config: StreamConfig) -> None:
+    query = start_stream(spark, config)
+    query.awaitTermination(timeout=300)
+    assert not query.isActive
+
+
+def _feed_files(ndjson_path: str) -> dict[str, list[str]]:
+    """Part-file paths of each NDJSON feed batch, by batch directory."""
+    return {
+        d: sorted(
+            os.path.join(ndjson_path, d, n)
+            for n in os.listdir(os.path.join(ndjson_path, d))
+            if n.startswith("part-")
+        )
+        for d in sorted(os.listdir(ndjson_path))
+        if d.startswith("batch-")
+    }
+
+
+def _lines(feed: dict[str, list[str]]) -> list[str]:
+    """The non-empty lines of every part-file of ``feed``."""
+    out = []
+    for path in (p for paths in feed.values() for p in paths):
+        with open(path, encoding="utf-8") as fh:
+            out.extend(line for line in fh.read().splitlines() if line)
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -54,18 +97,9 @@ def test_stream_extracts_incrementally(spark, stream_dirs):
     # NDJSON feed: multiple micro-batches (maxFilesPerTrigger=1 → incremental
     # delivery, the TTFB analog), one directory per batch written by the
     # executors (part-files), one valid JSON object per line.
-    feed_batches = sorted(
-        d for d in os.listdir(stream_dirs["ndjson"]) if d.startswith("batch-")
-    )
-    assert len(feed_batches) >= 2
-    lines = []
-    for batch in feed_batches:
-        bdir = os.path.join(stream_dirs["ndjson"], batch)
-        for name in sorted(os.listdir(bdir)):
-            if not name.startswith("part-"):
-                continue
-            with open(os.path.join(bdir, name), encoding="utf-8") as fh:
-                lines.extend(line for line in fh.read().splitlines() if line)
+    feed = _feed_files(stream_dirs["ndjson"])
+    assert len(feed) >= 2
+    lines = _lines(feed)
     assert len(lines) == N
     parsed = [json.loads(line) for line in lines]
     assert all("url" in p and "content_mode" in p for p in parsed)
@@ -94,6 +128,76 @@ def test_stream_resumes_exactly_once(spark, stream_dirs):
     assert event["event"] == "progress"
 
 
+def test_replayed_micro_batch_writes_no_duplicates(spark, tmp_path):
+    """A crash between the sink's write and Spark's checkpoint commit makes
+    Spark replay the micro-batch on restart. The replay runs the batch
+    job's resume anti-join over urls it already wrote, so every url is in
+    the table once and the first attempt's feed lines are kept."""
+    config = _config(tmp_path, max_files_per_trigger=1)
+    for i in range(4):
+        _page_frame(spark, i * 10, (i + 1) * 10, seed=13).coalesce(1).write.mode(
+            "append"
+        ).parquet(config.input_path)
+    _run(spark, config)
+
+    commits = os.path.join(config.checkpoint_path, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    feed_before = _feed_files(config.ndjson_path)
+    _run(spark, config)
+
+    out = TableIO(spark, config.output_path).read()
+    # The feed reads the table with OUTPUT_SCHEMA: it is the written row.
+    assert [(f.name, f.dataType) for f in out.schema if f.name != "url_bucket"] == [
+        (f.name, f.dataType) for f in OUTPUT_SCHEMA
+    ]
+    assert out.count() == 40
+    assert out.select("url").distinct().count() == 40
+    # One manifest per batch job: four of 10 rows, and the replay's of 0.
+    assert sorted(m.rows for m in TableIO(spark, config.output_path).manifests()) == [
+        0, 10, 10, 10, 10,
+    ]
+    assert _feed_files(config.ndjson_path) == feed_before
+    lines = _lines(feed_before)
+    assert sorted(json.loads(line)["url"] for line in lines) == sorted(
+        r.url for r in out.select("url").collect()
+    )
+
+
+def test_backlog_is_drained_in_bounded_micro_batches(spark, tmp_path):
+    """Backpressure: a backlog of 100 one-page files under
+    maxFilesPerTrigger=25 is drained in exactly 4 micro-batches of at most
+    25 rows each (one manifest per batch job), and the first batch's NDJSON
+    lines land before the last batch commits."""
+    import time
+
+    config = _config(tmp_path, max_files_per_trigger=25)
+    _page_frame(spark, 0, 100, seed=17).write.option("maxRecordsPerFile", 1).parquet(
+        config.input_path
+    )
+    assert len([n for n in os.listdir(config.input_path) if n.endswith(".parquet")]) == 100
+
+    start = time.time()
+    _run(spark, config)
+
+    manifests = TableIO(spark, config.output_path).manifests()
+    assert len(manifests) == 4
+    assert all(m.rows <= 25 for m in manifests)
+    assert sum(m.rows for m in manifests) == 100
+    feed = _feed_files(config.ndjson_path)
+    assert len(feed) == 4
+    assert len(_lines(feed)) == 100
+    first_landed = max(os.path.getmtime(p) for p in feed[min(feed)])
+    last_commit = max(
+        os.path.getmtime(os.path.join(config.output_path, "_manifests", n))
+        for n in os.listdir(os.path.join(config.output_path, "_manifests"))
+    )
+    assert first_landed < last_commit
+    assert first_landed - start < 60.0, f"first micro-batch took {first_landed - start:.1f}s"
+
+
 def test_first_batch_latency_bound(spark, tmp_path):
     """TTFB analog of the reference's 500 ms first-chunk streaming test
     (ndjson_stream_tests.rs:331): with 8 input files and
@@ -113,11 +217,9 @@ def test_first_batch_latency_bound(spark, tmp_path):
         "checkpoint": str(base / "ckpt"),
     }
     for i in range(8):
-        rows = [synth_page(j, seed=9) for j in range(i * 10, (i + 1) * 10)]
-        spark.createDataFrame(
-            [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows],
-            PAGES_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(dirs["input"])
+        _page_frame(spark, i * 10, (i + 1) * 10, seed=9).coalesce(1).write.mode(
+            "append"
+        ).parquet(dirs["input"])
 
     config = StreamConfig(
         input_path=dirs["input"],
