@@ -18,6 +18,13 @@ Modes:
 
 Everything diagnostic goes to stderr; stdout carries exactly one JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+
+A plain run also splits the timed extraction job and the query suite into
+their JIT layer: ``jit_compile_s`` is the driver JVM's
+``CompilationMXBean.getTotalCompilationTime`` over each (the JVM hosts the
+executors locally, so it is all the job's compiling), and ``cpu_s`` the
+CPU seconds of the whole process tree (this driver, the JVM and its Python
+workers) over each.
 """
 
 from __future__ import annotations
@@ -32,6 +39,8 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+# perfbench/procstat.py reads the process tree's CPU from /proc.
+sys.path.append(os.path.join(REPO, "perfbench"))
 
 SEED = 42
 # sf0.1 → 100k pages (~4-9 KB each): big enough that per-task work dominates
@@ -95,6 +104,16 @@ def ensure_corpus(spark, n: int) -> str:
     return path
 
 
+def jit_and_cpu_s(spark) -> tuple[float, float]:
+    """(JIT compile seconds of the driver JVM, CPU seconds of this process
+    tree) so far."""
+    from procstat import tree_cpu_s
+
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    compile_ms = mf.getCompilationMXBean().getTotalCompilationTime()
+    return compile_ms / 1000.0, tree_cpu_s(os.getpid())
+
+
 def run_bench(cpus: int, sf_dir: str) -> dict:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     import __spark_entry__ as entrymod
@@ -134,13 +153,16 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
         target_partitions=cpus * 2,
         resume=False,
     )
+    jit0, cpu0 = jit_and_cpu_s(spark)
     start = time.perf_counter()
     result = run_extraction_job(spark, pages, config)
     extract_sec = time.perf_counter() - start
+    jit1, cpu1 = jit_and_cpu_s(spark)
     docs_per_sec = result.rows_written / extract_sec
     log(
         f"[bench] extraction: {result.rows_written} docs in {extract_sec:.2f}s "
-        f"→ {docs_per_sec:.0f} docs/s on local[{cpus}]"
+        f"→ {docs_per_sec:.0f} docs/s on local[{cpus}]; "
+        f"JIT {jit1 - jit0:.1f}s, CPU {cpu1 - cpu0:.1f}s"
     )
 
     # Operator queries over the driver testdata.
@@ -155,6 +177,8 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
         dt = time.perf_counter() - t0
         timings[name] = round(dt, 3)
         log(f"[bench] {name}: {rows} rows in {dt:.2f}s")
+    jit2, cpu2 = jit_and_cpu_s(spark)
+    log(f"[bench] query suite: JIT {jit2 - jit1:.1f}s, CPU {cpu2 - cpu1:.1f}s")
 
     total = round(sum(timings.values()), 3)
     spark.stop()
@@ -168,6 +192,14 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
         "docs": result.rows_written,
         "extract_sec": round(extract_sec, 3),
         "docs_per_sec": round(docs_per_sec, 1),
+        "jit_compile_s": {
+            "extract_pipeline": round(jit1 - jit0, 3),
+            "suite": round(jit2 - jit1, 3),
+        },
+        "cpu_s": {
+            "extract_pipeline": round(cpu1 - cpu0, 3),
+            "suite": round(cpu2 - cpu1, 3),
+        },
     }
 
 

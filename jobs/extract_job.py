@@ -9,6 +9,16 @@ idempotent resume and the metrics sidecar. On a real cluster:
         --py-files dist/riptide_spark.zip \
         jobs/extract_job.py --input <pages_dir> --output <table_dir> \
         --metrics <metrics_dir> [--synthesize N] [--hot-hosts auto]
+
+JIT policy: ``build_session`` starts its driver JVM with
+``-XX:CICompilerCount=2`` (one C1 and one C2 compiler thread), measured at
+``local[4]`` on a 4-vCPU host (BENCH.md, *JVM policy*). This job takes its
+session from spark-submit, so the flag is passed there: in
+``--driver-java-options`` for the driver (which also runs the tasks under a
+``local`` master), and in ``--conf spark.executor.extraJavaOptions=...``
+for cluster executors, where each executor JVM compiles its own tasks'
+code. Neither place has been measured; a wide executor alone on its host
+may do better with HotSpot's default count.
 """
 
 from __future__ import annotations

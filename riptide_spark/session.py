@@ -5,13 +5,33 @@ the one you would set on a 1000-executor cluster too: AQE on (runtime
 re-planning, skew-join splitting, partition coalescing), Arrow transfer for
 the pandas-UDF extraction stage with bounded batch sizes (documents are up to
 20 MB — ``maxRecordsPerBatch`` keeps per-batch memory predictable), UTC
-session timezone (oracle comparability), shuffle partitions ≈ cores locally
-(on a real cluster leave AQE to coalesce from a higher initial number).
+session timezone (oracle comparability), shuffle partitions = cores locally
+(on a cluster master Spark's own default is left for AQE to coalesce from).
+
+The driver JVM runs with ``-XX:CICompilerCount=2``: one C1 and one C2 JIT
+compiler thread, the tiered minimum. In ``local[N]`` that JVM also hosts the
+executors, so it does all of the job's JIT compiling, and it shares the N
+cores with N CPU-bound Python workers. Sized for a machine of its own,
+HotSpot picks 3 compiler threads on 4 CPUs (1 C1 + 2 C2), and in a cold
+extraction job the C2 threads then burn about as much CPU as the Python UDF
+bodies, out of the workers' cores. Measured at ``local[4]`` on a 4-vCPU host
+(BENCH.md, *JVM policy*): C2 thread CPU in the first extraction job falls
+from 17-18.5 s to 10-11 s, the job's CPU per document by about 12 %, and
+warm jobs in the same JVM run no slower. Wider hosts and cluster executors
+were not measured. HotSpot's default grows with the cores (about
+log2(n) * log2(log2(n)) * 3/2), and so do the Python workers that compete
+with it, so a wider host wants its own A/B before this count is kept there;
+a cluster executor JVM would take a flag through
+``spark.executor.extraJavaOptions``. The flag goes in
+``spark.driver.defaultJavaOptions``, which Spark puts before
+``spark.driver.extraJavaOptions``: a caller's own options in ``extra_conf``
+are kept, and a later ``-XX:CICompilerCount`` there wins.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +53,21 @@ from .operators.partitioning import DEFAULT_BUCKETS
 ARROW_MAX_RECORDS = 512
 ARROW_MAX_BYTES = 64 * 1024 * 1024
 
+# JIT policy of the driver JVM (see the module docstring).
+DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
+
+
+def local_cores(master: str) -> int | None:
+    """Task slots of a ``local``, ``local[N]``, ``local[*]`` or
+    ``local[N, F]`` master (``os.cpu_count()`` for ``*``); None for any
+    other master."""
+    m = re.fullmatch(r"local(?:\[\s*(\*|\d+)\s*(?:,\s*\d+\s*)?\])?", master)
+    if m is None:
+        return None
+    if m.group(1) is None:
+        return 1
+    return os.cpu_count() if m.group(1) == "*" else int(m.group(1))
+
 
 def build_session(
     app_name: str = "riptide-spark",
@@ -44,14 +79,13 @@ def build_session(
         os.environ.get("SPARK_GRAFT_CPUS", "*")
     )
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus else 32
+        shuffle_partitions = local_cores(master)
 
+    builder = SparkSession.builder.appName(app_name).master(master)
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
+        builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -73,6 +107,7 @@ def build_session(
         .config("spark.python.worker.reuse", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

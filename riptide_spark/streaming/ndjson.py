@@ -21,8 +21,8 @@ finishes, with heartbeat/progress events and a bounded backpressure buffer
   attempt's lines (a crash between the table write and the feed write
   loses that batch's lines, never its rows); micro-batch latency stands
   in for TTFB (``ndjson_stream_tests.rs:331``);
-* progress/heartbeat = the query's ``lastProgress`` (rows/sec, batch id),
-  surfaced by :func:`progress_event`.
+* progress/heartbeat = the query's ``lastProgress`` (batch id, the batch's
+  input rows, rows/sec), surfaced by :func:`progress_event`.
 """
 
 from __future__ import annotations
@@ -91,7 +91,9 @@ def progress_event(query) -> dict:
     return {
         "event": "progress",
         "batch_id": progress.get("batchId"),
-        "rows": (progress.get("sink") or {}).get("numOutputRows"),
+        # ForeachBatchSink leaves sink.numOutputRows at -1; the rows the
+        # micro-batch read are what the batch job was presented.
+        "rows": progress.get("numInputRows"),
         "input_rows_per_sec": progress.get("inputRowsPerSecond"),
         "active": query.isActive,
     }

@@ -3,7 +3,8 @@ entry AND its oracle SQL at sf0.01, compare row count + column set +
 sorted value hash exactly like tests/test_oracle_parity.py does at
 sf0.001. Prints one line per query and a final tally. The session is
 ``build_session``'s default: ``SPARK_GRAFT_CPUS=N`` runs it on ``local[N]``
-with N shuffle partitions."""
+with N shuffle partitions, and without it ``local[*]`` gets one shuffle
+partition per core."""
 
 from __future__ import annotations
 

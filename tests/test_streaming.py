@@ -126,6 +126,9 @@ def test_stream_resumes_exactly_once(spark, stream_dirs):
     assert out.select("url").distinct().count() == N + 10
     event = progress_event(query)
     assert event["event"] == "progress"
+    # The restart's one micro-batch read the 10 new pages (2 files, under
+    # maxFilesPerTrigger=4); the sink's own count is always -1.
+    assert event["rows"] == 10
 
 
 def test_replayed_micro_batch_writes_no_duplicates(spark, tmp_path):
