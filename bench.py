@@ -2,7 +2,7 @@
 """Benchmark harness (driver contract: one JSON line on stdout).
 
 Measures the headline workload — the full extraction pipeline (Arrow-vectorized
-routing + extraction + bucketed salted write) over a deterministic
+routing + extraction + url-bucketed write) over a deterministic
 synthetic page corpus sized by SF — plus representative operator queries over
 the driver testdata at ``$SPARK_GRAFT_SF_DIR``.
 
@@ -138,26 +138,26 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
 
     # Warm-up: spin up Python workers + codegen once (the analog of the
     # reference's WASM AOT warm cache — it measures warm throughput too).
-    warm_dir = tempfile.mkdtemp(prefix="riptide_bench_warm_")
-    run_extraction_job(
-        spark,
-        pages.limit(256),
-        ExtractionJobConfig(output_path=os.path.join(warm_dir, "out"), resume=False),
-    )
-    log("[bench] warm-up done")
+    # Both jobs' tables are removed once timed; only the corpus is cached.
+    with tempfile.TemporaryDirectory(prefix="riptide_bench_out_") as out_dir:
+        run_extraction_job(
+            spark,
+            pages.limit(256),
+            ExtractionJobConfig(output_path=os.path.join(out_dir, "warm"), resume=False),
+        )
+        log("[bench] warm-up done")
 
-    out_dir = tempfile.mkdtemp(prefix="riptide_bench_out_")
-    config = ExtractionJobConfig(
-        output_path=os.path.join(out_dir, "out"),
-        metrics_path=os.path.join(out_dir, "metrics"),
-        target_partitions=cpus * 2,
-        resume=False,
-    )
-    jit0, cpu0 = jit_and_cpu_s(spark)
-    start = time.perf_counter()
-    result = run_extraction_job(spark, pages, config)
-    extract_sec = time.perf_counter() - start
-    jit1, cpu1 = jit_and_cpu_s(spark)
+        config = ExtractionJobConfig(
+            output_path=os.path.join(out_dir, "out"),
+            metrics_path=os.path.join(out_dir, "metrics"),
+            target_partitions=cpus * 2,
+            resume=False,
+        )
+        jit0, cpu0 = jit_and_cpu_s(spark)
+        start = time.perf_counter()
+        result = run_extraction_job(spark, pages, config)
+        extract_sec = time.perf_counter() - start
+        jit1, cpu1 = jit_and_cpu_s(spark)
     docs_per_sec = result.rows_written / extract_sec
     log(
         f"[bench] extraction: {result.rows_written} docs in {extract_sec:.2f}s "
@@ -262,24 +262,23 @@ def run_scale_dial(cpus: int, sfs=(0.1, 1.0)) -> dict:
 
         timings: dict[str, float] = {}
 
-        warm_dir = tempfile.mkdtemp(prefix="riptide_scale_warm_")
-        run_extraction_job(
-            spark,
-            pages.limit(256),
-            ExtractionJobConfig(output_path=os.path.join(warm_dir, "out"), resume=False),
-        )
-        out_dir = tempfile.mkdtemp(prefix="riptide_scale_out_")
-        t0 = time.perf_counter()
-        result = run_extraction_job(
-            spark,
-            pages,
-            ExtractionJobConfig(
-                output_path=os.path.join(out_dir, "out"),
-                target_partitions=cpus * 2,
-                resume=False,
-            ),
-        )
-        timings["extract_pipeline"] = round(time.perf_counter() - t0, 3)
+        with tempfile.TemporaryDirectory(prefix="riptide_scale_out_") as out_dir:
+            run_extraction_job(
+                spark,
+                pages.limit(256),
+                ExtractionJobConfig(output_path=os.path.join(out_dir, "warm"), resume=False),
+            )
+            t0 = time.perf_counter()
+            result = run_extraction_job(
+                spark,
+                pages,
+                ExtractionJobConfig(
+                    output_path=os.path.join(out_dir, "out"),
+                    target_partitions=cpus * 2,
+                    resume=False,
+                ),
+            )
+            timings["extract_pipeline"] = round(time.perf_counter() - t0, 3)
         log(
             f"[scale sf{sf}] extract: {result.rows_written} docs in "
             f"{timings['extract_pipeline']}s"

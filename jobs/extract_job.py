@@ -8,7 +8,11 @@ idempotent resume and the metrics sidecar. On a real cluster:
     spark-submit --master <cluster> \
         --py-files dist/riptide_spark.zip \
         jobs/extract_job.py --input <pages_dir> --output <table_dir> \
-        --metrics <metrics_dir> [--synthesize N] [--hot-hosts auto]
+        --metrics <metrics_dir> [--synthesize N] [--buckets B] [--partitions n]
+
+The extraction shuffle is url-keyed with the bucket's own hash, so with
+``--partitions`` n dividing ``--buckets`` B each task holds B/n whole
+buckets and the job writes B files; n defaults to B.
 
 JIT policy: ``build_session`` starts its driver JVM with
 ``-XX:CICompilerCount=2`` (one C1 and one C2 compiler thread), measured at
@@ -45,10 +49,8 @@ def main() -> None:
     parser.add_argument("--synthesize", type=int, default=0,
                         help="generate N synthetic pages instead of reading --input")
     parser.add_argument("--buckets", type=int, default=64)
-    parser.add_argument("--salts", type=int, default=8)
-    parser.add_argument("--partitions", type=int, default=None)
-    parser.add_argument("--hot-hosts", default="",
-                        help="'auto' for a discovery pre-pass, or comma-separated hosts")
+    parser.add_argument("--partitions", type=int, default=None,
+                        help="extraction shuffle partitions (default: --buckets)")
     parser.add_argument("--since", default=None, metavar="YYYY-MM-DD",
                         help="process crawl days >= this date (inclusive)")
     parser.add_argument("--until", default=None, metavar="YYYY-MM-DD",
@@ -62,7 +64,6 @@ def main() -> None:
     spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    from riptide_spark.operators.partitioning import discover_hot_hosts
     from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job
     from riptide_spark.sources.pages import pages_dataframe
 
@@ -89,26 +90,17 @@ def main() -> None:
         if args.until:
             pages = pages.filter(day <= args.until)
 
-    if args.hot_hosts == "auto":
-        hot_hosts = discover_hot_hosts(pages)
-    elif args.hot_hosts:
-        hot_hosts = [h.strip() for h in args.hot_hosts.split(",") if h.strip()]
-    else:
-        hot_hosts = []
-
     config = ExtractionJobConfig(
         output_path=args.output,
         metrics_path=args.metrics,
         buckets=args.buckets,
-        salts=args.salts,
-        hot_hosts=hot_hosts,
-        target_partitions=args.partitions,
+        target_partitions=args.partitions or args.buckets,
         resume=not args.no_resume,
     )
     result = run_extraction_job(spark, pages, config)
     print(
         f"run_id={result.run_id} written={result.rows_written} "
-        f"skipped_resume={result.rows_skipped_resume} hot_hosts={hot_hosts}"
+        f"skipped_resume={result.rows_skipped_resume}"
     )
     spark.stop()
 

@@ -6,7 +6,7 @@ per SURVEY.md §3.1:
 
     read pages → anti-join(done urls)            # Redis result cache → J1
               → 20 MB guard (blanks oversize)    # P3
-              → bucketed-hash + salted shuffle   # north-rule partitioning
+              → url-hash shuffle (whole buckets) # north-rule partitioning
               → Arrow route + extraction UDF     # P5-P8 gate, E1-E15
                                                  # (+ escalation, PDF)
               → append output table + manifest   # cache store / S5-S6
@@ -22,17 +22,18 @@ Plan properties worth knowing at 100 TB:
   (url, html, mode) after column pruning. It routes each page with the
   gate (``functions/gate.py``) over the html it already decoded, so routing
   adds no transfer and no JVM work; the stage before the shuffle is the
-  scan, the anti-join, the size guard and ``url_bucket``/``salt``.
+  scan, the anti-join and the size guard (``url_bucket`` is computed after
+  it, from the same url hash the shuffle used).
 * probes-first escalation happens row-locally inside the UDF — no second
   shuffle (see extract_udf.py).
-* one wide shuffle total (the bucket/salt repartition before extraction);
-  everything after is narrow.
+* one wide shuffle total (the url-keyed repartition before extraction,
+  whose hash is ``url_bucket``'s); everything after is narrow.
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -41,9 +42,8 @@ from ..operators.extract_udf import extract_udf
 from ..operators.metrics import partition_metrics
 from ..operators.partitioning import (
     DEFAULT_BUCKETS,
-    DEFAULT_SALTS,
-    repartition_for_extraction,
-    with_partitioning,
+    repartition_by_url,
+    url_bucket_column,
 )
 from ..schema import OUTPUT_COLUMNS
 from ..sources.catalog import TableIO
@@ -56,8 +56,6 @@ class ExtractionJobConfig:
     output_path: str
     metrics_path: str | None = None
     buckets: int = DEFAULT_BUCKETS
-    salts: int = DEFAULT_SALTS
-    hot_hosts: list[str] = field(default_factory=list)
     target_partitions: int | None = None
     resume: bool = True
 
@@ -86,15 +84,13 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
                F.lit(b"")).otherwise(F.col("html")),
     )
 
-    # Bucketed url-hash partitioning with hot-host salting; one wide shuffle.
-    df = with_partitioning(df, buckets=config.buckets, salts=config.salts,
-                           hot_hosts=config.hot_hosts)
     # Prune to exactly what the extraction stage needs BEFORE the shuffle:
     # the raw `text`/`lang`/`warc_ts` columns would otherwise ride the wire
     # for nothing (the text column alone duplicates the html payload).
-    df = df.select("url", "html", "url_bucket", "salt", "_oversize_bytes")
+    df = df.select("url", "html", "_oversize_bytes")
+    # Bucketed url-hash partitioning; one wide shuffle, whole buckets per task.
     if config.target_partitions:
-        df = repartition_for_extraction(df, config.target_partitions)
+        df = repartition_by_url(df, config.target_partitions)
 
     # The single Python hot path: Arrow-batched routing and extraction. A
     # null mode lets the UDF route the row.
@@ -130,8 +126,7 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
                 F.lit(MAX_CONTENT_BYTES),
             ),
         ).otherwise(F.col("ex.error")).alias("error"),
-        "url_bucket",
-        "salt",
+        url_bucket_column(buckets=config.buckets).alias("url_bucket"),
     )
     return flat
 

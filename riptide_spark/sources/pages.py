@@ -10,7 +10,7 @@ edge cases, invalid documents and %PDF bodies, in proportions that exercise
 every routing branch of the gate.
 
 Host distribution is intentionally skewed (two hot hosts carry ~50 % of rows)
-to exercise the hot-host salting path at scale.
+to exercise host-keyed stages and show that url-keyed ones stay balanced.
 """
 
 from __future__ import annotations

@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from riptide_spark.operators.partitioning import url_bucket_column
 from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job
 from riptide_spark.schema import PAGES_SCHEMA
 from riptide_spark.sources.catalog import TableIO
@@ -124,9 +125,7 @@ def test_partitioning_columns_deterministic(spark, job_output):
     buckets = out.select(F.min("url_bucket"), F.max("url_bucket")).collect()[0]
     assert buckets[0] >= 0 and buckets[1] < cfg.buckets
     # Same url → same bucket, always (required for idempotent resume).
-    recomputed = out.withColumn(
-        "rb", F.pmod(F.xxhash64("url"), F.lit(cfg.buckets)).cast("int")
-    )
+    recomputed = out.withColumn("rb", url_bucket_column("url", cfg.buckets))
     assert recomputed.filter(F.col("rb") != F.col("url_bucket")).count() == 0
 
 
@@ -240,19 +239,14 @@ def test_salting_spreads_hot_host_in_host_keyed_shuffle(spark):
     unless salted; the deterministic salt must split it across tasks while
     keeping cold hosts co-located (the skew lever of the north rule).
     Url-keyed shuffles need no salt — the url hash is already uniform."""
-    from riptide_spark.operators.partitioning import (
-        repartition_by_host,
-        with_partitioning,
-    )
+    from riptide_spark.operators.partitioning import repartition_by_host
 
     rows = [(f"https://hot.example.com/page-{i}", b"<html></html>") for i in range(400)]
     rows += [(f"https://cold-{i}.example.org/x", b"<html></html>") for i in range(40)]
     df = spark.createDataFrame(rows, "url string, html binary")
 
     def hot_partition_spread(hot_hosts):
-        parted = repartition_by_host(
-            with_partitioning(df, hot_hosts=hot_hosts, buckets=4, salts=8), 16
-        )
+        parted = repartition_by_host(df, 16, hot_hosts=hot_hosts, salts=8)
         counts = (
             parted.filter(F.col("url").contains("hot.example.com"))
             .withColumn("pid", F.spark_partition_id())

@@ -95,8 +95,8 @@ def test_oversized_rows_become_error_rows(spark, pages_path):
 
 def test_no_gate_expressions_before_the_shuffle(spark, pages_path):
     # Routing runs inside the extraction UDF, so the stage feeding the
-    # shuffle is the scan, the size guard and url_bucket/salt: no regexp
-    # count, no aggregate lambda, no lower().
+    # shuffle is the scan and the size guard: no regexp count, no
+    # aggregate lambda, no lower().
     pages = spark.read.parquet(pages_path)
     config = ExtractionJobConfig(output_path="", resume=False, target_partitions=4)
     plan = _plan(extraction_plan(pages, config))

@@ -17,6 +17,7 @@ on multi-executor clusters"; deployment docs in jobs/extract_job.py.
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 import shutil
@@ -57,7 +58,6 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
             "--synthesize", "300",
             "--output", str(out_dir),
             "--buckets", "4",
-            "--salts", "2",
             "--no-resume",
         ],
         cwd=tmp_path,
@@ -83,6 +83,10 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert {"url", "extracted_text", "title", "content_mode"} <= cols
     n = duckdb.sql(f"SELECT count(*) FROM '{out_dir}/data/**/*.parquet'").fetchone()[0]
     assert n == 300
+    # The default shuffle is one task per bucket (--partitions = --buckets),
+    # so each bucket is written by exactly one task: one file per bucket.
+    files = glob.glob(f"{out_dir}/data/**/*.parquet", recursive=True)
+    assert len(files) == 4, files
 
 
 def test_spark_submit_day_scoped_incremental_run(spark, tmp_path):
@@ -117,7 +121,6 @@ def test_spark_submit_day_scoped_incremental_run(spark, tmp_path):
             "--until", day0,
             "--output", str(out_dir),
             "--buckets", "4",
-            "--salts", "2",
             "--no-resume",
         ],
         cwd=REPO,
