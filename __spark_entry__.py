@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from riptide_spark import oracle_queries as OQ  # noqa: E402
+from riptide_spark.session import apply_sql_conf  # noqa: E402
 
 TABLES = (
     "region",
@@ -60,8 +61,7 @@ def _register_views(spark: SparkSession, sf_dir: str) -> None:
 
 
 def _ensure_lossy_decode(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    apply_sql_conf(spark)
 
 
 def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,11 +8,14 @@ idempotent resume and the metrics sidecar. On a real cluster:
     spark-submit --master <cluster> \
         --py-files dist/riptide_spark.zip \
         jobs/extract_job.py --input <pages_dir> --output <table_dir> \
-        --metrics <metrics_dir> [--synthesize N] [--buckets B] [--partitions n]
+        --metrics <metrics_dir> [--synthesize N] [--buckets B]
 
-The extraction shuffle is url-keyed with the bucket's own hash, so with
-``--partitions`` n dividing ``--buckets`` B each task holds B/n whole
-buckets and the job writes B files; n defaults to B.
+The job runs with the engine's runtime SQL confs (``session.SQL_CONF``);
+a ``--conf`` given to spark-submit wins. The extraction shuffle is
+url-keyed with the bucket's own hash into n tasks, n dividing ``--buckets``
+B (``partitioning.extraction_partitions``: B on a cluster, fewer on a
+``local`` master), so each task holds B/n whole buckets and the job writes
+B files.
 
 JIT policy: ``build_session`` starts its driver JVM with
 ``-XX:CICompilerCount=2`` (one C1 and one C2 compiler thread), measured at
@@ -49,8 +52,6 @@ def main() -> None:
     parser.add_argument("--synthesize", type=int, default=0,
                         help="generate N synthetic pages instead of reading --input")
     parser.add_argument("--buckets", type=int, default=64)
-    parser.add_argument("--partitions", type=int, default=None,
-                        help="extraction shuffle partitions (default: --buckets)")
     parser.add_argument("--since", default=None, metavar="YYYY-MM-DD",
                         help="process crawl days >= this date (inclusive)")
     parser.add_argument("--until", default=None, metavar="YYYY-MM-DD",
@@ -61,11 +62,13 @@ def main() -> None:
     # getOrCreate: under spark-submit the session/master comes from the
     # launcher; standalone it falls back to the local defaults.
     spark = SparkSession.builder.appName("riptide-extract").getOrCreate()
-    spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
+    from riptide_spark.operators.partitioning import extraction_partitions
     from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job
+    from riptide_spark.session import apply_sql_conf, local_cores
     from riptide_spark.sources.pages import pages_dataframe
+
+    apply_sql_conf(spark)
 
     if args.synthesize:
         pages = pages_dataframe(spark, args.synthesize)
@@ -94,7 +97,9 @@ def main() -> None:
         output_path=args.output,
         metrics_path=args.metrics,
         buckets=args.buckets,
-        target_partitions=args.partitions or args.buckets,
+        target_partitions=extraction_partitions(
+            args.buckets, local_cores(spark.sparkContext.master)
+        ),
         resume=not args.no_resume,
     )
     result = run_extraction_job(spark, pages, config)

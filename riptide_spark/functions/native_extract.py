@@ -397,9 +397,7 @@ def _strip_html_tags(html: str) -> str:
     return _WS_RE.sub(" ", text).strip()
 
 
-def extract_native(
-    html: str, url: str, min_quality: int = 15, root: dom.Element | None = None
-) -> NativeDoc:
+def extract_native(html: str, url: str, root: dom.Element | None = None) -> NativeDoc:
     """parse_headless_html + extract_with_fallbacks (parser.rs:77-216).
     Pass an already-parsed ``root`` to avoid a second DOM parse when the
     caller also runs the metadata chains."""

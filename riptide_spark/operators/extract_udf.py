@@ -35,14 +35,28 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ..functions import chunking
-from ..functions.extract import ExtractionInvalid, extract_document
+from ..functions.extract import (
+    ExtractionInvalid,
+    detect_language,
+    extract_categories,
+    extract_document,
+    extract_title,
+    validate_input,
+)
 from ..functions.gate import route
-from ..functions.native_extract import extract_native
+from ..functions.native_extract import (
+    extract_native,
+    extract_native_byline,
+    extract_native_description,
+    extract_native_published,
+    extract_native_site_name,
+)
 from ..functions.pdftext import parse_pdf
+from ..html import dom
 from ..schema import EXTRACTED_STRUCT
 
 # Gate route → extraction mode. raw → fast article path; probes_first →
-# probe-then-escalate (row-local, see _extract_text); headless → the native
+# probe-then-escalate (row-local, see _page_row); headless → the native
 # DOM-heuristic path (the analog of extracting from a rendered DOM, with the
 # reference's quality-gated fallback ladder); pdf → pdf.
 MODE_FOR_ROUTE = {
@@ -52,25 +66,8 @@ MODE_FOR_ROUTE = {
     "pdf": "pdf",
 }
 
-_EMPTY = {
-    "title": None,
-    "byline": None,
-    "published_iso": None,
-    "extracted_text": None,
-    "markdown": None,
-    "links": None,
-    "media": None,
-    "language": None,
-    "reading_time": None,
-    "quality_score": None,
-    "word_count": None,
-    "categories": None,
-    "site_name": None,
-    "description": None,
-    "spans": None,
-    "escalated": False,
-    "extract_ms": None,
-}
+_FIELDS = EXTRACTED_STRUCT.fieldNames()
+_EMPTY = {**dict.fromkeys(_FIELDS), "escalated": False}
 
 
 def _decode_lossy(html) -> str:
@@ -81,7 +78,7 @@ def _decode_lossy(html) -> str:
     return str(html)
 
 
-def _pdf_row(url: str, html: bytes) -> dict:
+def _pdf_row(html: bytes) -> dict:
     """PDF branch (S7/E18) via the vendored classic-PDF parser
     (``functions/pdftext.py`` — pdfium is not in this container, so the
     deterministic subset parser stands in). Field mapping mirrors
@@ -94,36 +91,34 @@ def _pdf_row(url: str, html: bytes) -> dict:
     try:
         doc = parse_pdf(html)
     except Exception:  # PdfInvalid + any parser edge: fallback doc, not a task death
-        row = dict(_EMPTY)
-        row.update(
-            extracted_text="",
-            markdown="",
-            quality_score=20,
-            categories=["pdf", "error"],
-            links=[],
-            media=[],
-            description="Failed to process PDF document",
-        )
-        return {**row, "error": None}
+        return {
+            **_EMPTY,
+            "extracted_text": "",
+            "markdown": "",
+            "quality_score": 20,
+            "categories": ["pdf", "error"],
+            "links": [],
+            "media": [],
+            "description": "Failed to process PDF document",
+        }
     text = doc.text
     words = len(text.split())
-    row = dict(_EMPTY)
-    row.update(
-        title=doc.info.get("Title"),
-        byline=doc.info.get("Author"),
-        site_name=doc.info.get("Producer"),
-        description=doc.info.get("Subject"),
-        extracted_text=text,
-        markdown=text,
-        word_count=words,
-        reading_time=max(words // 200, 1),
-        quality_score=85,
-        categories=["document", "pdf"],
-        links=[],
-        media=[f"pdf:image:{i}" for i in range(doc.image_count)],
-        spans=chunking.spans_for_text(text),
-    )
-    return {**row, "error": None}
+    return {
+        **_EMPTY,
+        "title": doc.info.get("Title"),
+        "byline": doc.info.get("Author"),
+        "site_name": doc.info.get("Producer"),
+        "description": doc.info.get("Subject"),
+        "extracted_text": text,
+        "markdown": text,
+        "word_count": words,
+        "reading_time": max(words // 200, 1),
+        "quality_score": 85,
+        "categories": ["document", "pdf"],
+        "links": [],
+        "media": [f"pdf:image:{i}" for i in range(doc.image_count)],
+        "spans": chunking.spans_for_text(text),
+    }
 
 
 def _needs_escalation(doc: dict) -> bool:
@@ -144,23 +139,9 @@ def _dom_heuristic_doc(text: str, url: str, root=None) -> dict:
     computed — including per-link URL resolution — with native results;
     only language and categories survived, so only those are computed
     from the WASM side now."""
-    from ..functions.extract import (
-        detect_language,
-        extract_categories,
-        extract_title,
-        validate_input,
-    )
-    from ..functions.native_extract import (
-        extract_native_byline,
-        extract_native_description,
-        extract_native_published,
-        extract_native_site_name,
-    )
-    from ..html import dom as _dom
-
     validate_input(text, url)
     if root is None:
-        root = _dom.parse(text)
+        root = dom.parse(text)
     native = extract_native(text, url, root=root)
     title = native.title if native.title is not None else extract_title(root)
     return {
@@ -183,28 +164,20 @@ def _dom_heuristic_doc(text: str, url: str, root=None) -> dict:
     }
 
 
-def _extract_one(html, url: str, mode: str) -> dict:
+def _page_row(html, text: str | None, url: str, mode: str) -> dict:
+    """The row of one page in one mode; ``text`` is the page already
+    decoded, or None."""
     if mode == "pdf":
-        # Row isolation: a str-typed html column (bytes() raises TypeError
-        # without an encoding) must become an error row, not a task death.
-        try:
-            raw = (
-                html.encode("utf-8", "surrogateescape")
-                if isinstance(html, str)
-                else bytes(html) if html is not None else b""
-            )
-        except Exception as exc:
-            return {**_EMPTY, "error": f"internal: {type(exc).__name__}: {exc}"}
-        return _pdf_row(url, raw)
-    return _extract_text(_decode_lossy(html), url, mode)
-
-
-def _extract_text(text: str, url: str, mode: str) -> dict:
-    """Every non-PDF mode, over the lossy-decoded page."""
+        # A str-typed html column is re-encoded; bytes() would raise.
+        if isinstance(html, str):
+            return _pdf_row(html.encode("utf-8", "surrogateescape"))
+        return _pdf_row(bytes(html) if html is not None else b"")
     if mode == "oversize":
         # Blanked by the pipeline's 20 MB guard, which writes the message
         # with the true size (common_validation.rs:81-85).
         return {**_EMPTY, "error": "invalid-html: Content size exceeds maximum"}
+    if text is None:
+        text = _decode_lossy(html)
     if mode == "skip":
         # P10 skip_extraction passthrough (pipeline.rs:382-404): raw page
         # text as-is, no parsing, no enrichment.
@@ -217,85 +190,72 @@ def _extract_text(text: str, url: str, mode: str) -> dict:
             "media": [],
             "categories": [],
             "spans": [],
-            "error": None,
         }
     escalated = False
+    if mode == "probes_first":
+        # Two-phase probe: fast article pass; if the probe looks weak,
+        # escalate to the heavy DOM-heuristic pass *row-locally*. Doing
+        # this inside the UDF instead of a second Spark pass avoids a
+        # url-keyed shuffle/join at 10^12-row scale — escalation depends
+        # only on row-local data, so there is nothing to co-locate. The
+        # parse is shared across both phases (parsing dominates the
+        # pure-Python cost).
+        validate_input(text, url)
+        root = dom.parse(text)
+        doc = extract_document(text, url, "article", root=root)
+        if _needs_escalation(doc):
+            doc = _dom_heuristic_doc(text, url, root=root)
+            escalated = True
+    elif mode == "dom":
+        doc = _dom_heuristic_doc(text, url)
+    else:
+        doc = extract_document(text, url, mode)
+    # A document's fields keep their names in the row, but for its text.
+    row = {f: doc.get(f) for f in _FIELDS}
+    row.update(
+        extracted_text=doc["text"],
+        spans=chunking.spans_for_text(doc["text"]),
+        escalated=escalated,
+    )
+    return row
+
+
+def _extract_one(html, url: str, mode: str | None = None) -> dict:
+    """The one function from a page to an ``EXTRACTED_STRUCT`` row.
+
+    A null ``mode`` decodes the page once, routes it with the gate and
+    extracts it with :data:`MODE_FOR_ROUTE` of its route; any other value
+    ('article', 'dom', 'probes_first', 'metadata', 'full', 'pdf', 'skip',
+    'oversize') forces that mode. ``content_mode`` is the route, or the
+    forced mode. A failing row becomes an error row with null fields."""
+    text = None
+    if mode is None:
+        text = _decode_lossy(html)
+        content_mode = route(text, url or "")
+        mode = MODE_FOR_ROUTE[content_mode]
+    else:
+        content_mode = mode
+    started = time.perf_counter()
     try:
-        if mode == "probes_first":
-            # Two-phase probe: fast article pass; if the probe looks weak,
-            # escalate to the heavy DOM-heuristic pass *row-locally*. Doing
-            # this inside the UDF instead of a second Spark pass avoids a
-            # url-keyed shuffle/join at 10^12-row scale — escalation depends
-            # only on row-local data, so there is nothing to co-locate. The
-            # parse is shared across both phases (parsing dominates the
-            # pure-Python cost).
-            from ..html import dom as _dom
-
-            from ..functions.extract import validate_input as _vi
-
-            _vi(text, url)
-            root = _dom.parse(text)
-            doc = extract_document(text, url, "article", root=root)
-            if _needs_escalation(doc):
-                doc = _dom_heuristic_doc(text, url, root=root)
-                escalated = True
-        elif mode == "dom":
-            doc = _dom_heuristic_doc(text, url)
-        else:
-            doc = extract_document(text, url, mode)
+        row = _page_row(html, text, url, mode)
     except ExtractionInvalid as exc:
-        return {**_EMPTY, "error": f"invalid-html: {exc}"}
+        row = {**_EMPTY, "error": f"invalid-html: {exc}"}
     except Exception as exc:  # never kill the task for one row
-        return {**_EMPTY, "error": f"internal: {type(exc).__name__}: {exc}"}
-    return {
-        "escalated": escalated,
-        "title": doc["title"],
-        "byline": doc["byline"],
-        "published_iso": doc["published_iso"],
-        "extracted_text": doc["text"],
-        "markdown": doc["markdown"],
-        "links": doc["links"],
-        "media": doc["media"],
-        "language": doc["language"],
-        "reading_time": doc["reading_time"],
-        "quality_score": doc["quality_score"],
-        "word_count": doc["word_count"],
-        "categories": doc["categories"],
-        "site_name": doc["site_name"],
-        "description": doc["description"],
-        "spans": chunking.spans_for_text(doc["text"]),
-        "error": None,
-    }
+        row = {**_EMPTY, "error": f"internal: {type(exc).__name__}: {exc}"}
+    # Per-document extraction time, routing excluded (A2 metrics;
+    # ExtractionStats analog of wit extract-with-stats).
+    row["extract_ms"] = round((time.perf_counter() - started) * 1000.0, 3)
+    row["content_mode"] = content_mode
+    return row
 
 
 @F.pandas_udf(EXTRACTED_STRUCT)
 def extract_udf(html: pd.Series, url: pd.Series, mode: pd.Series) -> pd.DataFrame:
-    """Vectorized route-and-extract over one Arrow batch.
-
-    ``mode`` is per-row: null routes the row through the gate and extracts
-    with :data:`MODE_FOR_ROUTE` of its route; any other value ('article',
-    'dom', 'probes_first', 'metadata', 'full', 'pdf', 'skip', 'oversize')
-    forces that mode. ``content_mode`` is the route, or the forced mode.
-    """
-    rows = []
-    for h, u, m in zip(html, url, mode):
-        if m is None:
-            text = _decode_lossy(h)
-            content_mode = route(text, u or "")
-            m = MODE_FOR_ROUTE[content_mode]
-        else:
-            text, content_mode = None, m
-        started = time.perf_counter()
-        if text is None or m == "pdf":
-            row = _extract_one(h, u, m)
-        else:
-            row = _extract_text(text, u, m)
-        # Per-document extraction time, routing excluded (A2 metrics;
-        # ExtractionStats analog of wit extract-with-stats).
-        row["extract_ms"] = round((time.perf_counter() - started) * 1000.0, 3)
-        row["content_mode"] = content_mode
-        rows.append(row)
-    return pd.DataFrame(rows, columns=list(EXTRACTED_STRUCT.fieldNames()))
+    """Vectorized route-and-extract over one Arrow batch: :func:`_extract_one`
+    of each row, with its per-row ``mode``."""
+    return pd.DataFrame(
+        [_extract_one(h, u, m) for h, u, m in zip(html, url, mode)], columns=_FIELDS
+    )
 
 
 def extraction_mode_for_route(content_mode: Column) -> Column:

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .extract_udf import MODE_FOR_ROUTE
+
 
 def partition_metrics(result: DataFrame, run_id: str) -> DataFrame:
     """Aggregate the extraction result into one metrics row per output
@@ -28,14 +30,10 @@ def partition_metrics(result: DataFrame, run_id: str) -> DataFrame:
             F.count(F.lit(1)).alias("docs_total"),
             F.sum(ok.cast("long")).alias("docs_ok"),
             F.sum((~ok).cast("long")).alias("docs_failed"),
-            F.sum((F.col("content_mode") == "raw").cast("long")).alias("decision_raw"),
-            F.sum((F.col("content_mode") == "probes_first").cast("long")).alias(
-                "decision_probes_first"
-            ),
-            F.sum((F.col("content_mode") == "headless").cast("long")).alias(
-                "decision_headless"
-            ),
-            F.sum((F.col("content_mode") == "pdf").cast("long")).alias("decision_pdf"),
+            *[
+                F.sum((F.col("content_mode") == r).cast("long")).alias(f"decision_{r}")
+                for r in MODE_FOR_ROUTE
+            ],
             F.sum(F.coalesce(F.col("escalated"), F.lit(False)).cast("long")).alias(
                 "escalated"
             ),
@@ -45,20 +43,5 @@ def partition_metrics(result: DataFrame, run_id: str) -> DataFrame:
                 "total_words"
             ),
         )
-        .withColumn("run_id", F.lit(run_id))
-        .select(
-            "run_id",
-            "partition_id",
-            "docs_total",
-            "docs_ok",
-            "docs_failed",
-            "decision_raw",
-            "decision_probes_first",
-            "decision_headless",
-            "decision_pdf",
-            "escalated",
-            "avg_quality",
-            "avg_extract_ms",
-            "total_words",
-        )
+        .select(F.lit(run_id).alias("run_id"), "*")
     )

@@ -150,15 +150,18 @@ def _table_salt(table: int) -> str:
 
 
 # Plane components are precomputed for dims below this and read from a
-# literal array inside the projection lambda; wider vectors fall back to
+# constant array inside the projection lambda; wider vectors fall back to
 # the md5 expression for the dims past it.
 _LITERAL_DIMS = 256
 
 
-def _plane_component(dim_index: Column, plane: int, table: int = 0) -> Column:
+def _plane_component(dim_index: Column, plane: Column, table: int = 0) -> Column:
     """Deterministic pseudo-random hyperplane component in [-0.5, 0.5):
     md5-derived, reproducible in any engine."""
-    key = F.concat(F.lit(f"{_table_salt(table)}plane{plane}:"), dim_index.cast("string"))
+    key = F.concat(
+        F.lit(f"{_table_salt(table)}plane"), plane.cast("string"), F.lit(":"),
+        dim_index.cast("string"),
+    )
     h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("double")
     return h / F.lit(4294967296.0) - 0.5
 
@@ -181,27 +184,37 @@ def _plane_components(plane: int, table: int, dims: int) -> tuple[float, ...]:
 def lsh_signature(vec: Column, planes: int = 8, table: int = 0) -> Column:
     """Random-hyperplane sign signature packed into an int. ``table``
     selects an independent plane family (OR-construction); table 0 is the
-    original family. Components come from a literal per-plane array (one
-    multiply-add per dim), the md5 expression only past ``_LITERAL_DIMS``."""
-    dims = F.transform(vec, lambda x, i: F.struct(x.alias("v"), i.alias("i")))
+    original family.
 
-    def _projector(plane: int):
-        # One string literal cast to array<double> (folded to a constant by
-        # the optimizer), not 256 literal nodes: those cost ~1 s of py4j
-        # calls and analysis per signature. ``repr`` round-trips a double.
-        comps = ",".join(repr(c) for c in _plane_components(plane, table, _LITERAL_DIMS))
-        lits = F.split(F.lit(comps), ",").cast("array<double>")
-        # NB: a plain `lambda acc, d, p=p:` would read as a 3-arg lambda to
-        # PySpark's arity inspection; close over the plane index instead.
-        return lambda acc, d: acc + d["v"] * F.coalesce(
-            F.get(lits, d["i"]), _plane_component(d["i"], plane, table)
+    One ``aggregate`` over the vector with a ``planes``-slot accumulator:
+    slot p adds ``v_i * c_pi`` in element order, the left fold
+    :func:`lsh_signature_py` makes per plane, so every sign matches it.
+    Components come from one constant array of planes × ``_LITERAL_DIMS``
+    (``c_pi`` at ``p * _LITERAL_DIMS + i``), the md5 expression only past
+    it. A null vector signs 0."""
+    # One string literal cast to array<double>, folded to a constant by the
+    # optimizer. ``repr`` round-trips a double.
+    comps = ",".join(
+        repr(c) for p in range(planes) for c in _plane_components(p, table, _LITERAL_DIMS)
+    )
+    lits = F.split(F.lit(comps), ",").cast("array<double>")
+
+    def component(p: Column, i: Column) -> Column:
+        return F.when(i < _LITERAL_DIMS, F.get(lits, p * _LITERAL_DIMS + i)).otherwise(
+            _plane_component(i, p, table)
         )
 
-    sig = F.lit(0)
-    for p in range(planes):
-        proj = F.aggregate(dims, F.lit(0.0), _projector(p))
-        sig = sig + F.when(proj > 0, F.lit(1 << p)).otherwise(0)
-    return sig
+    dims = F.transform(vec, lambda x, i: F.struct(x.alias("v"), i.alias("i")))
+    proj = F.aggregate(
+        dims,
+        F.array_repeat(F.lit(0.0), planes),
+        lambda acc, d: F.transform(acc, lambda s, p: s + d["v"] * component(p, d["i"])),
+    )
+    # Bit p is plane p's sign: Horner's rule from the last plane.
+    sig = F.aggregate(
+        F.reverse(proj), F.lit(0), lambda a, s: a * 2 + F.when(s > 0, 1).otherwise(0)
+    )
+    return F.coalesce(sig, F.lit(0))
 
 
 def lsh_signature_py(vec, planes: int = 8, table: int = 0) -> int:
@@ -273,7 +286,9 @@ def ann_topk_lsh_batch(
     corpus = embeddings.select(
         id_col, vec_col, F.posexplode(sigs).alias("lsh_table", "lsh_bucket")
     )
-    masks = _probe_masks(planes, hamming)
+    # One constant array (a string literal cast), not a node per mask.
+    mask_csv = ",".join(map(str, _probe_masks(planes, hamming)))
+    masks = F.split(F.lit(mask_csv), ",").cast("array<int>")
     probes = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("query_vec"),
@@ -283,7 +298,7 @@ def ann_topk_lsh_batch(
         "query_vec",
         "query_table",
         F.explode(
-            F.array(*[F.col("query_bucket").bitwiseXOR(F.lit(m)) for m in masks])
+            F.transform(masks, lambda m: F.col("query_bucket").bitwiseXOR(m))
         ).alias("probe_bucket"),
     )
     candidates = corpus.join(
@@ -332,7 +347,6 @@ def write_lsh_index(
     embeddings: DataFrame,
     path: str,
     planes: int = 8,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     tables: int = 1,
 ) -> None:

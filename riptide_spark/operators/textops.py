@@ -1,8 +1,8 @@
 """Text-analysis operators for training-data pipelines (all JVM-side).
 
 Language-ID (stopword-profile votes), quality scoring (length / punctuation
-/ stopword ratios), token counting (whitespace + BPE-ish regex), document
-fingerprinting, and the reference's regex-extraction operator (E21,
+/ stopword ratios), token counting (whitespace + BPE-ish regex) and the
+reference's regex-extraction operator (E21,
 ``/root/reference/crates/riptide-extraction/src/regex_extraction.rs:215-266``)
 — every one a built-in column expression with a 1:1 ANSI-SQL equivalent used
 as the DuckDB oracle.
@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.langid import STOPWORD_PROFILES
+from .dedup import _words
 
 # Default regex set mirroring regex_extraction.rs defaults (email, url,
 # iso-date, us-phone, price).
@@ -30,7 +31,7 @@ BPE_ISH_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
 def whitespace_tokens(text: Column) -> Column:
-    return F.size(F.split(F.trim(text), r"\s+")).cast("bigint")
+    return F.size(_words(text)).cast("bigint")
 
 
 def bpeish_tokens(text: Column) -> Column:
@@ -91,8 +92,3 @@ def quality_signal_columns(text: Column) -> dict[str, Column]:
         ).cast("double"),
     }
     return signals
-
-
-def doc_fingerprint(text: Column) -> Column:
-    """Stable document fingerprint: md5 of whitespace-normalized lowercase."""
-    return F.md5(F.regexp_replace(F.trim(F.lower(text)), r"\s+", " "))

@@ -97,38 +97,22 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
     mode = F.when(F.col("_oversize_bytes").isNotNull(), F.lit("oversize"))
     df = df.withColumn("ex", extract_udf(F.col("html"), F.col("url"), mode))
 
-    flat = df.select(
+    cols = {c: F.col(f"ex.{c}") for c in OUTPUT_COLUMNS[1:]}
+    # The UDF saw only blanked html; write the reference's exact message
+    # with the true size.
+    cols["error"] = F.when(
+        F.col("_oversize_bytes").isNotNull(),
+        F.format_string(
+            "invalid-html: Content size %d exceeds maximum %d",
+            F.col("_oversize_bytes"),
+            F.lit(MAX_CONTENT_BYTES),
+        ),
+    ).otherwise(cols["error"])
+    return df.select(
         "url",
-        F.col("ex.extracted_text").alias("extracted_text"),
-        F.col("ex.title").alias("title"),
-        F.col("ex.spans").alias("spans"),
-        F.col("ex.content_mode").alias("content_mode"),
-        F.col("ex.byline").alias("byline"),
-        F.col("ex.published_iso").alias("published_iso"),
-        F.col("ex.language").alias("language"),
-        F.col("ex.reading_time").alias("reading_time"),
-        F.col("ex.quality_score").alias("quality_score"),
-        F.col("ex.word_count").alias("word_count"),
-        F.col("ex.links").alias("links"),
-        F.col("ex.media").alias("media"),
-        F.col("ex.categories").alias("categories"),
-        F.col("ex.site_name").alias("site_name"),
-        F.col("ex.description").alias("description"),
-        F.col("ex.escalated").alias("escalated"),
-        F.col("ex.extract_ms").alias("extract_ms"),
-        # The UDF saw only blanked html; write the reference's exact
-        # message with the true size.
-        F.when(
-            F.col("_oversize_bytes").isNotNull(),
-            F.format_string(
-                "invalid-html: Content size %d exceeds maximum %d",
-                F.col("_oversize_bytes"),
-                F.lit(MAX_CONTENT_BYTES),
-            ),
-        ).otherwise(F.col("ex.error")).alias("error"),
+        *[col.alias(c) for c, col in cols.items()],
         url_bucket_column(buckets=config.buckets).alias("url_bucket"),
     )
-    return flat
 
 
 def resume_anti_join(pages: DataFrame, done: DataFrame) -> DataFrame:

@@ -36,54 +36,35 @@ SPAN_TYPE = T.StructType(
 
 # Return struct of the extraction pandas UDF (the WASM `extract` contract —
 # wit/extractor.wit:18-49 — plus spans, the gate's route and an error column
-# for row isolation).
+# for row isolation), in the output table's column order. ``markdown`` is
+# last: the UDF returns it, the output table does not keep it.
 EXTRACTED_STRUCT = T.StructType(
     [
+        T.StructField("extracted_text", T.StringType(), True),
         T.StructField("title", T.StringType(), True),
+        T.StructField("spans", T.ArrayType(SPAN_TYPE), True),
+        T.StructField("content_mode", T.StringType(), True),
         T.StructField("byline", T.StringType(), True),
         T.StructField("published_iso", T.StringType(), True),
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField("markdown", T.StringType(), True),
-        T.StructField("links", T.ArrayType(T.StringType()), True),
-        T.StructField("media", T.ArrayType(T.StringType()), True),
         T.StructField("language", T.StringType(), True),
         T.StructField("reading_time", T.IntegerType(), True),
         T.StructField("quality_score", T.IntegerType(), True),
         T.StructField("word_count", T.IntegerType(), True),
+        T.StructField("links", T.ArrayType(T.StringType()), True),
+        T.StructField("media", T.ArrayType(T.StringType()), True),
         T.StructField("categories", T.ArrayType(T.StringType()), True),
         T.StructField("site_name", T.StringType(), True),
         T.StructField("description", T.StringType(), True),
-        T.StructField("spans", T.ArrayType(SPAN_TYPE), True),
         T.StructField("escalated", T.BooleanType(), True),
         T.StructField("extract_ms", T.DoubleType(), True),
-        T.StructField("content_mode", T.StringType(), True),
         T.StructField("error", T.StringType(), True),
+        T.StructField("markdown", T.StringType(), True),
     ]
 )
 
 # Final output table (north rule): url, extracted_text, title, spans,
 # content_mode — plus enrichment fields and lineage.
-OUTPUT_COLUMNS = [
-    "url",
-    "extracted_text",
-    "title",
-    "spans",
-    "content_mode",
-    "byline",
-    "published_iso",
-    "language",
-    "reading_time",
-    "quality_score",
-    "word_count",
-    "links",
-    "media",
-    "categories",
-    "site_name",
-    "description",
-    "escalated",
-    "extract_ms",
-    "error",
-]
+OUTPUT_COLUMNS = ["url"] + EXTRACTED_STRUCT.fieldNames()[:-1]
 
 # The output table's written row; its Hive partition column ``url_bucket``
 # is discovered from the directory names on read.

@@ -49,9 +49,29 @@ from .operators.partitioning import DEFAULT_BUCKETS
 # tests/test_pipeline.py::test_near_cap_documents_cross_arrow_in_bounded_batches).
 # Override on memory-tight executors with Spark's own
 # spark.sql.execution.arrow.* confs: ``extra_conf`` here, ``--conf`` for
-# jobs/extract_job.py (which does not use this factory).
+# jobs/extract_job.py.
 ARROW_MAX_RECORDS = 512
 ARROW_MAX_BYTES = 64 * 1024 * 1024
+
+# The runtime SQL confs every session of the engine runs with.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(ARROW_MAX_BYTES),
+    "spark.sql.session.timeZone": "UTC",
+    # Lossy UTF-8 decode (U+FFFD replacement) for the html binary column,
+    # matching Rust String::from_utf8_lossy (pipeline.rs:332). Without
+    # this Spark 4's decode() raises MALFORMED_CHARACTER_CODING.
+    "spark.sql.legacy.codingErrorAction": "true",
+    # Spark lists more than `threshold` directories in a Spark job (32 by
+    # default), so every read of a table written in DEFAULT_BUCKETS url
+    # buckets would start a job to list them. Up to that many are listed
+    # on the driver; wider fan-outs keep parallel listing.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": str(DEFAULT_BUCKETS),
+}
 
 # JIT policy of the driver JVM (see the module docstring).
 DRIVER_JAVA_OPTIONS = "-XX:CICompilerCount=2"
@@ -81,34 +101,24 @@ def build_session(
     if shuffle_partitions is None:
         shuffle_partitions = local_cores(master)
 
-    builder = SparkSession.builder.appName(app_name).master(master)
+    conf = dict(SQL_CONF)
     if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    builder = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
-        .config("spark.sql.session.timeZone", "UTC")
-        # Lossy UTF-8 decode (U+FFFD replacement) for the html binary column,
-        # matching Rust String::from_utf8_lossy (pipeline.rs:332). Without
-        # this Spark 4's decode() raises MALFORMED_CHARACTER_CODING.
-        .config("spark.sql.legacy.codingErrorAction", "true")
-        # Spark lists more than `threshold` directories in a Spark job (32 by
-        # default), so every read of a table written in DEFAULT_BUCKETS url
-        # buckets would start a job to list them. Up to that many are
-        # listed on the driver; wider fan-outs keep parallel listing.
-        .config(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            str(DEFAULT_BUCKETS),
-        )
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.driver.defaultJavaOptions", DRIVER_JAVA_OPTIONS)
-    )
-    for key, value in (extra_conf or {}).items():
-        builder = builder.config(key, value)
-    return builder.getOrCreate()
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf.update({
+        "spark.python.worker.reuse": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        "spark.driver.defaultJavaOptions": DRIVER_JAVA_OPTIONS,
+        **(extra_conf or {}),
+    })
+    return SparkSession.builder.appName(app_name).master(master).config(map=conf).getOrCreate()
+
+
+def apply_sql_conf(spark: SparkSession) -> None:
+    """Set :data:`SQL_CONF` on a session this module did not build (a
+    spark-submit job, a caller's own builder). A value the session was
+    launched with (``--conf``, a builder's ``config``) is kept."""
+    launched = spark.sparkContext.getConf()
+    for key, value in SQL_CONF.items():
+        if not launched.contains(key):
+            spark.conf.set(key, value)

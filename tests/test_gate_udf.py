@@ -2,7 +2,8 @@
 ``functions.gate.route`` of its page, through the batch job and through the
 stream (which runs the batch job on each micro-batch), on a corpus that
 covers every archetype, the rows with invalid UTF-8 and one oversized row,
-which both paths turn into the same ``oversize`` error row."""
+which both paths turn into the same ``oversize`` error row. Every other
+batch row is ``_extract_one`` of its page, called outside Spark."""
 
 from __future__ import annotations
 
@@ -10,12 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from riptide_spark.functions.gate import route
+from riptide_spark.operators.extract_udf import _extract_one
 from riptide_spark.plans.pipeline import (
     MAX_CONTENT_BYTES,
     ExtractionJobConfig,
     run_extraction_job,
 )
-from riptide_spark.schema import PAGES_SCHEMA
+from riptide_spark.schema import OUTPUT_COLUMNS, PAGES_SCHEMA
 from riptide_spark.sources.catalog import TableIO
 from riptide_spark.sources.pages import ARCHETYPES, synth_pages
 from riptide_spark.streaming.ndjson import StreamConfig, start_stream
@@ -62,14 +64,35 @@ def _routes(pages) -> dict[str, str]:
     return {p["url"]: route(p["html"].decode("utf-8", "replace"), p["url"]) for p in pages}
 
 
-def test_batch_job_content_mode_is_the_gate_route(spark, corpus, tmp_path):
+@pytest.fixture(scope="module")
+def batch_rows(spark, corpus, tmp_path_factory):
+    """The batch job's output table over the corpus, by url."""
     pages, oversize = corpus
-    cfg = ExtractionJobConfig(output_path=str(tmp_path / "out"), resume=False,
-                              target_partitions=4)
+    cfg = ExtractionJobConfig(output_path=str(tmp_path_factory.mktemp("gate_udf") / "out"),
+                              resume=False, target_partitions=4)
     run_extraction_job(spark, _frame(spark, pages, oversize), cfg)
-    got = dict(TableIO(spark, cfg.output_path).read().select("url", "content_mode").collect())
+    rows = TableIO(spark, cfg.output_path).read().collect()
+    return {r["url"]: r.asDict(recursive=True) for r in rows}
+
+
+def test_batch_job_content_mode_is_the_gate_route(corpus, batch_rows):
+    pages, oversize = corpus
+    got = {url: r["content_mode"] for url, r in batch_rows.items()}
     assert got.pop(oversize["url"]) == "oversize"
     assert got == _routes(pages)
+
+
+def test_batch_rows_are_extract_one_of_the_page(corpus, batch_rows):
+    """Routing, extraction and the row mapping are one function: every
+    batch row but the oversize one (forced by the pipeline) equals
+    ``_extract_one`` of its page with no mode, ``content_mode`` included."""
+    pages, oversize = corpus
+    assert set(batch_rows) == {p["url"] for p in pages} | {oversize["url"]}
+    fields = [c for c in OUTPUT_COLUMNS if c not in ("url", "extract_ms")]
+    for page in pages:
+        want = _extract_one(page["html"], page["url"])
+        row = batch_rows[page["url"]]
+        assert {f: row[f] for f in fields} == {f: want[f] for f in fields}, page["url"]
 
 
 def test_streaming_plan_content_mode_is_the_gate_route(spark, corpus, tmp_path):

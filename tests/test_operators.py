@@ -283,9 +283,9 @@ def test_ivf_distributed_training_path(spark, embeddings):
 
 
 def test_textops_match_sql(spark, docs):
+    from riptide_spark.operators.dedup import exact_fingerprint
     from riptide_spark.operators.textops import (
         bpeish_tokens,
-        doc_fingerprint,
         langid_columns,
         quality_signal_columns,
         whitespace_tokens,
@@ -314,7 +314,7 @@ def test_textops_match_sql(spark, docs):
         sql_q.select(*sorted(sql_q.columns))
     )
 
-    api_fp = docs.select("doc_id", doc_fingerprint(F.col("text")).alias("fingerprint"))
+    api_fp = docs.select("doc_id", exact_fingerprint(F.col("text")).alias("fingerprint"))
     sql_fp = spark.sql(OQ.spark_sql("doc_fingerprints"))
     assert _rows(api_fp) == _rows(sql_fp)
 
@@ -620,10 +620,11 @@ def test_star_overflow_keeps_distinct_flood_connected(spark):
 @pytest.mark.skipif(
     not os.path.isdir("/root/testdata/sf0.01"), reason="sf0.01 testdata not present"
 )
-def test_lsh_signature_matches_driver_twin_every_table(spark):
-    """The Spark signature reads plane components from literal arrays below
-    256 dims and from the md5 expression past them; both must stay
-    bit-identical to lsh_signature_py for every plane family."""
+@pytest.mark.parametrize("planes", [1, 6, 8, 16])
+def test_lsh_signature_matches_driver_twin_every_table(spark, planes):
+    """The Spark signature reads plane components from one constant array
+    below 256 dims and from the md5 expression past them; both must stay
+    bit-identical to lsh_signature_py for every plane count and family."""
     from riptide_spark.operators.similarity import lsh_signature, lsh_signature_py
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
@@ -635,14 +636,16 @@ def test_lsh_signature_matches_driver_twin_every_table(spark):
         "vec_id",
         "embedding",
         *[
-            lsh_signature(F.col("embedding").cast("array<double>"), 8, table=t).alias(f"s{t}")
+            lsh_signature(F.col("embedding").cast("array<double>"), planes, table=t)
+            .alias(f"s{t}")
             for t in range(3)
         ],
     ).collect()
     assert len(rows) > 100 and any(len(r["embedding"]) == 300 for r in rows)
     for r in rows:
         for t in range(3):
-            assert lsh_signature_py(r["embedding"], 8, table=t) == r[f"s{t}"], (r["vec_id"], t)
+            assert lsh_signature_py(r["embedding"], planes, table=t) == r[f"s{t}"], (
+                r["vec_id"], t)
 
 
 def test_ivf_index_partition_pruning(spark, tmp_path):

@@ -9,13 +9,16 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
+from riptide_spark.operators.partitioning import extraction_partitions
 from riptide_spark.plans.pipeline import (
     ExtractionJobConfig,
     extraction_plan,
     run_extraction_job,
 )
+from riptide_spark.session import local_cores
 from riptide_spark.sources.pages import pages_dataframe
 
 B = 64
@@ -81,3 +84,14 @@ def test_job_writes_one_file_per_bucket(spark, tmp_path):
     assert result.rows_written == 1_000
     buckets = {f.split("url_bucket=", 1)[1].split("/", 1)[0] for f in result.files}
     assert len(result.files) == len(buckets), sorted(result.files)
+
+
+@pytest.mark.parametrize(
+    "master, n",
+    [("local[1]", 2), ("local[3]", 4), ("local[4]", 8), ("local[32]", 64),
+     ("spark://head:7077", B), ("yarn", B)],
+)
+def test_shuffle_width_divides_the_buckets(master, n):
+    """The spark-submit job's shuffle width: the largest divisor of B at
+    most 2 × cores on a local master, B on any other."""
+    assert extraction_partitions(B, local_cores(master)) == n

@@ -281,6 +281,17 @@ def test_batch_ann_plans_stay_equi_join(spark):
         assert "BroadcastNestedLoopJoin" not in plan, plan[:500]
 
 
+@pytest.mark.parametrize("planes", [2, 8, 16])
+def test_lsh_signature_is_one_aggregate_over_the_vector(spark, planes):
+    """Every plane's projection rides one ``planes``-slot accumulator: the
+    signature reads the vector with one ``aggregate``, however many planes."""
+    from riptide_spark.operators.similarity import lsh_signature
+
+    df = spark.createDataFrame([([0.5, -1.0],)], "v array<double>")
+    plan = df.select(lsh_signature(F.col("v"), planes))._jdf.queryExecution().analyzed()
+    assert len(re.findall(r"aggregate\(transform\(v#", plan.toString())) == 1
+
+
 def test_single_query_topk_is_a_partial_window_group_limit(spark, tmp_path):
     """A single query runs the batch operator on a one-row query frame, so
     for k under ``spark.sql.optimizer.windowGroupLimitThreshold`` its

@@ -83,8 +83,8 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert {"url", "extracted_text", "title", "content_mode"} <= cols
     n = duckdb.sql(f"SELECT count(*) FROM '{out_dir}/data/**/*.parquet'").fetchone()[0]
     assert n == 300
-    # The default shuffle is one task per bucket (--partitions = --buckets),
-    # so each bucket is written by exactly one task: one file per bucket.
+    # The shuffle width divides --buckets (here 4 on local[4]), so each
+    # bucket is written by exactly one task: one file per bucket.
     files = glob.glob(f"{out_dir}/data/**/*.parquet", recursive=True)
     assert len(files) == 4, files
 
