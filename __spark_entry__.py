@@ -60,10 +60,6 @@ def _register_views(spark: SparkSession, sf_dir: str) -> None:
             spark.read.parquet(path).createOrReplaceTempView(table)
 
 
-def _ensure_lossy_decode(spark: SparkSession) -> None:
-    apply_sql_conf(spark)
-
-
 def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Common-Crawl-shaped pages built from `documents` —
     same construction as the oracle's pages CTE, but with html as binary
@@ -82,7 +78,7 @@ def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: gate → route → Arrow extraction over sf0.001 pages."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.plans.pipeline import extraction_plan, ExtractionJobConfig
 
     pages = _pages_from_documents(spark, "/root/testdata/sf0.001")
@@ -108,7 +104,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _ensure_lossy_decode(spark)
+        apply_sql_conf(spark)
         _register_views(spark, sf_dir)
         return spark.sql(OQ.spark_sql(name))
 
@@ -117,7 +113,7 @@ def _sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def _q_extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.plans.pipeline import extraction_plan, ExtractionJobConfig
 
     pages = _pages_from_documents(spark, sf_dir)
@@ -134,7 +130,7 @@ def _q_extract_golden_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle constants IS byte-identity vs the reference's goldens
     (wasm/riptide-extractor-wasm/tests/golden/mod.rs:75-146), surfaced as
     a driver CORRECTNESS row instead of only a pytest pin."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.extract_udf import extract_udf
     from riptide_spark.sources.golden import GOLDEN_CASES, load_fixture
 
@@ -161,7 +157,7 @@ def _q_extract_pipeline_invariants(spark: SparkSession, sf_dir: str) -> DataFram
     error rows, all titles extracted, and every word_count inside the
     per-document envelope (see ``udf_oracle_extract_pipeline_invariants``
     for the derivation)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.plans.pipeline import ExtractionJobConfig, extraction_plan
 
     pages = _pages_from_documents(spark, sf_dir)
@@ -192,7 +188,7 @@ def _q_events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (batch here, so the driver can oracle it against DuckDB
     time_bucket); late-data semantics are pinned by
     ``tests/test_streaming_events.py``."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.streaming.events import windowed_event_counts
 
     _register_views(spark, sf_dir)
@@ -205,7 +201,7 @@ def _chunk_stats(
     """Per-doc ``(n_chunks, total_tokens, last_end_pos)`` of ``chunker``
     applied to each value of ``documents.<column>``: the one pandas UDF the
     chunker queries share."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
 
     @F.pandas_udf("n_chunks int, total_tokens long, last_end_pos long")
@@ -285,7 +281,7 @@ def _q_table_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion (``table_extraction/extractor.rs:328-366``). Output columns
     are sortable scalars (arrays flattened via array_join) so the driver
     can canonicalize them; oracled by ``udf_oracle_table_extraction``."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from riptide_spark.operators.table_udf import with_tables
 
@@ -320,7 +316,7 @@ def _q_pdf_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     every output column from the generating table
     (``udf_oracle_pdf_extraction``). Field mapping per
     ``crates/riptide-pdf/src/processor.rs:642-760``."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from pyspark.sql import types as T
 
@@ -371,7 +367,7 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so the oracle derives every column in closed form
     (``udf_oracle_multimodal_decode``); the probe pixel pins row order
     and stride padding."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from pyspark.sql import types as T
 
@@ -419,7 +415,7 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_css_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSS-JSON field extraction with transformers over synthesized pages."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.functions.css_extract import FieldConfig
     from riptide_spark.operators.css_udf import with_css_fields
 
@@ -445,7 +441,7 @@ def _q_native_dom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the body-text fallback; ``udf_oracle_native_dom_extraction``
     re-derives the clean-text assembly, markdown rendering and quality
     rubric (content.rs:11-206, quality.rs:7-56) in SQL."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from riptide_spark.operators.extract_udf import extract_udf
 
@@ -476,7 +472,7 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate nearest neighbours (scale path of ANN),
     multi-probe: all buckets within Hamming distance 2 of the query
     signature are scanned (22 of 64 at 6 planes)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import ann_topk_lsh
 
     _register_views(spark, sf_dir)
@@ -490,7 +486,7 @@ def _q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH path against the oracled brute force — the LSH analog of
     ``similarity_ann_ivf``, but with a FULL SQL oracle (no pinned
     constants; see ``udf_oracle_similarity_ann_lsh_recall``)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import ann_topk_lsh, cosine_topk
 
     _register_views(spark, sf_dir)
@@ -589,7 +585,7 @@ def _q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted on the physical plan). Returns the same top-k rows as the
     in-memory multi-probe path, so it shares that full SQL oracle
     (``udf_oracle_similarity_ann_lsh``)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import ann_topk_lsh_index, write_lsh_index
 
     _register_views(spark, sf_dir)
@@ -609,7 +605,7 @@ def _q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned n_probe read, and report recall@k vs the oracled
     brute force — the same summary shape (and pinned constants) as the
     in-memory IVF path, since the index read returns identical rows."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_ivf_index,
         cosine_topk,
@@ -671,7 +667,7 @@ def _q_ann_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch path routes EVERY query to its probe buckets in one equi-join
     (no per-query driver round-trips); per-query recall vs the batch
     brute force, fully SQL-oracled."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_lsh_batch,
         cosine_topk_batch,
@@ -695,7 +691,7 @@ def _q_ann_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction vs 0.42 for the single-table row at the SAME budget — the
     equal-cost comparison the OR-construction exists to win. Fully
     SQL-oracled (per-table salted plane families, OR of Hamming terms)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_lsh_batch,
         cosine_topk_batch,
@@ -718,7 +714,7 @@ def _q_ann_ivf_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall vs the batch brute force; deterministic end-to-end, so the
     per-query recalls are pinned per corpus
     (``udf_oracle_similarity_ann_ivf_batch_recall``)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_ivf_batch,
         cosine_topk_batch,
@@ -740,7 +736,7 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (stride sample, fixed Lloyd iterations, id tie-breaks),
     so the overlap/recall is a pure function of the embeddings table —
     pinned by ``udf_oracle_similarity_ann_ivf`` per corpus size."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import ann_topk_ivf, cosine_topk
 
     _register_views(spark, sf_dir)
@@ -764,7 +760,7 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_schema_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-driven extraction (E22): learn the article schema template,
     broadcast it as config, apply per page inside a pandas UDF."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from pyspark.sql import types as T
 
     from riptide_spark.functions.schema_learn import (
@@ -811,7 +807,7 @@ def _q_schema_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_strategy_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strategy composition (§2.11): best-of {article, dom, css} per page
     inside the Arrow UDF — winner strategy + confidence per url."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from pyspark.sql import types as T
 
     pages = _pages_from_documents(spark, sf_dir)
@@ -872,7 +868,7 @@ def _q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operator-backed override of the SQL rendering: same values, but the
     md5-per-word fingerprint scan is checkpointed once instead of being
     recomputed for the band explode and both verify join sides."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import simhash_near_pairs
 
     return simhash_near_pairs(_dup_corpus(spark, sf_dir), materialize=True)
@@ -882,7 +878,7 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-bucket candidate pairs via the DataFrame operator (one
     checkpointed shingle+signature scan — the SQL rendering recomputes the
     scan once per self-join side, ~5× the wall at sf0.1)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import minhash_candidate_pairs
 
     return minhash_candidate_pairs(_dup_corpus(spark, sf_dir), materialize=True)
@@ -892,7 +888,7 @@ def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard verification of MinHash-LSH candidates via the
     DataFrame operator (one checkpointed shingle+signature scan — the SQL
     rendering recomputes the scan once per join side)."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(_dup_corpus(spark, sf_dir))
@@ -906,7 +902,7 @@ def _q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation with pointer jumping, O(log diameter) rounds.
     ``materialize=True`` checkpoints the band buckets so the MinHash
     cascade is computed once, not once per self-join side."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import (
         connected_components,
         minhash_candidate_pairs,
@@ -929,7 +925,7 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``plans/curation.curation_verdicts`` (also the sf1 scale-dial path,
     ``bench.py --scale-dial``); the composition itself is oracled by
     ``udf_oracle_corpus_curation``."""
-    _ensure_lossy_decode(spark)
+    apply_sql_conf(spark)
     from riptide_spark.plans.curation import curation_verdicts
 
     return curation_verdicts(_dup_corpus(spark, sf_dir))

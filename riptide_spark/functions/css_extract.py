@@ -283,22 +283,6 @@ def _clean_selector(selector: str) -> tuple[str, HasTextFilter | None]:
     return "".join(out).strip(), has_text
 
 
-def _element_text(el: dom.Element) -> str:
-    content = el.get("content")
-    if content is not None:
-        return content
-    # scraper path: text nodes joined by single spaces, trimmed.
-    parts: list[str] = []
-    stack: list[object] = list(reversed(el.children))
-    while stack:
-        node = stack.pop()
-        if isinstance(node, str):
-            parts.append(node)
-        else:
-            stack.extend(reversed(node.children))
-    return " ".join(parts).strip()
-
-
 def extract_field(root: dom.Element, config: FieldConfig, base_url: str) -> list[str]:
     for selector in [config.selector, *config.fallbacks]:
         cleaned, inline_filter = _clean_selector(selector)
@@ -307,7 +291,9 @@ def extract_field(root: dom.Element, config: FieldConfig, base_url: str) -> list
         has_text = config.has_text or inline_filter
         values: list[str] = []
         for el in dom.query_selector_all(root, cleaned):
-            text = _element_text(el)
+            text = el.get("content")
+            if text is None:
+                text = dom.joined_text(el)
             if not text:
                 continue
             if has_text is not None and not has_text.matches(text):

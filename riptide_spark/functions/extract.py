@@ -114,22 +114,11 @@ def validate_mode(mode: str, selectors: list[str] | None) -> None:
 
 def extract_title(root: dom.Element) -> str | None:
     """<title> → meta[property='og:title'] → first <h1>. (lib.rs:374-425)"""
-    node = dom.query_selector(root, "title")
-    if node is not None:
-        trimmed = node.inner_text().strip()
-        if trimmed:
-            return trimmed
-    node = dom.query_selector(root, "meta[property='og:title']")
-    if node is not None:
-        content = node.get("content")
-        if content:
-            return content
-    node = dom.query_selector(root, "h1")
-    if node is not None:
-        trimmed = node.inner_text().strip()
-        if trimmed:
-            return trimmed
-    return None
+    title = dom.first_text(root, ("title",))
+    if title is None:
+        og = dom.query_selector(root, "meta[property='og:title']")
+        title = (og.get("content") if og is not None else None) or dom.first_text(root, ("h1",))
+    return title
 
 
 def extract_meta_content(root: dom.Element, properties: tuple[str, ...]) -> str | None:

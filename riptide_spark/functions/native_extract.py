@@ -62,18 +62,9 @@ def _subtree_query(el: dom.Element, selector: str) -> list[dom.Element]:
     """Selector matches over the subtree *including* the element itself
     (the reference re-parses element.html() as a fragment, so the root
     element participates in matching)."""
-    compiled = dom.compile_selector(selector)
-    if compiled is None:
-        return []
-    matched = [el] if any(
-        compiled._chain_matches(chain, el) for chain in compiled.chains if len(chain) == 1
-    ) else []
-    matched.extend(m for m in dom.query_selector_all(el, selector))
-    return matched
-
-
-def _text_of(el: dom.Element) -> str:
-    return el.inner_text()
+    chains = dom.compile_selector(selector) or []
+    itself = any(len(chain) == 1 and chain[0].matches(el) for chain in chains)
+    return ([el] if itself else []) + dom.query_selector_all(el, selector)
 
 
 def extract_clean_text(el: dom.Element) -> str:
@@ -81,12 +72,12 @@ def extract_clean_text(el: dom.Element) -> str:
     excluded: set[str] = set()
     for selector in _EXCLUDE_SELECTORS:
         for node in _subtree_query(el, selector):
-            excluded.add(_text_of(node))
+            excluded.add(node.inner_text())
 
     parts: list[str] = []
     for selector in _CONTENT_SELECTORS:
         for node in _subtree_query(el, selector):
-            cleaned = _text_of(node).strip()
+            cleaned = node.inner_text().strip()
             if cleaned and not any(cleaned in ex for ex in excluded):
                 parts.append(cleaned)
     return "\n".join(parts).strip() if parts else ""
@@ -141,27 +132,13 @@ def convert_to_markdown(root: dom.Element) -> str:
 
 def extract_native_title(root: dom.Element) -> str | None:
     """og:title → twitter:title → <title> → <h1> ≤200 (title.rs:9-82)."""
-    node = dom.query_selector(root, "meta[property='og:title']")
-    if node is not None:
-        content = (node.get("content") or "").strip()
-        if content:
-            return content
-    node = dom.query_selector(root, "meta[name='twitter:title']")
-    if node is not None:
-        content = (node.get("content") or "").strip()
-        if content:
-            return content
-    node = dom.query_selector(root, "title")
-    if node is not None:
-        cleaned = node.inner_text().strip()
-        if cleaned:
-            return cleaned
-    node = dom.query_selector(root, "h1")
-    if node is not None:
-        cleaned = node.inner_text().strip()
-        if cleaned and len(cleaned) <= 200:
-            return cleaned
-    return None
+    title = _first_attr(root, ("meta[property='og:title']", "meta[name='twitter:title']"))
+    if title is None:
+        title = dom.first_text(root, ("title",))
+    if title is None:
+        h1 = dom.first_text(root, ("h1",))
+        title = h1 if h1 is not None and len(h1) <= 200 else None
+    return title
 
 
 # ---------------------------------------------------------------------------
@@ -175,7 +152,8 @@ _META_AUTHOR_SELECTORS = (
     "meta[property='article:author']",
     "meta[name='twitter:creator']",
 )
-_BYLINE_CLASS_SELECTORS = (
+_BYLINE_SELECTORS = (
+    "[itemprop='author']",
     ".author",
     ".byline",
     "[rel='author']",
@@ -205,26 +183,11 @@ def _first_attr(root: dom.Element, selectors: tuple[str, ...], attr: str = "cont
     return None
 
 
-def _first_text(root: dom.Element, selectors: tuple[str, ...]) -> str | None:
-    for selector in selectors:
-        node = dom.query_selector(root, selector)
-        if node is not None:
-            cleaned = node.inner_text().strip()
-            if cleaned:
-                return cleaned
-    return None
-
-
 def extract_native_byline(root: dom.Element) -> str | None:
     """metadata.rs:9-22,69-124: meta author tags → schema.org
     [itemprop=author] text → byline class/rel selectors."""
     author = _first_attr(root, _META_AUTHOR_SELECTORS)
-    if author is not None:
-        return author
-    author = _first_text(root, ("[itemprop='author']",))
-    if author is not None:
-        return author
-    return _first_text(root, _BYLINE_CLASS_SELECTORS)
+    return author if author is not None else dom.first_text(root, _BYLINE_SELECTORS)
 
 
 def extract_native_published(root: dom.Element) -> str | None:

@@ -217,20 +217,6 @@ def learn_schema(
     return schema, analysis, suggestions
 
 
-def _element_text(el: dom.Element) -> str:
-    """scraper's ``text().collect().join(" ")`` + trim: text NODES joined
-    by single spaces (not raw concatenation like inner_text)."""
-    parts: list[str] = []
-    stack: list[object] = list(reversed(el.children))
-    while stack:
-        node = stack.pop()
-        if isinstance(node, str):
-            parts.append(node)
-        else:
-            stack.extend(reversed(node.children))
-    return " ".join(parts).strip()
-
-
 def _apply_selector(root: dom.Element, rule: SelectorRule) -> str | None:
     """extractor.rs:75-122 — css only; first match's text, None if empty.
     meta selectors read @content (the generator emits meta rules, and
@@ -245,7 +231,7 @@ def _apply_selector(root: dom.Element, rule: SelectorRule) -> str | None:
     if el.tag == "meta":
         text = (el.get("content") or "").strip()
     else:
-        text = _element_text(el)
+        text = dom.joined_text(el)
     return text or None
 
 

@@ -38,17 +38,6 @@ class TableData:
     metadata: dict[str, str] = field(default_factory=dict)
 
 
-def _text(el: dom.Element) -> str:
-    return el.inner_text().strip()
-
-
-def _first_child_element(parent: dom.Element) -> dom.Element | None:
-    for child in parent.children:
-        if not isinstance(child, str):
-            return child
-    return None
-
-
 def _span_attr(el: dom.Element, name: str) -> int:
     """colspan/rowspan parse: ``attr.parse().unwrap_or(1)`` (extractor.rs:
     323-331), clamped to ≥1 (colspan=0 would stall the grid cursor)."""
@@ -66,7 +55,7 @@ def _extract_single_table(table: dom.Element) -> TableData:
 
     caption = dom.query_selector(table, "caption")
     if caption is not None:
-        data.caption = _text(caption)
+        data.caption = caption.inner_text().strip()
 
     # Headers mirror extract_multi_level_headers (extractor.rs:431-482):
     # with ANY `thead tr` present the reference never consults other rows
@@ -83,12 +72,9 @@ def _extract_single_table(table: dom.Element) -> TableData:
     if thead_rows:
         headers = list(dom.query_selector_all(thead_rows[-1], "td, th"))
     else:
+        # A first-child <tr> directly follows its parent in document order.
         first_row = next(
-            (
-                tr
-                for tr in dom.query_selector_all(table, "tr")
-                if tr.parent is not None and _first_child_element(tr.parent) is tr
-            ),
+            (tr for tr in dom.query_selector_all(table, "tr") if tr.pos == tr.parent.pos + 1),
             None,
         )
         if first_row is not None and dom.query_selector(first_row, "th") is not None:
@@ -96,7 +82,7 @@ def _extract_single_table(table: dom.Element) -> TableData:
     # Header colspan expansion: a th spanning c columns labels c columns.
     data.headers = []
     for h in headers:
-        data.headers.extend([_text(h)] * _span_attr(h, "colspan"))
+        data.headers.extend([h.inner_text().strip()] * _span_attr(h, "colspan"))
 
     # Body-row selection mirrors extract_table_sections (extractor.rs:
     # 222-276) exactly: with an explicit <tbody>, its rows are ALL body
@@ -150,7 +136,7 @@ def _extract_single_table(table: dom.Element) -> TableData:
         _fill_pending()
         for cell in dom.query_selector_all(tr, "td, th"):
             _fill_pending()
-            content = _text(cell)
+            content = cell.inner_text().strip()
             colspan = _span_attr(cell, "colspan")
             rowspan = _span_attr(cell, "rowspan")
             row_out.extend([content] * colspan)
@@ -176,10 +162,6 @@ def _in_section(el: dom.Element, section_tag: str) -> bool:
     return False
 
 
-def _has_descendant(el: dom.Element, tag: str) -> bool:
-    return any(node.tag == tag for node in el.iter_elements())
-
-
 def extract_tables(
     html: str,
     mode: str = "all",
@@ -196,9 +178,7 @@ def extract_tables(
 
     out: list[TableData] = []
     for table in candidates:
-        if mode == "with_headers" and not (
-            _has_descendant(table, "th") or _has_descendant(table, "thead")
-        ):
+        if mode == "with_headers" and dom.query_selector(table, "th, thead") is None:
             continue
         data = _extract_single_table(table)
         if mode == "min_size":

@@ -25,6 +25,11 @@ The contract, reverse-engineered node-for-node from the golden snapshots:
 Parsing is lenient: unmatched close tags are ignored, unclosed tags are
 closed by their ancestors, void elements never take children.
 
+``parse`` indexes each page once, after the tree is built: positions, one
+element list, one tag index and one text buffer, all in document order.
+Text, descendants and selector candidates are slices of that index, so
+nothing may change the tree after ``parse``; nothing does.
+
 This is intentionally NOT a spec-compliant HTML5 tree builder — it is a
 pinned, deterministic engine whose behavior is frozen by the golden-parity
 tests in ``tests/test_golden.py``. Determinism matters more than spec
@@ -34,7 +39,10 @@ of a 1000-node cluster, forever.
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
+from functools import partial
 from html.parser import HTMLParser
+from operator import attrgetter
 
 VOID_ELEMENTS = frozenset(
     {
@@ -63,14 +71,14 @@ class Element:
     Attribute names are lowercased; for duplicate attributes the first
     occurrence wins. A valueless attribute maps to ``""``.
 
-    ``pos`` is the element's document-order index; the root additionally
-    carries a flat element list + tag index (built once, lazily) so selector
-    queries don't re-walk the tree — the extraction UDF runs dozens of
-    queries per document and this single-pass index is the difference
-    between O(queries × nodes) and O(nodes + matches).
+    ``parse`` indexes the page once: ``pos`` is the element's position in
+    document order, ``last`` the position of its last descendant (``pos``
+    when it has none) and ``[_start, _stop)`` its span in the page's text
+    buffer. Its descendants are ``flat[pos + 1 : last + 1]`` of the page's
+    element list, and its text is a slice of the buffer.
     """
 
-    __slots__ = ("tag", "attrs", "children", "parent", "pos", "_flat", "_tagidx")
+    __slots__ = ("tag", "attrs", "children", "parent", "pos", "last", "_start", "_stop", "_doc")
 
     def __init__(self, tag: str, attrs: dict[str, str], parent: "Element | None"):
         self.tag = tag
@@ -78,68 +86,108 @@ class Element:
         self.children: list[object] = []
         self.parent = parent
         self.pos = -1
-        self._flat: list["Element"] | None = None
-        self._tagidx: dict[str, list["Element"]] | None = None
-
-    def _ensure_index(self) -> None:
-        if self._flat is not None:
-            return
-        flat: list[Element] = []
-        tagidx: dict[str, list[Element]] = {}
-        stack: list[object] = list(reversed(self.children))
-        while stack:
-            node = stack.pop()
-            if isinstance(node, str):
-                continue
-            node.pos = len(flat)
-            flat.append(node)
-            tagidx.setdefault(node.tag, []).append(node)
-            stack.extend(reversed(node.children))
-        self._flat = flat
-        self._tagidx = tagidx
 
     def get(self, name: str) -> str | None:
         return self.attrs.get(name)
 
     def inner_text(self) -> str:
-        """Concatenate every descendant text node in document order."""
-        out: list[str] = []
-        stack: list[object] = list(reversed(self.children))
-        while stack:
-            node = stack.pop()
-            if isinstance(node, str):
-                out.append(node)
-            else:
-                stack.extend(reversed(node.children))
-        return "".join(out)
+        """Every descendant text node, concatenated in document order."""
+        return self._doc.text[self._start : self._stop]
 
-    def iter_elements(self):
-        """Yield descendant elements (not self) in document order."""
-        stack: list[object] = list(reversed(self.children))
-        while stack:
-            node = stack.pop()
-            if not isinstance(node, str):
-                yield node
-                stack.extend(reversed(node.children))
+    def iter_elements(self) -> list["Element"]:
+        """Descendant elements (not self) in document order."""
+        return self._doc.flat[self.pos + 1 : self.last + 1]
 
     def __repr__(self) -> str:  # pragma: no cover - debug aid
         return f"<Element {self.tag} attrs={self.attrs} children={len(self.children)}>"
 
 
+class _Document(Element):
+    """The root of a parsed page and its one index: ``flat`` is every
+    element in document order, ``by_tag`` the same per tag, ``text`` every
+    text node concatenated in document order and ``breaks`` the offset in
+    ``text`` at which each text node starts."""
+
+    __slots__ = ("flat", "by_tag", "text", "breaks")
+
+    def __init__(self) -> None:
+        super().__init__("#document", {}, None)
+
+
+def _index(doc: _Document) -> _Document:
+    """Index the tree in one iterative pass (8,000 nested elements exceed
+    the recursion limit). An element is pushed again under its children;
+    popped a second time, with its ``pos`` already set, it is closed."""
+    flat: list[Element] = []
+    by_tag: dict[str, list[Element]] = {}
+    texts: list[str] = []
+    breaks: list[int] = []
+    offset = 0
+    stack: list[object] = list(reversed(doc.children))
+    while stack:
+        node = stack.pop()
+        if isinstance(node, str):
+            breaks.append(offset)
+            texts.append(node)
+            offset += len(node)
+        elif node.pos < 0:
+            node.pos = len(flat)
+            node._start = offset
+            node._doc = doc
+            flat.append(node)
+            by_tag.setdefault(node.tag, []).append(node)
+            if node.children:
+                stack.append(node)
+                stack.extend(reversed(node.children))
+            else:
+                node.last = node.pos
+                node._stop = offset
+        else:
+            node.last = len(flat) - 1
+            node._stop = offset
+    doc.last, doc._start, doc._stop, doc._doc = len(flat) - 1, 0, offset, doc
+    doc.flat, doc.by_tag, doc.text, doc.breaks = flat, by_tag, "".join(texts), breaks
+    return doc
+
+
+def joined_text(el: Element) -> str:
+    """The element's text nodes joined by one space and trimmed
+    (scraper's ``text().collect().join(" ")``); ``inner_text`` joins them
+    with nothing."""
+    doc = el._doc
+    bounds = doc.breaks[bisect_left(doc.breaks, el._start) : bisect_left(doc.breaks, el._stop)]
+    bounds.append(el._stop)
+    return " ".join(doc.text[a:b] for a, b in zip(bounds, bounds[1:])).strip()
+
+
+def first_text(root: Element, selectors: tuple[str, ...]) -> str | None:
+    """The trimmed text of the first element matching a selector, for the
+    first selector whose first match has any; None when none has."""
+    for selector in selectors:
+        node = query_selector(root, selector)
+        if node is not None:
+            text = node.inner_text().strip()
+            if text:
+                return text
+    return None
+
+
 class _TreeBuilder(HTMLParser):
+    """Builds the tree; comments, doctype and PIs vanish entirely, as
+    ``HTMLParser``'s own handlers for them do nothing."""
+
     def __init__(self) -> None:
         # convert_charrefs=True decodes character references in text data
         # (but not inside script/style), matching the pinned semantics.
         super().__init__(convert_charrefs=True)
-        self.root = Element("#document", {}, None)
+        self.root = _Document()
         self._stack: list[Element] = [self.root]
 
     # -- tag events -----------------------------------------------------
     def handle_starttag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
         attr_map: dict[str, str] = {}
         for name, value in attrs:
-            if name not in attr_map:
-                attr_map[name] = value if value is not None else ""
+            attr_map.setdefault(name, value if value is not None else "")
         parent = self._stack[-1]
         el = Element(tag, attr_map, parent)
         parent.children.append(el)
@@ -147,12 +195,10 @@ class _TreeBuilder(HTMLParser):
             self._stack.append(el)
 
     def handle_startendtag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
-        attr_map: dict[str, str] = {}
-        for name, value in attrs:
-            if name not in attr_map:
-                attr_map[name] = value if value is not None else ""
-        parent = self._stack[-1]
-        parent.children.append(Element(tag, attr_map, parent))
+        # A self-closed tag (``<div/>``) opens no element for what follows.
+        self.handle_starttag(tag, attrs)
+        if tag not in VOID_ELEMENTS:
+            self._stack.pop()
 
     def handle_endtag(self, tag: str) -> None:
         if tag in VOID_ELEMENTS:
@@ -174,22 +220,10 @@ class _TreeBuilder(HTMLParser):
         else:
             children.append(data)
 
-    # Comments / doctype / PIs vanish entirely.
-    def handle_comment(self, data: str) -> None:
-        pass
-
-    def handle_decl(self, decl: str) -> None:
-        pass
-
-    def handle_pi(self, data: str) -> None:
-        pass
-
-    def unknown_decl(self, data: str) -> None:
-        pass
-
 
 def parse(html: str) -> Element:
-    """Parse HTML into the pinned DOM. Never raises on malformed input."""
+    """Parse HTML into the pinned DOM and index it. Never raises on
+    malformed input."""
     builder = _TreeBuilder()
     try:
         builder.feed(html)
@@ -197,7 +231,7 @@ def parse(html: str) -> Element:
     except Exception:
         # html.parser is robust, but guarantee no row ever kills a task.
         pass
-    return builder.root
+    return _index(builder.root)
 
 
 # ---------------------------------------------------------------------------
@@ -262,17 +296,12 @@ def _parse_simple(token: str) -> _SimpleSelector | None:
         i = 1
     while i < n:
         c = token[i]
-        if c == ".":
+        if c in ".#":
             j = i + 1
             while j < n and token[j] not in ".#[":
                 j += 1
-            conds.append(("class", "~=", token[i + 1 : j]))
-            i = j
-        elif c == "#":
-            j = i + 1
-            while j < n and token[j] not in ".#[":
-                j += 1
-            conds.append(("id", "=", token[i + 1 : j]))
+            name = token[i + 1 : j]
+            conds.append(("class", "~=", name) if c == "." else ("id", "=", name))
             i = j
         elif c == "[":
             j = token.find("]", i)
@@ -330,34 +359,25 @@ def _split_selector_list(selector: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
-class _CompiledSelector:
-    """A comma-group of descendant chains, matched in document order."""
-
-    __slots__ = ("chains",)
-
-    def __init__(self, chains: list[list[_SimpleSelector]]):
-        self.chains = chains
-
-    def _chain_matches(self, chain: list[_SimpleSelector], el: Element) -> bool:
-        if not chain[-1].matches(el):
-            return False
-        # Ancestors must match the remaining chain, nearest-last semantics.
-        idx = len(chain) - 2
-        node = el.parent
-        while idx >= 0 and node is not None and node.tag != "#document":
-            if chain[idx].matches(node):
-                idx -= 1
-            node = node.parent
-        return idx < 0
-
-    def matches(self, el: Element) -> bool:
-        return any(self._chain_matches(chain, el) for chain in self.chains)
+def _chain_matches(chain: list[_SimpleSelector], el: Element) -> bool:
+    """Does ``el`` match a descendant chain? Its ancestors must match the
+    rest of the chain, nearest-last."""
+    if not chain[-1].matches(el):
+        return False
+    idx = len(chain) - 2
+    node = el.parent
+    while idx >= 0 and node is not None and node.tag != "#document":
+        if chain[idx].matches(node):
+            idx -= 1
+        node = node.parent
+    return idx < 0
 
 
-_SELECTOR_CACHE: dict[str, _CompiledSelector | None] = {}
+_SELECTOR_CACHE: dict[str, list[list[_SimpleSelector]] | None] = {}
 
 
-def compile_selector(selector: str) -> _CompiledSelector | None:
+def compile_selector(selector: str) -> list[list[_SimpleSelector]] | None:
+    """A comma group as its descendant chains, or None if none parses."""
     cached = _SELECTOR_CACHE.get(selector)
     if cached is not None or selector in _SELECTOR_CACHE:
         return cached
@@ -376,88 +396,72 @@ def compile_selector(selector: str) -> _CompiledSelector | None:
             chain.append(simple)
         if ok and chain:
             chains.append(chain)
-    result = _CompiledSelector(chains) if chains else None
+    result = chains or None
     if len(_SELECTOR_CACHE) < 4096:
         _SELECTOR_CACHE[selector] = result
     return result
 
 
-def _chain_candidates(root: Element, chain: list[_SimpleSelector]) -> list[Element]:
-    """Candidates for a chain, narrowed by the target's tag when it has one."""
-    last = chain[-1]
-    if last.tag is not None:
-        return root._tagidx.get(last.tag, [])
-    return root._flat
+_POS = attrgetter("pos")
 
 
-def _chain_feasible(root: Element, chain: list[_SimpleSelector]) -> bool:
+def _candidates(scope: Element, simple: _SimpleSelector) -> list[Element]:
+    """The elements under ``scope`` that ``simple`` could match, in
+    document order: the page's list for its tag, or every element."""
+    doc = scope._doc
+    if simple.tag is None:
+        return doc.flat if scope is doc else scope.iter_elements()
+    tagged = doc.by_tag.get(simple.tag, [])
+    if scope is doc or not tagged:
+        return tagged
+    lo = bisect_right(tagged, scope.pos, key=_POS)
+    return tagged[lo : bisect_right(tagged, scope.last, lo, key=_POS)]
+
+
+def _chain_feasible(scope: Element, chain: list[_SimpleSelector]) -> bool:
     """Cheap pruning for descendant chains: if any ancestor simple matches
-    NOTHING in the document (the common case for breadcrumb/nav selectors
+    NOTHING under ``scope`` (the common case for breadcrumb/nav selectors
     on ordinary pages), the chain can't match — one early-exit scan per
     ancestor beats an ancestor walk per candidate."""
     for simple in chain[:-1]:
-        candidates = (
-            root._tagidx.get(simple.tag, []) if simple.tag is not None else root._flat
-        )
-        if not any(simple.matches(el) for el in candidates):
+        if not any(simple.matches(el) for el in _candidates(scope, simple)):
             return False
     return True
 
 
+def _select(scope: Element, chain: list[_SimpleSelector]):
+    """The matches of one chain under ``scope``, lazily, in document order."""
+    candidates = _candidates(scope, chain[-1])
+    if len(chain) == 1:
+        simple = chain[0]
+        # Bare-tag selector ("p", "h2", …): the tag index IS the answer —
+        # the hot case for the native content ladder.
+        if simple.tag is not None and not simple.conds:
+            return iter(candidates)
+        return filter(simple.matches, candidates)
+    if not _chain_feasible(scope, chain):
+        return iter(())
+    return filter(partial(_chain_matches, chain), candidates)
+
+
 def query_selector_all(root: Element, selector: str) -> list[Element]:
-    compiled = compile_selector(selector)
-    if compiled is None:
+    chains = compile_selector(selector)
+    if chains is None:
         return []
-    root._ensure_index()
-    if len(compiled.chains) == 1:
-        chain = compiled.chains[0]
-        if len(chain) == 1:
-            simple = chain[0]
-            candidates = _chain_candidates(root, chain)
-            # Bare-tag selector ("p", "h2", …): the tag index IS the
-            # answer — the hot case for the native content ladder.
-            if simple.tag is not None and not simple.conds:
-                return list(candidates)
-            return [el for el in candidates if simple.matches(el)]
-        if not _chain_feasible(root, chain):
-            return []
-        return [
-            el
-            for el in _chain_candidates(root, chain)
-            if compiled._chain_matches(chain, el)
-        ]
+    if len(chains) == 1:
+        return list(_select(root, chains[0]))
     seen: dict[int, Element] = {}
-    for chain in compiled.chains:
-        if len(chain) > 1 and not _chain_feasible(root, chain):
-            continue
-        for el in _chain_candidates(root, chain):
-            if el.pos not in seen and compiled._chain_matches(chain, el):
-                seen[el.pos] = el
+    for chain in chains:
+        for el in _select(root, chain):
+            seen[el.pos] = el
     return [seen[pos] for pos in sorted(seen)]
 
 
 def query_selector(root: Element, selector: str) -> Element | None:
-    compiled = compile_selector(selector)
-    if compiled is None:
+    chains = compile_selector(selector)
+    if chains is None:
         return None
-    root._ensure_index()
-    if len(compiled.chains) == 1:
-        chain = compiled.chains[0]
-        candidates = _chain_candidates(root, chain)
-        # First match in document order, without building the full list.
-        if len(chain) == 1:
-            simple = chain[0]
-            if simple.tag is not None and not simple.conds:
-                return candidates[0] if candidates else None
-            for el in candidates:
-                if simple.matches(el):
-                    return el
-            return None
-        if not _chain_feasible(root, chain):
-            return None
-        for el in candidates:
-            if compiled._chain_matches(chain, el):
-                return el
-        return None
+    if len(chains) == 1:
+        return next(_select(root, chains[0]), None)
     matched = query_selector_all(root, selector)
     return matched[0] if matched else None

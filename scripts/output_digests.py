@@ -1,13 +1,8 @@
-"""Pin the extractor's output bytes: a sha256 per url and per field.
+"""Check or regenerate ``tests/output_digests.json``, the extractor's
+pinned output bytes (corpus and hashing in ``tests/test_output_digests.py``).
 
-The corpus is ``synth_page`` 0..799 at seed 42 (every archetype, PDFs and
-the invalid-UTF-8 rows) plus four hand-made rows: one over 20 MB, one with
-null html, one with empty html and one with garbage html. Each row is
-extracted by ``_extract_one(html, url)`` and, given a SparkSession, by the
-``extraction_plan`` job; every field but ``extract_ms`` is hashed.
-
-    python scripts/output_digests.py           # check tests/output_digests.json
-    python scripts/output_digests.py --write   # regenerate it
+    python scripts/output_digests.py           # check both extraction paths
+    python scripts/output_digests.py --write   # regenerate the file
 
 Every regeneration is a reviewed change: it says the output bytes moved.
 """
@@ -15,89 +10,12 @@ Every regeneration is a reviewed change: it says the output bytes moved.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-from riptide_spark.sources.pages import synth_page  # noqa: E402
-
-DIGESTS_PATH = os.path.join(REPO, "tests", "output_digests.json")
-N_SYNTH = 800
-_EXTRA = {
-    "https://digest.example.com/oversize": (
-        b"<html><body><p>" + b"lorem ipsum " * (20 * 2**20 // 12 + 1) + b"</p></body></html>"
-    ),
-    "https://digest.example.com/null": None,
-    "https://digest.example.com/empty": b"",
-    "https://digest.example.com/garbage": (
-        b"<html><body><<div>>< p a='<\x00 &bogus;</b></i>\xc3( <tr><td x=\"\n</html>>"
-    ),
-}
-
-
-def corpus() -> list[dict]:
-    rows = [synth_page(i, 42) for i in range(N_SYNTH)]
-    rows += [
-        {"url": url, "warc_ts": None, "html": html, "text": None, "lang": None}
-        for url, html in _EXTRA.items()
-    ]
-    return rows
-
-
-def _sha(value) -> str:
-    encoded = json.dumps(value, sort_keys=True, ensure_ascii=False)
-    return hashlib.sha256(encoded.encode("utf-8", "surrogatepass")).hexdigest()
-
-
-def digests(rows: dict[str, dict]) -> dict:
-    """``rows`` maps url to its row, every field but ``extract_ms``."""
-    urls = sorted(rows)
-    fields = sorted(rows[urls[0]])
-    return {
-        "rows": {url: _sha(rows[url]) for url in urls},
-        "fields": {f: _sha([rows[url][f] for url in urls]) for f in fields},
-    }
-
-
-def mismatches(expected: dict, actual: dict) -> list[str]:
-    """One line per url whose row differs, naming the fields that differ."""
-    fields = sorted(
-        f for f in expected["fields"].keys() | actual["fields"].keys()
-        if expected["fields"].get(f) != actual["fields"].get(f)
-    )
-    return [
-        f"{url}: {', '.join(fields) or '?'}"
-        for url in sorted(expected["rows"].keys() | actual["rows"].keys())
-        if expected["rows"].get(url) != actual["rows"].get(url)
-    ]
-
-
-def extract_one_rows(pages: list[dict]) -> dict[str, dict]:
-    from riptide_spark.operators.extract_udf import _extract_one
-
-    rows = {p["url"]: _extract_one(p["html"], p["url"]) for p in pages}
-    for row in rows.values():
-        del row["extract_ms"]
-    return rows
-
-
-def extraction_plan_rows(spark, pages: list[dict]) -> dict[str, dict]:
-    from riptide_spark.plans.pipeline import ExtractionJobConfig, extraction_plan
-    from riptide_spark.schema import PAGES_SCHEMA
-
-    df = spark.createDataFrame(
-        [tuple(p[c] for c in PAGES_SCHEMA.fieldNames()) for p in pages], PAGES_SCHEMA
-    )
-    out = extraction_plan(df, ExtractionJobConfig(output_path="", target_partitions=4))
-    rows = {}
-    for r in out.drop("url_bucket", "extract_ms").collect():
-        row = r.asDict(recursive=True)
-        rows[row.pop("url")] = row
-    return rows
 
 
 def main() -> int:
@@ -106,24 +24,24 @@ def main() -> int:
     args = parser.parse_args()
     os.chdir(REPO)  # executors import riptide_spark from the driver's cwd
     from riptide_spark.session import build_session
+    from tests import test_output_digests as od
 
-    pages = corpus()
+    pages = od.corpus()
     spark = build_session("output-digests")
     spark.sparkContext.setLogLevel("ERROR")
     actual = {
-        "extract_one": digests(extract_one_rows(pages)),
-        "extraction_plan": digests(extraction_plan_rows(spark, pages)),
+        "extract_one": od.digests(od.extract_one_rows(pages)),
+        "extraction_plan": od.digests(od.extraction_plan_rows(spark, pages)),
     }
     spark.stop()
     if args.write:
-        with open(DIGESTS_PATH, "w") as fh:
-            json.dump(actual, fh, indent=1, sort_keys=True)
-            fh.write("\n")
-        print(f"wrote {DIGESTS_PATH}")
+        od.DIGESTS_PATH.write_text(json.dumps(actual, indent=1, sort_keys=True) + "\n")
+        print(f"wrote {od.DIGESTS_PATH}")
         return 0
-    with open(DIGESTS_PATH) as fh:
-        expected = json.load(fh)
-    bad = [f"{path} {line}" for path in actual for line in mismatches(expected[path], actual[path])]
+    expected = json.loads(od.DIGESTS_PATH.read_text())
+    bad = [
+        f"{path} {line}" for path in actual for line in od.mismatches(expected[path], actual[path])
+    ]
     print("\n".join(bad) or "output digests match")
     return 1 if bad else 0
 

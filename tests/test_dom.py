@@ -109,6 +109,64 @@ def test_malformed_html_never_raises():
         dom.parse(bad)
 
 
+def _query_article_first(html: str) -> dom.Element:
+    # A query on a sub-element reads the root's one index, so it must not
+    # disturb the document order that root-level comma queries sort by.
+    root = _root(html)
+    article = dom.query_selector(root, "article")
+    assert [p.inner_text() for p in dom.query_selector_all(article, "p")] == ["One", "Two"]
+    return root
+
+
+def test_media_comma_query_after_subtree_query():
+    root = _query_article_first(
+        "<html><body><video src='a.mp4'></video>"
+        "<article><p>One</p><video><source src='b.mp4'></video><p>Two</p></article>"
+        "<video src='c.mp4'></video></body></html>"
+    )
+    media = dom.query_selector_all(root, "video source[src], video[src]")
+    assert [el.get("src") for el in media] == ["a.mp4", "b.mp4", "c.mp4"]
+
+
+def test_category_comma_query_after_subtree_query():
+    root = _query_article_first(
+        "<html><body><div class='category'>News</div>"
+        "<article><p>One</p><span class='tag'>Inner</span><p>Two</p></article>"
+        "<div class='topic'>World</div></body></html>"
+    )
+    classed = dom.query_selector_all(
+        root, "[class*='category'], [class*='tag'], [class*='topic']"
+    )
+    assert [el.inner_text() for el in classed] == ["News", "Inner", "World"]
+
+
+def test_subtree_query_sees_only_descendants():
+    root = _root("<div id='a'><p>1</p><div id='b'><p>2</p></div></div><p>3</p>")
+    outer, inner = dom.query_selector(root, "#a"), dom.query_selector(root, "#b")
+    assert [p.inner_text() for p in dom.query_selector_all(outer, "p")] == ["1", "2"]
+    assert [p.inner_text() for p in dom.query_selector_all(inner, "p")] == ["2"]
+    assert dom.query_selector(inner, "div") is None
+    assert [el.tag for el in outer.iter_elements()] == ["p", "div", "p"]
+    assert dom.query_selector_all(root, "p")[-1].inner_text() == "3"
+
+
+def test_text_nodes_joined_by_one_space():
+    root = _root("<div> a <b>b</b>c<i></i><p>\nd </p></div>")
+    div = dom.query_selector(root, "div")
+    assert div.inner_text() == " a bc\nd "
+    assert dom.joined_text(div) == "a  b c \nd"
+    assert dom.joined_text(dom.query_selector(root, "i")) == ""
+
+
+def test_deep_nesting_indexes_without_recursion():
+    depth = 8000
+    root = _root("<div>" * depth + "x" + "</div>" * depth)
+    divs = dom.query_selector_all(root, "div")
+    assert len(divs) == depth
+    assert divs[0].inner_text() == divs[-1].inner_text() == "x"
+    assert len(divs[1].iter_elements()) == depth - 2
+
+
 # URL resolution -----------------------------------------------------------
 
 

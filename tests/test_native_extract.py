@@ -197,6 +197,24 @@ def test_native_media_order_and_filters():
     ]
 
 
+def test_dom_route_keeps_every_video_in_document_order():
+    # The ladder queries inside <article> before the media query runs; the
+    # video before the article must survive it.
+    from riptide_spark.operators.extract_udf import _extract_one
+
+    body = " ".join(["A sentence about the videos on this page."] * 12)
+    html = f"""<html><head><title>Three videos</title></head><body>
+      <video src="https://cdn.example.com/a.mp4"></video>
+      <article><h1>Three videos</h1><p>{body}</p>
+        <video><source src="https://cdn.example.com/b.mp4"></video>
+        <h2>More</h2><p>{body}</p></article>
+      <video src="https://cdn.example.com/c.mp4"></video>
+    </body></html>"""
+    row = _extract_one(html.encode(), "https://example.com/videos", "dom")
+    assert row["error"] is None and row["quality_score"] >= 60
+    assert row["media"] == [f"https://cdn.example.com/{c}.mp4" for c in "abc"]
+
+
 def test_native_doc_carries_links_media_on_primary_path():
     from riptide_spark.functions.native_extract import extract_native
 
