@@ -24,6 +24,7 @@ such pin enumerates its full input class set.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -104,7 +105,6 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def _sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        apply_sql_conf(spark)
         _register_views(spark, sf_dir)
         return spark.sql(OQ.spark_sql(name))
 
@@ -113,7 +113,6 @@ def _sql_query(name: str) -> Callable[[SparkSession, str], DataFrame]:
 
 
 def _q_extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    apply_sql_conf(spark)
     from riptide_spark.plans.pipeline import extraction_plan, ExtractionJobConfig
 
     pages = _pages_from_documents(spark, sf_dir)
@@ -130,7 +129,6 @@ def _q_extract_golden_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle constants IS byte-identity vs the reference's goldens
     (wasm/riptide-extractor-wasm/tests/golden/mod.rs:75-146), surfaced as
     a driver CORRECTNESS row instead of only a pytest pin."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.extract_udf import extract_udf
     from riptide_spark.sources.golden import GOLDEN_CASES, load_fixture
 
@@ -157,7 +155,6 @@ def _q_extract_pipeline_invariants(spark: SparkSession, sf_dir: str) -> DataFram
     error rows, all titles extracted, and every word_count inside the
     per-document envelope (see ``udf_oracle_extract_pipeline_invariants``
     for the derivation)."""
-    apply_sql_conf(spark)
     from riptide_spark.plans.pipeline import ExtractionJobConfig, extraction_plan
 
     pages = _pages_from_documents(spark, sf_dir)
@@ -188,7 +185,6 @@ def _q_events_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark (batch here, so the driver can oracle it against DuckDB
     time_bucket); late-data semantics are pinned by
     ``tests/test_streaming_events.py``."""
-    apply_sql_conf(spark)
     from riptide_spark.streaming.events import windowed_event_counts
 
     _register_views(spark, sf_dir)
@@ -201,7 +197,6 @@ def _chunk_stats(
     """Per-doc ``(n_chunks, total_tokens, last_end_pos)`` of ``chunker``
     applied to each value of ``documents.<column>``: the one pandas UDF the
     chunker queries share."""
-    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
 
     @F.pandas_udf("n_chunks int, total_tokens long, last_end_pos long")
@@ -281,7 +276,6 @@ def _q_table_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion (``table_extraction/extractor.rs:328-366``). Output columns
     are sortable scalars (arrays flattened via array_join) so the driver
     can canonicalize them; oracled by ``udf_oracle_table_extraction``."""
-    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from riptide_spark.operators.table_udf import with_tables
 
@@ -316,7 +310,6 @@ def _q_pdf_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     every output column from the generating table
     (``udf_oracle_pdf_extraction``). Field mapping per
     ``crates/riptide-pdf/src/processor.rs:642-760``."""
-    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from pyspark.sql import types as T
 
@@ -367,7 +360,6 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so the oracle derives every column in closed form
     (``udf_oracle_multimodal_decode``); the probe pixel pins row order
     and stride padding."""
-    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from pyspark.sql import types as T
 
@@ -415,7 +407,6 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_css_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSS-JSON field extraction with transformers over synthesized pages."""
-    apply_sql_conf(spark)
     from riptide_spark.functions.css_extract import FieldConfig
     from riptide_spark.operators.css_udf import with_css_fields
 
@@ -441,7 +432,6 @@ def _q_native_dom(spark: SparkSession, sf_dir: str) -> DataFrame:
     the body-text fallback; ``udf_oracle_native_dom_extraction``
     re-derives the clean-text assembly, markdown rendering and quality
     rubric (content.rs:11-206, quality.rs:7-56) in SQL."""
-    apply_sql_conf(spark)
     _register_views(spark, sf_dir)
     from riptide_spark.operators.extract_udf import extract_udf
 
@@ -472,7 +462,6 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed approximate nearest neighbours (scale path of ANN),
     multi-probe: all buckets within Hamming distance 2 of the query
     signature are scanned (22 of 64 at 6 planes)."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import ann_topk_lsh
 
     _register_views(spark, sf_dir)
@@ -486,27 +475,13 @@ def _q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH path against the oracled brute force — the LSH analog of
     ``similarity_ann_ivf``, but with a FULL SQL oracle (no pinned
     constants; see ``udf_oracle_similarity_ann_lsh_recall``)."""
-    apply_sql_conf(spark)
-    from riptide_spark.operators.similarity import ann_topk_lsh, cosine_topk
+    from riptide_spark.operators.similarity import ann_topk_lsh
 
     _register_views(spark, sf_dir)
     emb = spark.table("embeddings")
     k, planes, hamming = 10, 6, 2
-    lsh = ann_topk_lsh(emb, query_id=0, k=k, planes=planes, hamming=hamming).select(
-        "vec_id"
-    )
-    brute = cosine_topk(emb, query_id=0, k=k).select("vec_id")
-    return (
-        lsh.join(brute, "vec_id")
-        .agg(F.count(F.lit(1)).alias("o"))
-        .select(
-            F.lit(k).cast("int").alias("k"),
-            F.lit(planes).cast("int").alias("planes"),
-            F.lit(hamming).cast("int").alias("hamming"),
-            F.col("o").cast("int").alias("overlap"),
-            F.round(F.col("o") / F.lit(float(k)), 6).cast("double").alias("recall_at_k"),
-        )
-    )
+    lsh = ann_topk_lsh(emb, query_id=0, k=k, planes=planes, hamming=hamming)
+    return _recall_summary(lsh, emb, k, planes=planes, hamming=hamming)
 
 
 def _assert_partition_pruned(df: DataFrame, partition_col: str) -> None:
@@ -585,7 +560,6 @@ def _q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted on the physical plan). Returns the same top-k rows as the
     in-memory multi-probe path, so it shares that full SQL oracle
     (``udf_oracle_similarity_ann_lsh``)."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import ann_topk_lsh_index, write_lsh_index
 
     _register_views(spark, sf_dir)
@@ -605,12 +579,7 @@ def _q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned n_probe read, and report recall@k vs the oracled
     brute force — the same summary shape (and pinned constants) as the
     in-memory IVF path, since the index read returns identical rows."""
-    apply_sql_conf(spark)
-    from riptide_spark.operators.similarity import (
-        ann_topk_ivf_index,
-        cosine_topk,
-        write_ivf_index,
-    )
+    from riptide_spark.operators.similarity import ann_topk_ivf_index, write_ivf_index
 
     _register_views(spark, sf_dir)
     emb = spark.table("embeddings")
@@ -621,15 +590,24 @@ def _q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, centroids, _query_vec(emb), k=k + 1, n_probe=2
     )
     _assert_partition_pruned(indexed, "ivf_list")
-    ivf = indexed.filter(F.col("vec_id") != 0).select("vec_id")
+    ivf = indexed.filter(F.col("vec_id") != 0)
+    return _recall_summary(ivf, emb, k, n_centroids=8, n_probe=2)
+
+
+def _recall_summary(approx: DataFrame, emb: DataFrame, k: int, **params: int) -> DataFrame:
+    """One row: ``k``, the int ``params`` in order, and the overlap and
+    recall@k of query 0's ``approx`` top-k against the brute-force top-k,
+    the single-query counterpart of :func:`_batch_recall`."""
+    from riptide_spark.operators.similarity import cosine_topk
+
     brute = cosine_topk(emb, query_id=0, k=k).select("vec_id")
     return (
-        ivf.join(brute, "vec_id")
+        approx.select("vec_id")
+        .join(brute, "vec_id")
         .agg(F.count(F.lit(1)).alias("o"))
         .select(
             F.lit(k).cast("int").alias("k"),
-            F.lit(8).cast("int").alias("n_centroids"),
-            F.lit(2).cast("int").alias("n_probe"),
+            *[F.lit(v).cast("int").alias(name) for name, v in params.items()],
             F.col("o").cast("int").alias("overlap"),
             F.round(F.col("o") / F.lit(float(k)), 6).cast("double").alias("recall_at_k"),
         )
@@ -667,7 +645,6 @@ def _q_ann_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch path routes EVERY query to its probe buckets in one equi-join
     (no per-query driver round-trips); per-query recall vs the batch
     brute force, fully SQL-oracled."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_lsh_batch,
         cosine_topk_batch,
@@ -691,7 +668,6 @@ def _q_ann_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction vs 0.42 for the single-table row at the SAME budget — the
     equal-cost comparison the OR-construction exists to win. Fully
     SQL-oracled (per-table salted plane families, OR of Hamming terms)."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_lsh_batch,
         cosine_topk_batch,
@@ -714,7 +690,6 @@ def _q_ann_ivf_batch_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall vs the batch brute force; deterministic end-to-end, so the
     per-query recalls are pinned per corpus
     (``udf_oracle_similarity_ann_ivf_batch_recall``)."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.similarity import (
         ann_topk_ivf_batch,
         cosine_topk_batch,
@@ -736,31 +711,18 @@ def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (stride sample, fixed Lloyd iterations, id tie-breaks),
     so the overlap/recall is a pure function of the embeddings table —
     pinned by ``udf_oracle_similarity_ann_ivf`` per corpus size."""
-    apply_sql_conf(spark)
-    from riptide_spark.operators.similarity import ann_topk_ivf, cosine_topk
+    from riptide_spark.operators.similarity import ann_topk_ivf
 
     _register_views(spark, sf_dir)
     emb = spark.table("embeddings")
     k = 10
-    ivf = ann_topk_ivf(emb, query_id=0, k=k, n_centroids=8, n_probe=2).select("vec_id")
-    brute = cosine_topk(emb, query_id=0, k=k).select("vec_id")
-    return (
-        ivf.join(brute, "vec_id")
-        .agg(F.count(F.lit(1)).alias("o"))
-        .select(
-            F.lit(k).cast("int").alias("k"),
-            F.lit(8).cast("int").alias("n_centroids"),
-            F.lit(2).cast("int").alias("n_probe"),
-            F.col("o").cast("int").alias("overlap"),
-            F.round(F.col("o") / F.lit(float(k)), 6).cast("double").alias("recall_at_k"),
-        )
-    )
+    ivf = ann_topk_ivf(emb, query_id=0, k=k, n_centroids=8, n_probe=2)
+    return _recall_summary(ivf, emb, k, n_centroids=8, n_probe=2)
 
 
 def _q_schema_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-driven extraction (E22): learn the article schema template,
     broadcast it as config, apply per page inside a pandas UDF."""
-    apply_sql_conf(spark)
     from pyspark.sql import types as T
 
     from riptide_spark.functions.schema_learn import (
@@ -807,7 +769,6 @@ def _q_schema_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_strategy_composition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strategy composition (§2.11): best-of {article, dom, css} per page
     inside the Arrow UDF — winner strategy + confidence per url."""
-    apply_sql_conf(spark)
     from pyspark.sql import types as T
 
     pages = _pages_from_documents(spark, sf_dir)
@@ -868,7 +829,6 @@ def _q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operator-backed override of the SQL rendering: same values, but the
     md5-per-word fingerprint scan is checkpointed once instead of being
     recomputed for the band explode and both verify join sides."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import simhash_near_pairs
 
     return simhash_near_pairs(_dup_corpus(spark, sf_dir), materialize=True)
@@ -878,7 +838,6 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH band-bucket candidate pairs via the DataFrame operator (one
     checkpointed shingle+signature scan — the SQL rendering recomputes the
     scan once per self-join side, ~5× the wall at sf0.1)."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import minhash_candidate_pairs
 
     return minhash_candidate_pairs(_dup_corpus(spark, sf_dir), materialize=True)
@@ -888,7 +847,6 @@ def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard verification of MinHash-LSH candidates via the
     DataFrame operator (one checkpointed shingle+signature scan — the SQL
     rendering recomputes the scan once per join side)."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import ngram_jaccard_pairs
 
     return ngram_jaccard_pairs(_dup_corpus(spark, sf_dir))
@@ -902,7 +860,6 @@ def _q_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation with pointer jumping, O(log diameter) rounds.
     ``materialize=True`` checkpoints the band buckets so the MinHash
     cascade is computed once, not once per self-join side."""
-    apply_sql_conf(spark)
     from riptide_spark.operators.dedup import (
         connected_components,
         minhash_candidate_pairs,
@@ -925,7 +882,6 @@ def _q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``plans/curation.curation_verdicts`` (also the sf1 scale-dial path,
     ``bench.py --scale-dial``); the composition itself is oracled by
     ``udf_oracle_corpus_curation``."""
-    apply_sql_conf(spark)
     from riptide_spark.plans.curation import curation_verdicts
 
     return curation_verdicts(_dup_corpus(spark, sf_dir))
@@ -1000,7 +956,18 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     out["strategy_composition"] = _q_strategy_composition
     out["dedup_connected_components"] = _q_dedup_cc
     out["native_dom_extraction"] = _q_native_dom
-    return out
+    return {name: _with_sql_conf(fn) for name, fn in out.items()}
+
+
+def _with_sql_conf(fn: Callable[[SparkSession, str], DataFrame]):
+    """``fn`` run on a session with ``session.SQL_CONF`` applied first."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        apply_sql_conf(spark)
+        return fn(spark, sf_dir)
+
+    return run
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

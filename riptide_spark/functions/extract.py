@@ -37,6 +37,9 @@ from ..html.urls import parse_ok, resolve_url
 from .langid import detect_language_statistical
 
 MAX_CONTENT_SIZE = 20 * 1024 * 1024  # bytes; common_validation.rs:79
+# P3's message, as Python %-format and Spark format_string both read it
+# (common_validation.rs:81-85).
+CONTENT_SIZE_ERROR = "Content size %d exceeds maximum %d"
 
 ARTICLE_SELECTORS = (
     "article",
@@ -76,8 +79,9 @@ def validate_input(html: str, url: str) -> None:
     if not parse_ok(url):
         raise ExtractionInvalid(f"Invalid URL format: {url!r}")
     validate_html_structure(html)
-    if len(html.encode("utf-8", errors="replace")) > MAX_CONTENT_SIZE:
-        raise ExtractionInvalid("Content size exceeds maximum")
+    size = len(html.encode("utf-8", errors="replace"))
+    if size > MAX_CONTENT_SIZE:
+        raise ExtractionInvalid(CONTENT_SIZE_ERROR % (size, MAX_CONTENT_SIZE))
 
 
 def validate_html_structure(html: str) -> None:

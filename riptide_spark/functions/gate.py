@@ -4,8 +4,8 @@ Semantics from the reference:
 
 * feature extraction: ``/root/reference/crates/riptide-api/src/pipeline.rs:769-841``
 * score:              ``/root/reference/crates/riptide-reliability/src/gate.rs:83-137``
-* decide:             ``gate.rs:233-246`` (hi=0.7 / lo=0.3 defaults from
-  ``crates/riptide-api/src/context.rs:402-409``)
+* decide:             ``gate.rs:233-246`` (thresholds :data:`GATE_HI` /
+  :data:`GATE_LO`, the defaults of ``crates/riptide-api/src/context.rs:402-409``)
 * PDF bypass:         ``gate.rs:165-180`` + content sniff
   ``crates/riptide-api/src/pipeline.rs:286-329``
 
@@ -150,11 +150,11 @@ def score(features: GateFeatures) -> float:
     return _clamp(total, 0.0, 1.0)
 
 
-def decide(features: GateFeatures, hi: float = GATE_HI, lo: float = GATE_LO) -> str:
+def decide(features: GateFeatures) -> str:
     content_score = score(features)
-    if content_score >= hi:
+    if content_score >= GATE_HI:
         return "raw"
-    if content_score <= lo or features.spa_markers >= 3:
+    if content_score <= GATE_LO or features.spa_markers >= 3:
         return "headless"
     return "probes_first"
 
@@ -164,8 +164,8 @@ def is_pdf(url: str, html_prefix: bytes) -> bool:
     return url.lower().endswith(".pdf") or html_prefix.startswith(b"%PDF-")
 
 
-def route(html: str, url: str, hi: float = GATE_HI, lo: float = GATE_LO) -> str:
+def route(html: str, url: str) -> str:
     raw = html.encode("utf-8", errors="replace")
     if is_pdf(url, raw[:5]):
         return "pdf"
-    return decide(_features(html, raw, url), hi, lo)
+    return decide(_features(html, raw, url))

@@ -17,7 +17,6 @@ while ``urljoin`` drops it; ``resolve_url`` papers over that.
 
 from __future__ import annotations
 
-from functools import lru_cache
 from urllib.parse import urljoin, urlsplit
 
 MAX_URL_LEN = 2048  # bytes — common_validation.rs:34 (Rust str::len)
@@ -59,30 +58,6 @@ def parse_ok(url: str) -> bool:
     except ValueError:
         return False
     return bool(host) and _BAD_HOST_RE.search(host) is None
-
-
-_CACHE_INPUT_LIMIT = 1024  # don't let multi-KB tracking URLs bloat the cache
-
-
-def resolve_url(base: str, href: str) -> str | None:
-    """``Url::join``-faithful resolution; None when the crate would error.
-
-    Memoized per executor Python worker: pure function of (base, href), and
-    nav/footer/media hrefs repeat across every page of a host, so the cache
-    absorbs most urljoin/urlsplit work in the hot UDF path. Inputs over
-    1 KB bypass the cache — without the bypass, 64k entries of multi-KB
-    redirect/tracking URLs (common in crawl data) could hold hundreds of
-    MB per reused Python worker. With it: ≤ ~190 MB worst case
-    (64k × 3 × 1 KB), ~tens of MB realistically (typical URLs < 100 B).
-    """
-    if len(base) + len(href) > _CACHE_INPUT_LIMIT:
-        return _resolve_url_impl(base, href)
-    return _resolve_url_cached(base, href)
-
-
-@lru_cache(maxsize=65536)
-def _resolve_url_cached(base: str, href: str) -> str | None:
-    return _resolve_url_impl(base, href)
 
 
 _NEEDS_ENCODE_RE: dict[str, "object"] = {}
@@ -129,7 +104,8 @@ def _scheme_of(url: str) -> str | None:
     return m.group(1).lower() if m else None
 
 
-def _resolve_url_impl(base: str, href: str) -> str | None:
+def resolve_url(base: str, href: str) -> str | None:
+    """``Url::join``-faithful resolution; None when the crate would error."""
     # WHATWG: for special schemes (http/https) '\' is an alias of '/' both
     # in relative references and in paths — Url::join("p\\q") serializes
     # "p/q". Applied before urljoin so relative resolution also sees it.

@@ -12,9 +12,15 @@ call per document — but the batch crosses the JVM↔Python boundary once per
 Routing happens in the same pass: a row whose mode is null is decoded once,
 routed by the adaptive gate (``functions/gate.py``) and extracted with the
 mode :data:`MODE_FOR_ROUTE` maps its route to; the route comes back as the
-``content_mode`` field. A non-null mode forces that mode and is reported as
-given (the pipeline forces ``'oversize'`` for blanked oversized rows; tests
-and the golden-fixture query force explicit modes).
+``content_mode`` field. A non-null mode forces one of :data:`MODES` and is
+reported as given: ``article``, ``full`` and ``metadata`` (the WASM
+contract's modes), ``dom`` and ``probes_first`` (the native ladder, and the
+probe that escalates to it), ``pdf``, ``skip`` (raw text passthrough) and
+``oversize`` (the pipeline forces it on rows its size guard blanked). Any
+other mode, ``custom`` included (the UDF has no selector column;
+``operators/css_udf.py`` is the selector path), is an error row. A payload
+over the 20 MB cap is an ``oversize`` row whatever its mode, before it is
+decoded.
 
 Error isolation: a bad row never kills the task (at 10^12 documents, row
 failures are certain) — failures land in the ``error`` column with null
@@ -36,6 +42,8 @@ from pyspark.sql import functions as F
 
 from ..functions import chunking
 from ..functions.extract import (
+    CONTENT_SIZE_ERROR,
+    MAX_CONTENT_SIZE,
     ExtractionInvalid,
     detect_language,
     extract_categories,
@@ -66,8 +74,18 @@ MODE_FOR_ROUTE = {
     "pdf": "pdf",
 }
 
+MODES = frozenset({*MODE_FOR_ROUTE.values(), "full", "metadata", "skip", "oversize"})
+
 _FIELDS = EXTRACTED_STRUCT.fieldNames()
 _EMPTY = {**dict.fromkeys(_FIELDS), "escalated": False}
+
+
+def _payload_bytes(html) -> int:
+    if html is None:
+        return 0
+    if isinstance(html, str):
+        return len(html.encode("utf-8", errors="replace"))
+    return len(html)
 
 
 def _decode_lossy(html) -> str:
@@ -167,15 +185,17 @@ def _dom_heuristic_doc(text: str, url: str, root=None) -> dict:
 def _page_row(html, text: str | None, url: str, mode: str) -> dict:
     """The row of one page in one mode; ``text`` is the page already
     decoded, or None."""
+    if mode not in MODES:
+        raise ExtractionInvalid(f"Unknown extraction mode: {mode}")
+    if mode == "oversize":
+        # P3 (common_validation.rs:81-85). A row blanked by the pipeline's
+        # guard reaches here empty; the pipeline writes its true size.
+        raise ExtractionInvalid(CONTENT_SIZE_ERROR % (_payload_bytes(html), MAX_CONTENT_SIZE))
     if mode == "pdf":
         # A str-typed html column is re-encoded; bytes() would raise.
         if isinstance(html, str):
             return _pdf_row(html.encode("utf-8", "surrogateescape"))
         return _pdf_row(bytes(html) if html is not None else b"")
-    if mode == "oversize":
-        # Blanked by the pipeline's 20 MB guard, which writes the message
-        # with the true size (common_validation.rs:81-85).
-        return {**_EMPTY, "error": "invalid-html: Content size exceeds maximum"}
     if text is None:
         text = _decode_lossy(html)
     if mode == "skip":
@@ -223,13 +243,16 @@ def _page_row(html, text: str | None, url: str, mode: str) -> dict:
 def _extract_one(html, url: str, mode: str | None = None) -> dict:
     """The one function from a page to an ``EXTRACTED_STRUCT`` row.
 
-    A null ``mode`` decodes the page once, routes it with the gate and
-    extracts it with :data:`MODE_FOR_ROUTE` of its route; any other value
-    ('article', 'dom', 'probes_first', 'metadata', 'full', 'pdf', 'skip',
-    'oversize') forces that mode. ``content_mode`` is the route, or the
-    forced mode. A failing row becomes an error row with null fields."""
+    A payload over the 20 MB cap is an ``oversize`` error row, whatever
+    ``mode`` says. Otherwise a null ``mode`` decodes the page once, routes
+    it with the gate and extracts it with :data:`MODE_FOR_ROUTE` of its
+    route; any other value forces that mode (see :data:`MODES`).
+    ``content_mode`` is the route, or the forced mode. A failing row
+    becomes an error row with null fields."""
     text = None
-    if mode is None:
+    if _payload_bytes(html) > MAX_CONTENT_SIZE:
+        mode = content_mode = "oversize"
+    elif mode is None:
         text = _decode_lossy(html)
         content_mode = route(text, url or "")
         mode = MODE_FOR_ROUTE[content_mode]

@@ -38,6 +38,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.extract import CONTENT_SIZE_ERROR
+from ..functions.extract import MAX_CONTENT_SIZE as MAX_CONTENT_BYTES
 from ..operators.extract_udf import extract_udf
 from ..operators.metrics import partition_metrics
 from ..operators.partitioning import (
@@ -47,8 +49,6 @@ from ..operators.partitioning import (
 )
 from ..schema import OUTPUT_COLUMNS
 from ..sources.catalog import TableIO
-
-MAX_CONTENT_BYTES = 20 * 1024 * 1024  # P3, common_validation.rs:79
 
 
 @dataclass
@@ -73,8 +73,8 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
     # (reference records a per-URL error envelope, pipeline.rs:525-557).
     # Their html is blanked *before* the shuffle so the 20 MB+ payload
     # never rides the wire or crosses into Python; the UDF is forced to
-    # mode 'oversize' and the reference's InvalidHtml message is written
-    # below with the original size (common_validation.rs:81-85).
+    # mode 'oversize' and the error is written below with the true size,
+    # so the row is the one ``_extract_one`` gives the whole page.
     df = df.withColumn("_oversize_bytes",
                        F.when(F.octet_length("html") > MAX_CONTENT_BYTES,
                               F.octet_length("html")))
@@ -98,12 +98,11 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
     df = df.withColumn("ex", extract_udf(F.col("html"), F.col("url"), mode))
 
     cols = {c: F.col(f"ex.{c}") for c in OUTPUT_COLUMNS[1:]}
-    # The UDF saw only blanked html; write the reference's exact message
-    # with the true size.
+    # The UDF saw only blanked html; write P3's message with the true size.
     cols["error"] = F.when(
         F.col("_oversize_bytes").isNotNull(),
         F.format_string(
-            "invalid-html: Content size %d exceeds maximum %d",
+            f"invalid-html: {CONTENT_SIZE_ERROR}",
             F.col("_oversize_bytes"),
             F.lit(MAX_CONTENT_BYTES),
         ),

@@ -63,7 +63,7 @@ def test_decide_spa_headless():
         spa_markers=3,
         domain_prior=0.5,
     )
-    assert decide(features, 0.7, 0.3) == "headless"
+    assert decide(features) == "headless"
 
 
 def test_decide_thresholds():

@@ -2,15 +2,19 @@
 ``functions.gate.route`` of its page, through the batch job and through the
 stream (which runs the batch job on each micro-batch), on a corpus that
 covers every archetype, the rows with invalid UTF-8 and one oversized row,
-which both paths turn into the same ``oversize`` error row. Every other
-batch row is ``_extract_one`` of its page, called outside Spark."""
+which both paths turn into the same ``oversize`` error row. Every batch
+row, the oversized one included, is ``_extract_one`` of its page, called
+outside Spark."""
 
 from __future__ import annotations
+
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from riptide_spark.functions.gate import route
+from riptide_spark.operators import extract_udf
 from riptide_spark.operators.extract_udf import _extract_one
 from riptide_spark.plans.pipeline import (
     MAX_CONTENT_BYTES,
@@ -84,15 +88,46 @@ def test_batch_job_content_mode_is_the_gate_route(corpus, batch_rows):
 
 def test_batch_rows_are_extract_one_of_the_page(corpus, batch_rows):
     """Routing, extraction and the row mapping are one function: every
-    batch row but the oversize one (forced by the pipeline) equals
-    ``_extract_one`` of its page with no mode, ``content_mode`` included."""
+    batch row, the oversize one included, equals ``_extract_one`` of its
+    page with no mode, ``content_mode`` and ``error`` included."""
     pages, oversize = corpus
     assert set(batch_rows) == {p["url"] for p in pages} | {oversize["url"]}
     fields = [c for c in OUTPUT_COLUMNS if c not in ("url", "extract_ms")]
-    for page in pages:
+    for page in pages + [oversize]:
         want = _extract_one(page["html"], page["url"])
         row = batch_rows[page["url"]]
         assert {f: row[f] for f in fields} == {f: want[f] for f in fields}, page["url"]
+
+
+@pytest.mark.parametrize("mode", [None, "article", "dom", "pdf", "skip"])
+def test_oversize_payload_is_an_oversize_row_without_decoding(corpus, mode):
+    """The 20 MB rule comes first: whatever the mode, a payload over the
+    cap is the oversize row with its true size, in far less time than a
+    decode or a route of 20 MB would take."""
+    page = corpus[0][0]
+    html = page["html"] + b" " * (MAX_CONTENT_BYTES + 1 - len(page["html"]))
+    started = time.perf_counter()
+    row = _extract_one(html, page["url"], mode)
+    assert time.perf_counter() - started < 0.05
+    assert row["content_mode"] == "oversize"
+    assert row["error"] == (
+        f"invalid-html: Content size {MAX_CONTENT_BYTES + 1} exceeds maximum {MAX_CONTENT_BYTES}"
+    )
+    assert row["extracted_text"] is None
+
+
+@pytest.mark.parametrize("mode", ["custom", "bogus", ""])
+def test_unknown_forced_mode_is_an_error_row_before_decoding(corpus, monkeypatch, mode):
+    def never(*args, **kwargs):
+        raise AssertionError("page decoded")
+
+    monkeypatch.setattr(extract_udf, "_decode_lossy", never)
+    monkeypatch.setattr(extract_udf.dom, "parse", never)
+    page = corpus[0][0]
+    row = _extract_one(page["html"], page["url"], mode)
+    assert row["error"] == f"invalid-html: Unknown extraction mode: {mode}"
+    assert row["content_mode"] == mode
+    assert row["extracted_text"] is None
 
 
 def test_streaming_plan_content_mode_is_the_gate_route(spark, corpus, tmp_path):

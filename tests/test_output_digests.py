@@ -5,9 +5,10 @@ the invalid-UTF-8 rows) plus four hand-made rows: one over 20 MB, one with
 null html, one with empty html and one with garbage html. Each row is
 extracted by ``_extract_one(html, url)`` and by the ``extraction_plan``
 job, and every field but ``extract_ms`` is hashed, once per url and once
-per field. A refactor of the parser or the extractors must leave the
-digests unchanged; ``python scripts/output_digests.py --write`` regenerates
-them, and every regeneration is a reviewed change.
+per field; the two must agree on every field the table keeps. A refactor
+of the parser or the extractors must leave the digests unchanged;
+``python scripts/output_digests.py --write`` regenerates them, and every
+regeneration is a reviewed change.
 """
 
 from __future__ import annotations
@@ -109,6 +110,11 @@ def one_rows(pages):
     return extract_one_rows(pages)
 
 
+@pytest.fixture(scope="module")
+def plan_rows(spark, pages):
+    return extraction_plan_rows(spark, pages)
+
+
 def test_corpus_covers_every_archetype_and_edge_row(pages):
     assert {p.get("archetype") for p in pages} == {a for a, _ in ARCHETYPES} | {None}
     assert sum(b"\xff\xfe trailing garbage" in (p["html"] or b"") for p in pages) >= 5
@@ -121,9 +127,22 @@ def test_extract_one_matches_digests(expected, one_rows):
     assert mismatches(expected["extract_one"], digests(one_rows)) == []
 
 
-def test_extraction_plan_matches_digests(spark, expected, pages):
-    rows = extraction_plan_rows(spark, pages)
-    assert mismatches(expected["extraction_plan"], digests(rows)) == []
+def test_extraction_plan_matches_digests(expected, plan_rows):
+    assert mismatches(expected["extraction_plan"], digests(plan_rows)) == []
+
+
+def test_extract_one_is_the_table_row_of_every_page(one_rows, plan_rows):
+    """Every field the two halves share (all but the table's ``markdown``)
+    is equal on every row, the oversize and null-html rows included."""
+    assert one_rows.keys() == plan_rows.keys()
+    first = next(iter(one_rows))
+    shared = sorted(one_rows[first].keys() & plan_rows[first].keys())
+    assert one_rows[first].keys() - set(shared) == {"markdown"}
+    differ = [
+        f"{url}: {f}" for url in sorted(one_rows) for f in shared
+        if one_rows[url][f] != plan_rows[url][f]
+    ]
+    assert differ == []
 
 
 def test_one_flipped_byte_names_its_url_and_field(expected, one_rows):
